@@ -11,6 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   runMain graft.TimeProbe <sfDir> q133_vector_store,q144_asof_search [reps]
   */
 object TimeProbe {
+
+  /** Seconds covered by the union of `(start, end)` nanosecond intervals.
+    * Jobs overlap when families run concurrently ([[graft.operators
+    * .FamilyPar]]), so the driver gap is wall minus this union — wall
+    * minus the SUM of job durations goes negative. */
+  private[graft] def unionSec(intervals: Seq[(Long, Long)]): Double = {
+    var covered = 0L
+    var reach = Long.MinValue
+    intervals.sortBy(_._1).foreach { case (s, e) =>
+      if (e > reach) { covered += e - math.max(s, reach); reach = e }
+    }
+    covered / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: TimeProbe <sfDir> <q1,q2,...> [reps]")
     val dir = args(0)
@@ -31,8 +45,8 @@ object TimeProbe {
     // Job accounting: splits a query's wall time into "inside Spark jobs"
     // vs driver-side gaps (planning, metastore DDL, filesystem ops) — the
     // first fork in the optimization decision tree.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
-    val jobNanos = new java.util.concurrent.atomic.AtomicLong(0)
+    val jobIntervals =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val jobStarts =
       new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     spark.sparkContext.addSparkListener(
@@ -44,8 +58,7 @@ object TimeProbe {
         override def onJobEnd(
             e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val s = jobStarts.remove(e.jobId)
-          if (s != 0L) { jobCount.incrementAndGet()
-            jobNanos.addAndGet(System.nanoTime() - s); () }
+          if (s != 0L) { jobIntervals.add((s, System.nanoTime())); () }
         }
       })
     def sweep(): Unit = {
@@ -67,7 +80,7 @@ object TimeProbe {
       val q = SparkEntry.queries(name)
       val times = (0 until reps).map { rep =>
         Phases.drain()
-        jobCount.set(0); jobNanos.set(0)
+        jobIntervals.clear()
         val t0 = System.nanoTime()
         val ok = try { run(q(spark, dir)); true }
         catch { case e: Throwable =>
@@ -75,9 +88,11 @@ object TimeProbe {
         val dt = (System.nanoTime() - t0) / 1e9
         // listener events are async; give the bus a beat before reading
         Thread.sleep(150)
+        val jobs = jobIntervals.toArray(Array.empty[(Long, Long)]).toSeq
+        val jobSec = jobs.map { case (s, e) => e - s }.sum / 1e9
         System.err.println(f"TIMEPROBE jobs $name rep=$rep wall=$dt%.2f " +
-          f"njobs=${jobCount.get()} jobSec=${jobNanos.get() / 1e9}%.2f " +
-          f"gapSec=${dt - jobNanos.get() / 1e9}%.2f")
+          f"njobs=${jobs.size} jobSec=$jobSec%.2f " +
+          f"gapSec=${dt - unionSec(jobs)}%.2f")
         sweep()
         val ph = Phases.drain()
         if (ph.nonEmpty) System.err.println(

@@ -62,7 +62,7 @@ object IncrementalComponents {
       // crash-window resolution; the repmap partitions on its own `v`
       // version column and is pruned by version, not folded
       if (st.fieldNames.contains("ds"))
-        StoreMaintenance.consistentPathOver(spark, path, df)
+        StoreMaintenance.consistentScan(spark, PathLoc(path), Some(df))
       else df
     } else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
@@ -179,7 +179,7 @@ object IncrementalComponents {
     *   1. the tombstoned docs' signature rows are dropped (they can never
     *      pair again — [[IncrementalDedup.deleteSignatures]]);
     *   2. every edge touching a tombstone is dropped (one
-    *      marker-committed [[StoreMaintenance.rewritePath]]);
+    *      marker-committed [[StoreMaintenance.rewrite]]);
     *   3. components are recomputed over the REMAINING edges — the same
     *      closed-form propagation the daily step runs, O(|edges|);
     *   4. the label store is rewritten from that map, and the repmap
@@ -203,7 +203,7 @@ object IncrementalComponents {
         "without the edges, deletion requires re-clustering the corpus")
     IncrementalDedup.deleteSignatures(spark, sigStore, tombstones, gen)
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.DeleteTarget(edgesPath, path = true,
+      IncrementalStore.DeleteTarget(PathLoc(edgesPath),
         transform = df => StoreMaintenance.tombstone(tombstones, "a_id")(
           StoreMaintenance.tombstone(tombstones, "b_id")(df)))))
     val remaining = readOrEmpty(spark, edgesPath,
@@ -213,7 +213,7 @@ object IncrementalComponents {
       fs.delete(new org.apache.hadoop.fs.Path(labelsPath), true)
     else {
       val newmap = Components.connected(remaining)
-      StoreMaintenance.rewritePath(spark, labelsPath, gen,
+      StoreMaintenance.rewrite(spark, PathLoc(labelsPath), gen,
         transform = _ => newmap
           .select(col("id"), col("component").as("rep0")))
       Components.freeLocalCheckpoint(newmap)
@@ -231,8 +231,8 @@ object IncrementalComponents {
     * Bounded filesystem metadata. */
   def dropDate(spark: SparkSession, sigStore: String, labelsPath: String,
       repmapPath: String, edgesPath: String, date: String): Unit = {
-    IncrementalStore.dropDatePath(spark,
-      Seq(sigStore, labelsPath, edgesPath), date)
+    IncrementalStore.dropDate(spark,
+      Seq(sigStore, labelsPath, edgesPath).map(PathLoc), date)
     val v = new org.apache.hadoop.fs.Path(repmapPath, s"v=$date")
     v.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(v, true)
     ()
@@ -256,7 +256,7 @@ object IncrementalComponents {
     // hold an append lease on the label store for the whole step — a
     // compactLabels fold that starts mid-step backs off against it
     // (appendSignatures below guards the signature store the same way)
-    StoreMaintenance.withAppendLease(spark, labelsPath) {
+    StoreMaintenance.withAppendLease(spark, PathLoc(labelsPath)) {
       processDateLocked(spark, newDocs, allDocs, sigStore, labelsPath,
         repmapPath, date, threshold, idCol, edgesPath)
     }

@@ -39,7 +39,7 @@ object IncrementalDedup {
 
   /** All signatures accumulated so far. */
   def loadSignatures(spark: SparkSession, store: String): DataFrame =
-    IncrementalStore.consistentScanPath(spark, store)
+    StoreMaintenance.consistentScan(spark, PathLoc(store))
 
   /** Banded candidate pairs between `newSigs` and `allSigs` (which may
     * include newSigs itself), scored by signature-estimated Jaccard.
@@ -131,7 +131,7 @@ object IncrementalDedup {
       threshold: Double = 0.5, k: Int = 32,
       upTo: Option[String] = None): DataFrame = {
     val store = IncrementalStore.asOf(
-      IncrementalStore.consistentScan(spark, table), upTo)
+      StoreMaintenance.consistentScan(spark, TableLoc(table)), upTo)
     val newDay = store.filter(col("ds") === date)
     scoreCandidates(bandCandidates(newDay, store), k, threshold)
   }
@@ -147,16 +147,15 @@ object IncrementalDedup {
   def deleteDocs(spark: SparkSession, table: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.keyTarget(table, "id", tombstones, large)))
+      IncrementalStore.keyTarget(TableLoc(table), "id", tombstones, large)))
 
   /** [[deleteDocs]] for the PATH-based signature store
     * ([[appendSignatures]]' layout) — same contract via
-    * [[StoreMaintenance.rewritePath]]. */
+    * [[StoreMaintenance.rewrite]] over a [[PathLoc]]. */
   def deleteSignatures(spark: SparkSession, store: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.keyTarget(store, "id", tombstones, large,
-        path = true)))
+      IncrementalStore.keyTarget(PathLoc(store), "id", tombstones, large)))
 
   /** One incremental step: signatures for `newDocs` are computed once,
     * persisted under `date`, and paired against everything in the store

@@ -53,9 +53,9 @@ object IncrementalLangModel {
   /** The accumulated model: (cand, tri, c) trigram counts and
     * (cand, ndl) priors, summed over every ingested date. */
   def model(spark: SparkSession, store: String): (DataFrame, DataFrame) = (
-    IncrementalStore.consistentScanPath(spark, s"$store/tri")
+    StoreMaintenance.consistentScan(spark, PathLoc(s"$store/tri"))
       .groupBy(col("cand"), col("tri")).agg(sum(col("c")).as("c")),
-    IncrementalStore.consistentScanPath(spark, s"$store/prior")
+    StoreMaintenance.consistentScan(spark, PathLoc(s"$store/prior"))
       .groupBy(col("cand")).agg(sum(col("ndl")).as("ndl")))
 
   /** DELETION PROPAGATION = EXACT UNLEARNING for the counting model: NB
@@ -67,7 +67,7 @@ object IncrementalLangModel {
     * [[IncrementalVectors.refitQuantizer]]'s contract). The pass
     * recomputes the deleted docs' trigram counts and priors with the
     * exact append-side expressions and subtracts them in two
-    * marker-committed [[StoreMaintenance.rewritePath]] folds; rows that
+    * marker-committed [[StoreMaintenance.rewrite]] folds; rows that
     * reach zero are dropped, so the derived vocabulary V and the
     * candidate-language set shrink exactly as a from-scratch train over
     * the survivors would (oracle-gated as q166). Only tombstones inside
@@ -88,14 +88,14 @@ object IncrementalLangModel {
     val delPrior = del.groupBy(col(langCol).as("cand"))
       .agg(count(lit(1)).as("dndl"))
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.DeleteTarget(s"$store/tri", path = true,
+      IncrementalStore.DeleteTarget(PathLoc(s"$store/tri"),
         transform = df => df
           .groupBy(col("cand"), col("tri")).agg(sum(col("c")).as("c"))
           .join(delTri, Seq("cand", "tri"), "left")
           .select(col("cand"), col("tri"),
             (col("c") - coalesce(col("dc"), lit(0L))).as("c"))
           .filter(col("c") > 0)),
-      IncrementalStore.DeleteTarget(s"$store/prior", path = true,
+      IncrementalStore.DeleteTarget(PathLoc(s"$store/prior"),
         transform = df => df
           .groupBy(col("cand")).agg(sum(col("ndl")).as("ndl"))
           .join(delPrior, Seq("cand"), "left")

@@ -36,7 +36,7 @@ object IncrementalPostings {
     * [[Search.postings]] over the union of every ingested date. */
   def report(spark: SparkSession, store: String, k: Int = 3): DataFrame =
     Search.postingsFromTf(
-      IncrementalStore.consistentScanPath(spark, store)
+      StoreMaintenance.consistentScan(spark, PathLoc(store))
         .groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")),
       k)
 
@@ -67,7 +67,7 @@ object IncrementalPostings {
     * contract), never a hashpartitioning of the store. */
   def reportBucketed(spark: SparkSession, table: String, k: Int = 3): DataFrame =
     Search.postingsFromTf(
-      IncrementalStore.consistentScan(spark, table)
+      StoreMaintenance.consistentScan(spark, TableLoc(table))
         .groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")),
       k)
 
@@ -114,7 +114,7 @@ object IncrementalPostings {
     * [[normsMerge]] — the retention pass for `t_dl`, and the one-off
     * cleanup path for pre-`dl > 0` stores (see the merge's scaladoc). */
   def compactNorms(spark: SparkSession, table: String, upTo: String): Unit =
-    StoreMaintenance.compact(spark, s"${table}_dl", upTo, normsMerge)
+    StoreMaintenance.compact(spark, TableLoc(s"${table}_dl"), upTo, normsMerge)
 
   /** DELETION PROPAGATION (tombstone pass) for the lexical store family —
     * the opt-out/takedown operator: physically remove the tombstoned
@@ -136,9 +136,9 @@ object IncrementalPostings {
   def deleteDocs(spark: SparkSession, table: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.keyTarget(table, "doc_id", tombstones, large),
-      IncrementalStore.keyTarget(s"${table}_dl", "doc_id", tombstones,
-        large, optional = true)))
+      IncrementalStore.keyTarget(TableLoc(table), "doc_id", tombstones, large),
+      IncrementalStore.keyTarget(TableLoc(s"${table}_dl"), "doc_id",
+        tombstones, large, optional = true)))
 
   /** BM25 ranked retrieval SERVED from the accumulated store — the
     * lexical twin of [[IncrementalVectors.adcSearch]]: query-term tf
@@ -153,10 +153,10 @@ object IncrementalPostings {
       queryTerms: Seq[String], k: Int = 10, k1: Double = 1.2,
       b: Double = 0.75, allowed: Option[DataFrame] = None): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
-    val tf = IncrementalStore.consistentScan(spark, table)
+    val tf = StoreMaintenance.consistentScan(spark, TableLoc(table))
       .filter(col("term").isInCollection(queryTerms))
       .groupBy("doc_id", "term").agg(sum(col("tf")).as("tf"))
-    val dl = IncrementalStore.consistentScan(spark, s"${table}_dl")
+    val dl = StoreMaintenance.consistentScan(spark, TableLoc(s"${table}_dl"))
       .groupBy("doc_id").agg(sum(col("dl")).as("dl"))
     // `allowed` = filtered retrieval with CORPUS-wide statistics — see
     // [[Search.bm25Score]]'s contract note

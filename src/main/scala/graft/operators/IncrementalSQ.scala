@@ -86,7 +86,7 @@ object IncrementalSQ {
 
   /** Drop one ingestion date's partition — the re-run/retry guard. */
   def dropDate(spark: SparkSession, table: String, date: String): Unit =
-    IncrementalStore.dropDate(spark, Seq(s"${table}_codes"), date)
+    IncrementalStore.dropDate(spark, Seq(TableLoc(s"${table}_codes")), date)
 
   /** Asymmetric top-k serve from the accumulated store: [[SQ.search]]'s
     * output contract (qid, rank, cid, cosine) with the reconstruction fed
@@ -100,7 +100,8 @@ object IncrementalSQ {
     val grid = spark.table(s"${table}_grid")
     val codes = IncrementalStore.allowFilter(
         IncrementalStore.asOf(
-          IncrementalStore.consistentScan(spark, s"${table}_codes"), upTo),
+          StoreMaintenance.consistentScan(spark,
+            TableLoc(s"${table}_codes")), upTo),
         allowed)
       .select(col("id"), col("dim"), col("code"))
     SQ.search(queries, SQ.reconstruct(codes, grid), kNeighbors, idCol, vecCol)
@@ -116,7 +117,8 @@ object IncrementalSQ {
   def deleteIds(spark: SparkSession, table: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-        IncrementalStore.keyTarget(s"${table}_codes", "id", tombstones, large)),
+        IncrementalStore.keyTarget(TableLoc(s"${table}_codes"), "id",
+          tombstones, large)),
       guard = requireNoPendingRefit(_, table, "delete"))
 
   /** Refit the grid on `fitDf` and MIGRATE the code store — the "act" to
@@ -172,7 +174,7 @@ object IncrementalSQ {
       .write.mode("overwrite").saveAsTable(s"${table}_grid")
     val oldGrid = spark.table(prevT).drop("gen")
     val newGrid = spark.table(s"${table}_grid")
-    try StoreMaintenance.rewrite(spark, s"${table}_codes", gen,
+    try StoreMaintenance.rewrite(spark, TableLoc(s"${table}_codes"), gen,
       transform = df => {
         val xh = SQ.reconstruct(df.select(col("id"), col("dim"),
           col("code")), oldGrid)
@@ -197,7 +199,8 @@ object IncrementalSQ {
       // still present ⇒ same-gen resume). Any mid-fold failure keeps the
       // snapshot — resume is mandatory.
       case e: Throwable =>
-        if (StoreMaintenance.rewriteNeverStarted(spark, s"${table}_codes",
+        if (StoreMaintenance.rewriteNeverStarted(spark,
+            TableLoc(s"${table}_codes"),
             gen)) {
           spark.table(prevT).drop("gen")
             .write.mode("overwrite").saveAsTable(s"${table}_grid")

@@ -253,7 +253,7 @@ object IncrementalSemantic {
     requireNoPendingReband(spark, table, "serve")
     val (_, _, _, levels) = cfg(spark, table)
     val bands = IncrementalStore.asOf(
-      IncrementalStore.consistentScan(spark, s"${table}_bands"), upTo)
+      StoreMaintenance.consistentScan(spark, TableLoc(s"${table}_bands")), upTo)
     val fresh = bands.filter(col("ds") === date)
     val joinCond = keyCols(levels)
       .map(k => col(s"x.$k") === col(s"y.$k"))
@@ -285,7 +285,8 @@ object IncrementalSemantic {
       threshold: Double = 0.9, upTo: Option[String] = None): DataFrame = {
     val candidates = candidatePairs(spark, table, date, upTo)
     val vecs = IncrementalStore.asOf(
-        IncrementalStore.consistentScan(spark, s"${table}_vecs"), upTo)
+        StoreMaintenance.consistentScan(spark,
+          TableLoc(s"${table}_vecs")), upTo)
       .select(col("id"), col("e"), col("n"))
     candidates
       .join(vecs.select(col("id").as("a_id"), col("e").as("ae"),
@@ -301,7 +302,8 @@ object IncrementalSemantic {
   /** Drop one ingestion date's partitions — the re-run/retry guard. */
   def dropDate(spark: SparkSession, table: String, date: String): Unit =
     IncrementalStore.dropDate(spark,
-      Seq(s"${table}_bands", s"${table}_vecs", s"${table}_occ"), date)
+      Seq(s"${table}_bands", s"${table}_vecs", s"${table}_occ").map(TableLoc),
+      date)
 
   /** BANDING-MODEL DRIFT AUDIT — the q141 DETECT lens applied to the
     * frozen banding config: `horizonRows` at init is a capacity GUESS,
@@ -329,7 +331,8 @@ object IncrementalSemantic {
   def bandDriftPsiLevels(spark: SparkSession, table: String,
       initDate: String): DataFrame = {
     requireNoPendingReband(spark, table, "drift audit")
-    val counts = IncrementalStore.consistentScan(spark, s"${table}_occ")
+    val counts = StoreMaintenance.consistentScan(spark,
+        TableLoc(s"${table}_occ"))
       .groupBy(col("ds"), col("level"), col("band"), col("bh"))
       .agg(sum(col("n")).as("n"))
       .localCheckpoint() // bounded: dates × levels × observed combos
@@ -467,12 +470,13 @@ object IncrementalSemantic {
       .toDF("nPlanes", "r", "dim", "levels")
       .write.mode("overwrite").saveAsTable(s"${table}_cfg")
     try {
-      StoreMaintenance.rewrite(spark, s"${table}_bands", gen,
+      StoreMaintenance.rewrite(spark, TableLoc(s"${table}_bands"), gen,
         transform = _ =>
           // the old band rows are not inputs — the rewrite re-derives every
           // row from the vector table under the new config (band hashes are
           // not invertible, and unlike SQ codes nothing of value is lost)
-          bandRows(IncrementalStore.consistentScan(spark, s"${table}_vecs"),
+          bandRows(StoreMaintenance.consistentScan(spark,
+              TableLoc(s"${table}_vecs")),
             "id", "e", nPlanes, rNew, dim, levels))
       // the occupancy summary is derived state over the band rows — the
       // old-width counts are meaningless under the new config, so fold
@@ -483,9 +487,9 @@ object IncrementalSemantic {
       // the two rewrites resumes with the bands fold no-opping (label
       // committed) and this fold completing.
       if (spark.catalog.tableExists(s"${table}_occ"))
-        StoreMaintenance.rewrite(spark, s"${table}_occ", gen,
+        StoreMaintenance.rewrite(spark, TableLoc(s"${table}_occ"), gen,
           transform = _ => occFromBandRows(
-            IncrementalStore.consistentScan(spark, s"${table}_bands"),
+            StoreMaintenance.consistentScan(spark, TableLoc(s"${table}_bands")),
             levels, nPlanes / rNew))
     } catch {
       // abort before the fold's first durable effect (no sentinel AND no
@@ -494,7 +498,8 @@ object IncrementalSemantic {
       // resume. Any mid-fold (or post-completion) failure keeps the
       // snapshot; resume is mandatory.
       case e: Throwable =>
-        if (StoreMaintenance.rewriteNeverStarted(spark, s"${table}_bands",
+        if (StoreMaintenance.rewriteNeverStarted(spark,
+            TableLoc(s"${table}_bands"),
             gen)) {
           spark.table(prevT).drop("gen", "rNew")
             .write.mode("overwrite").saveAsTable(s"${table}_cfg")
@@ -546,7 +551,8 @@ object IncrementalSemantic {
       val gen = s"policy_$window"
       val prevT = s"${table}_cfg_prev"
       def currentRows: Long =
-        IncrementalStore.consistentScan(spark, s"${table}_vecs").count()
+        StoreMaintenance.consistentScan(spark,
+          TableLoc(s"${table}_vecs")).count()
       def baseline: Option[String] = {
         val parts = if (spark.catalog.tableExists(s"${table}_occ"))
           spark.sql(s"SHOW PARTITIONS ${table}_occ").collect()
@@ -633,7 +639,7 @@ object IncrementalSemantic {
     // date the migration's date list predates — and a concurrent
     // re-band/delete rewrite backs off the same way. Plus an exclusive
     // migrate lease on the NEW store (a sibling of its would-be
-    // warehouse path, the withAppendLeaseTable init-lease convention):
+    // warehouse path, the TableLoc.withInitLease convention):
     // two racing migrations into the same target would interleave their
     // per-date copies. All released on any in-process exit; a hard
     // crash leaves them to the standard dead-pid/stillness sweep.
@@ -647,7 +653,8 @@ object IncrementalSemantic {
       (srcLocs :+ newLease).foreach { l =>
         StoreMaintenance.acquireLease(spark, l); held ::= l
       }
-      val vecs = IncrementalStore.consistentScan(spark, s"${table}_vecs")
+      val vecs = StoreMaintenance.consistentScan(spark,
+        TableLoc(s"${table}_vecs"))
       // RESUMABLE: a crashed migration left the new config and some
       // fully-copied dates — re-init only a missing config, and REFUSE a
       // resume whose horizon would freeze a different model than the
@@ -717,15 +724,17 @@ object IncrementalSemantic {
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit = {
     val (nPlanes, r, _, levels) = cfg(spark, table)
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.keyTarget(s"${table}_bands", "id", tombstones, large),
-      IncrementalStore.keyTarget(s"${table}_vecs", "id", tombstones, large),
+      IncrementalStore.keyTarget(TableLoc(s"${table}_bands"), "id",
+        tombstones, large),
+      IncrementalStore.keyTarget(TableLoc(s"${table}_vecs"), "id",
+        tombstones, large),
       // the occupancy summary is derived state: the deleted ids' counts
       // must vanish with their band rows, so it folds into the same
       // generation recomputed from the POST-DELETE bands (targets run in
       // order — bands is already rewritten when this transform plans)
-      IncrementalStore.DeleteTarget(s"${table}_occ",
+      IncrementalStore.DeleteTarget(TableLoc(s"${table}_occ"),
         transform = _ => occFromBandRows(
-          IncrementalStore.consistentScan(spark, s"${table}_bands"),
+          StoreMaintenance.consistentScan(spark, TableLoc(s"${table}_bands")),
           levels, nPlanes / r),
         optional = true)),
       guard = requireNoPendingReband(_, table, "delete"))

@@ -40,7 +40,7 @@ object IncrementalSpans {
     * (`deletedDocs` — a takedown request has the document in hand): their
     * window-hash counts are recomputed with the same tokenizer/hash the
     * appends used and subtracted from the folded store in one
-    * marker-committed [[StoreMaintenance.rewritePath]]; rows that reach
+    * marker-committed [[StoreMaintenance.rewrite]]; rows that reach
     * zero are dropped. Counts are additive, so the store afterwards is
     * bit-equal to one built over the corpus minus the deleted docs —
     * including the case where a hash was duplicated ONLY via the deleted
@@ -51,7 +51,7 @@ object IncrementalSpans {
     val del = Corpus.spanGrams(deletedDocs, n, idCol, textCol)._2
       .groupBy(col("h")).agg(count(lit(1)).as("dcnt"))
     IncrementalStore.propagateDeletes(deletedDocs.sparkSession, gen, Seq(
-      IncrementalStore.DeleteTarget(store, path = true, transform = df => df
+      IncrementalStore.DeleteTarget(PathLoc(store), transform = df => df
         .groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
         .join(del, Seq("h"), "left")
         .select(col("h"),
@@ -62,7 +62,7 @@ object IncrementalSpans {
   /** Hashes duplicated ANYWHERE in the accumulated store (Σ cnt ≥ 2).
     * Corpus-sized — keep it distributed, never broadcast it. */
   def dupHashes(spark: SparkSession, store: String): DataFrame =
-    IncrementalStore.consistentScanPath(spark, store)
+    StoreMaintenance.consistentScan(spark, PathLoc(store))
       .groupBy(col("h")).agg(sum(col("cnt")).as("total"))
       .filter(col("total") >= 2)
       .select(col("h"))

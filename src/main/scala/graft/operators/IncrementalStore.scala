@@ -28,7 +28,10 @@ import org.apache.spark.sql.functions._
   *    partition first (the streaming duals call it per micro-batch).
   *  - **retention / rewrite / deletion**: [[StoreMaintenance.compact]],
   *    [[StoreMaintenance.rewrite]] and [[StoreMaintenance.tombstone]]
-  *    (and their `*Path` twins) — marker-committed, crash-resumable.
+  *    over either [[StoreLoc]] kind — marker-committed, crash-resumable.
+  *  - **serve-side read**: [[StoreMaintenance.consistentScan]] — a
+  *    crashed (or live) fold's half-committed window can never
+  *    double-read folded rows or mix generations.
   *
   * Appends hold the lease for exactly the write's duration; `guard`
   * runs INSIDE the lease (families use it for state checks that must
@@ -43,7 +46,7 @@ object IncrementalStore {
   def appendBucketed(df: DataFrame, table: String, date: String,
       bucketCols: Seq[String], nBuckets: Int = 8,
       guard: SparkSession => Unit = _ => ()): Unit =
-    StoreMaintenance.withAppendLeaseTable(df.sparkSession, table) {
+    StoreMaintenance.withAppendLease(df.sparkSession, TableLoc(table)) {
       guard(df.sparkSession)
       df.withColumn("ds", lit(date))
         .write.mode("append").partitionBy("ds")
@@ -60,7 +63,7 @@ object IncrementalStore {
     * contract ([[dropDate]]) as [[appendBucketed]]. */
   def appendTable(df: DataFrame, table: String, date: String,
       guard: SparkSession => Unit = _ => ()): Unit =
-    StoreMaintenance.withAppendLeaseTable(df.sparkSession, table) {
+    StoreMaintenance.withAppendLease(df.sparkSession, TableLoc(table)) {
       guard(df.sparkSession)
       df.withColumn("ds", lit(date))
         .write.mode("append").partitionBy("ds")
@@ -73,7 +76,7 @@ object IncrementalStore {
     * engine's marker semantics). */
   def appendPath(df: DataFrame, store: String, date: String,
       guard: SparkSession => Unit = _ => ()): Unit =
-    StoreMaintenance.withAppendLease(df.sparkSession, store) {
+    StoreMaintenance.withAppendLease(df.sparkSession, PathLoc(store)) {
       guard(df.sparkSession)
       df.withColumn("ds", lit(date))
         .write.mode("overwrite").partitionBy("ds")
@@ -88,58 +91,32 @@ object IncrementalStore {
       store.filter(!col("ds").startsWith("r_") &&
         regexp_replace(col("ds"), "^c_", "") <= d))
 
-  /** The serve-side TABLE scan: [[StoreMaintenance.consistentTable]] —
-    * a crashed (or live) fold's half-committed window can never
-    * double-read folded rows or mix generations. Every family's serve
-    * reads its tables through this. */
-  def consistentScan(spark: SparkSession, table: String): DataFrame =
-    StoreMaintenance.consistentTable(spark, table)
-
-  /** The PATH-store twin ([[StoreMaintenance.consistentPath]]) — the
-    * serve-side read for the plain-parquet `ds=` stores. */
-  def consistentScanPath(spark: SparkSession, store: String): DataFrame =
-    StoreMaintenance.consistentPath(spark, store)
-
-  /** Drop one ingestion date's partition from each existing table — the
-    * re-run/retry guard (bounded metadata DDL, no data motion). */
-  def dropDate(spark: SparkSession, tables: Seq[String], date: String): Unit =
-    tables.foreach { t =>
-      if (spark.catalog.tableExists(t))
-        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (ds='$date')")
-    }
-
-  /** [[dropDate]] for PATH stores: delete each store's `ds=<date>` dir
-    * (bounded filesystem metadata; absent dirs are a no-op). */
-  def dropDatePath(spark: SparkSession, stores: Seq[String],
-      date: String): Unit =
+  /** Drop one ingestion date's partition from each existing store — the
+    * re-run/retry guard (bounded metadata, no data motion). */
+  def dropDate(spark: SparkSession, stores: Seq[StoreLoc], date: String): Unit =
     stores.foreach { s =>
-      val p = new org.apache.hadoop.fs.Path(s, s"ds=$date")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
+      if (s.exists(spark)) s.dropPartition(spark, date)
     }
 
   /** One backing store a family's DELETION PROPAGATION must rewrite:
-    * the store name (table, or filesystem path when `path`), the row
-    * transform (usually a tombstone anti-join on the family's key
-    * column — [[keyTarget]]; the additive families pass their own
-    * count-subtract transforms), and whether the store may be absent
-    * (the postings family's optional norms table). */
-  final case class DeleteTarget(store: String,
-      transform: DataFrame => DataFrame,
-      path: Boolean = false, optional: Boolean = false)
+    * the store, the row transform (usually a tombstone anti-join on the
+    * family's key column — [[keyTarget]]; the additive families pass
+    * their own count-subtract transforms), and whether the store may be
+    * absent (the postings family's optional norms table). */
+  final case class DeleteTarget(store: StoreLoc,
+      transform: DataFrame => DataFrame, optional: Boolean = false)
 
   /** [[DeleteTarget]] for the common case — physically drop every row
     * whose `keyCol` is tombstoned. `large` selects the non-broadcast
     * anti-join ([[StoreMaintenance.tombstoneLarge]]) for corpus-scale
     * key sets (whole-source takedowns); the default broadcasts
     * (takedown lists). */
-  def keyTarget(store: String, keyCol: String, tombstones: DataFrame,
-      large: Boolean = false, path: Boolean = false,
-      optional: Boolean = false): DeleteTarget =
+  def keyTarget(store: StoreLoc, keyCol: String, tombstones: DataFrame,
+      large: Boolean = false, optional: Boolean = false): DeleteTarget =
     DeleteTarget(store,
       if (large) StoreMaintenance.tombstoneLarge(tombstones, keyCol)
       else StoreMaintenance.tombstone(tombstones, keyCol),
-      path, optional)
+      optional)
 
   /** THE shared deletion-propagation shape: run `guard` (the families'
     * pending-refit refusals — state checks that must precede any
@@ -156,9 +133,7 @@ object IncrementalStore {
       guard: SparkSession => Unit = _ => ()): Unit = {
     guard(spark)
     targets.foreach { t =>
-      if (t.path)
-        StoreMaintenance.rewritePath(spark, t.store, gen, t.transform)
-      else if (!t.optional || spark.catalog.tableExists(t.store))
+      if (!t.optional || t.store.exists(spark))
         StoreMaintenance.rewrite(spark, t.store, gen, t.transform)
     }
   }

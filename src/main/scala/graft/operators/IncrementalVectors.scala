@@ -156,7 +156,7 @@ object IncrementalVectors {
     * DDL: two ALTER TABLE statements, no data motion. */
   def dropDate(spark: SparkSession, table: String, date: String): Unit =
     IncrementalStore.dropDate(spark,
-      Seq(s"${table}_codes", s"${table}_cells"), date)
+      Seq(s"${table}_codes", s"${table}_cells").map(TableLoc), date)
 
   /** DELETION PROPAGATION: physically remove the tombstoned ids' rows
     * from BOTH store tables (PQ codes and IVF postings), one
@@ -169,8 +169,10 @@ object IncrementalVectors {
   def deleteIds(spark: SparkSession, table: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-        IncrementalStore.keyTarget(s"${table}_codes", "id", tombstones, large),
-        IncrementalStore.keyTarget(s"${table}_cells", "id", tombstones, large)),
+        IncrementalStore.keyTarget(TableLoc(s"${table}_codes"), "id",
+          tombstones, large),
+        IncrementalStore.keyTarget(TableLoc(s"${table}_cells"), "id",
+          tombstones, large)),
       guard = requireNoPendingRefit(_, table))
 
   /** Cell-occupancy audit over a (cell, …) postings frame: one row per
@@ -235,7 +237,8 @@ object IncrementalVectors {
       .agg(countDistinct(col("cid"))).head().getLong(0)
     // (ds, cell) counts — bounded at nDates·nCells rows; checkpointed so
     // the grid derives its cell set from the SAME materialized aggregate
-    val counts = IncrementalStore.consistentScan(spark, s"${table}_cells")
+    val counts = StoreMaintenance.consistentScan(spark,
+        TableLoc(s"${table}_cells"))
       .groupBy(col("ds"), col("cell")).agg(count(lit(1)).as("n"))
       .localCheckpoint()
     val grid = counts.select(col("ds")).distinct()
@@ -306,8 +309,8 @@ object IncrementalVectors {
         // fit frame is only consumed when no staged model exists — see
         // the resume note below — and in that state the per-date view
         // is intact, so the baseline is always resolvable)
-        val fit = IncrementalStore
-          .consistentScan(spark, s"${table}_cells")
+        val fit = StoreMaintenance
+          .consistentScan(spark, TableLoc(s"${table}_cells"))
           .filter(baseline.fold(lit(true))(col("ds") =!= _))
           .select(col("id"), col("e"))
         refitQuantizer(spark, table, fit, gen = gen,
@@ -416,7 +419,7 @@ object IncrementalVectors {
     }.toDF("cell", "parent")
       .write.mode("append").saveAsTable(mapT) // before the rewrite (see above)
     val remap = fits.map(_._1).reduce(_ unionAll _)
-    StoreMaintenance.rewrite(spark, cellsT, gen = s"$maxId",
+    StoreMaintenance.rewrite(spark, TableLoc(cellsT), gen = s"$maxId",
       transform = _.join(remap, Seq("id"), "left")
         .select(coalesce(col("new_cell"), col("cell")).as("cell"),
           col("id"), col("e"), col("n")))
@@ -490,7 +493,7 @@ object IncrementalVectors {
     // self-join (which reshuffled every inline vector by id) are gone
     val nextModel = graft.functions.ModelExpressions
       .collectModel(spark.table(nextT).drop("gen"))
-    try StoreMaintenance.rewrite(spark, s"${table}_cells", gen,
+    try StoreMaintenance.rewrite(spark, TableLoc(s"${table}_cells"), gen,
       transform = df => df
         .select(col("id"), col("e"), col("n"),
           graft.functions.ModelExpressions
@@ -507,7 +510,8 @@ object IncrementalVectors {
       // failure keeps it too — same-gen resume is the documented
       // recovery.
       case e: Throwable =>
-        if (StoreMaintenance.rewriteNeverStarted(spark, s"${table}_cells", gen))
+        if (StoreMaintenance.rewriteNeverStarted(spark,
+            TableLoc(s"${table}_cells"), gen))
           spark.sql(s"DROP TABLE IF EXISTS $nextT")
         throw e
     }
@@ -553,7 +557,8 @@ object IncrementalVectors {
     val qd = PQ.subDistances(queries, cb, dim / m, idCol, vecCol)
       .select(col("id").as("qid"), col("m"), col("cid"), col("d2"))
     val codes = allowFilter(asOf(
-      IncrementalStore.consistentScan(spark, s"${table}_codes"), upTo), allowed)
+      StoreMaintenance.consistentScan(spark, TableLoc(s"${table}_codes")),
+      upTo), allowed)
     val adist = codes.join(broadcast(qd),
         qd("m") === codes("m") && qd("cid") === codes("code") &&
           qd("qid") =!= codes("id"))
@@ -595,7 +600,7 @@ object IncrementalVectors {
     * marker onward the AUTHORITATIVE postings carry new-quantizer cell
     * ids while `t_ctr` still holds the old model until the swap lands.
     * The serve scan itself resolves the same commit point
-    * ([[IncrementalStore.consistentScan]] — in the marker-to-drops window
+    * ([[StoreMaintenance.consistentScan]] — in the marker-to-drops window
     * it reads ONLY the label partition, never the pending-delete olds),
     * so probing the store with the model its authoritative rows were
     * assigned under makes a crash ANYWHERE in the refit serve a
@@ -672,7 +677,8 @@ object IncrementalVectors {
     // restricts the CANDIDATES after the bucket prune but before any dot
     // product is paid — probe economics and the filter compose
     val store = allowFilter(asOf(
-        IncrementalStore.consistentScan(spark, s"${table}_cells"), upTo)
+        StoreMaintenance.consistentScan(spark,
+          TableLoc(s"${table}_cells")), upTo)
       .filter(col("cell").isin(probedCells.map(Int.box): _*)), allowed)
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qe"),
       Similarity.norm(col(vecCol)).as("qn"))
@@ -723,7 +729,8 @@ object IncrementalVectors {
       probeStage(spark, table, queries, nProbe, idCol, vecCol)
     // MEMBERSHIP only: cell + id — never the inline float vector/norm
     val members = allowFilter(asOf(
-        IncrementalStore.consistentScan(spark, s"${table}_cells"), upTo)
+        StoreMaintenance.consistentScan(spark,
+          TableLoc(s"${table}_cells")), upTo)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .select(col("cell"), col("id")), allowed)
     val cand = broadcast(probes).join(members,

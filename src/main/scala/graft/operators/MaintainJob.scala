@@ -11,7 +11,7 @@ import java.time.{Instant, ZoneOffset}
   * family's stores (the fold/compaction calls — typically
   * [[StoreMaintenance.compact]] at the window horizon, with the
   * family's additive merge), optionally the family's RETENTION policy
-  * (an [[StoreMaintenance.expire]]/`expirePath` call at the policy
+  * (a [[StoreMaintenance.expire]] call at the policy
   * cutoff — run AFTER the window's folds, so "align expiry horizons
   * with fold horizons" is the orchestrator's mechanical ordering, not
   * operator advice: folding to `c_w` first makes everything at or

@@ -73,7 +73,7 @@ object Matryoshka {
 
   /** Drop one ingestion date's partition — the re-run/retry guard. */
   def dropDate(spark: SparkSession, table: String, date: String): Unit =
-    IncrementalStore.dropDate(spark, Seq(s"${table}_cells"), date)
+    IncrementalStore.dropDate(spark, Seq(TableLoc(s"${table}_cells")), date)
 
   /** DELETION PROPAGATION — the [[IncrementalVectors.deleteIds]] contract
     * for the matryoshka store's single cell table: one marker-committed
@@ -82,7 +82,8 @@ object Matryoshka {
   def deleteIds(spark: SparkSession, table: String,
       tombstones: DataFrame, gen: String, large: Boolean = false): Unit =
     IncrementalStore.propagateDeletes(spark, gen, Seq(
-      IncrementalStore.keyTarget(s"${table}_cells", "id", tombstones, large)))
+      IncrementalStore.keyTarget(TableLoc(s"${table}_cells"), "id",
+        tombstones, large)))
 
   /** AS-OF restriction — the [[IncrementalVectors]] convention verbatim:
     * the date partitioning makes time-travel a partition PRUNE.
@@ -117,7 +118,8 @@ object Matryoshka {
     // filtered serve ([[IncrementalStore.allowFilter]]): candidates are
     // restricted after the bucket prune, before the full-dim re-rank
     val store = IncrementalStore.allowFilter(
-      asOf(IncrementalStore.consistentScan(spark, s"${table}_cells"), upTo)
+      asOf(StoreMaintenance.consistentScan(spark,
+          TableLoc(s"${table}_cells")), upTo)
         .filter(col("cell").isin(probedCells.map(Int.box): _*)), allowed)
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qe"),
       Similarity.norm(col(vecCol)).as("qn"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * and the inventory, wired the way the oracle-gated compositions
   * (q181, q186) wire them by hand — with the safety hooks ON:
   * every curate family carries the `foldedThrough` retention fence
-  * ([[StoreMaintenance.retentionHorizon]] over its backing tables — the
+  * ([[StoreMaintenance.retentionHorizon]] over its backing stores — the
   * max of the fold horizon and the durable `_expired_through` policy
   * record, so a marker-deleted reprocess can neither double-count a
   * folded date nor resurrect an expired one), and the suppression feed
@@ -84,8 +84,8 @@ import org.apache.spark.sql.functions._
   *     counts — it needs their TEXTS, supplied via `--CORPUS` (the
   *     retained drops catalog), and the family registers `subtractive`
   *     (arming [[TakedownJob]]'s cross-batch dedupe and ordering
-  *     fences). Maintenance = the additive compactPath fold + optional
-  *     expirePath retention (on a counting store, expiry IS exact
+  *     fences). Maintenance = the additive compact fold + optional
+  *     expire retention (on a counting store, expiry IS exact
   *     unlearning of the expired dates).
   *   - `langmodel`: the incremental NB language-ID model
   *     ([[IncrementalLangModel]], `{storeDir}/langmodel/{tri,prior}`).
@@ -97,7 +97,7 @@ import org.apache.spark.sql.functions._
   *     family registers `subtractive`, arming [[TakedownJob]]'s
   *     cross-batch dedupe and ordering fences, and fails LOUD on an
   *     aged-out id — the spans rule). Maintenance = the additive
-  *     compactPath folds; on a counting model retention expiry IS
+  *     compact folds; on a counting model retention expiry IS
   *     exact unlearning of the expired dates.
   *   - `components`: the incremental near-dup clustering store
   *     ([[IncrementalComponents]], `{storeDir}/components_{sigs,labels,
@@ -132,6 +132,12 @@ object OpsFamilies {
 
   private def langStore(storeDir: String): String =
     s"${graft.split.PathOps.normalizePrefix(storeDir)}langmodel"
+
+  /** The langmodel family's (tri, prior) stores under its root. */
+  private def langStores(root: String): Seq[StoreLoc] =
+    Seq(PathLoc(s"$root/tri"), PathLoc(s"$root/prior"))
+
+  private def tbls(names: String*): Seq[StoreLoc] = names.map(TableLoc)
 
   /** (sigs, labels, repmap, edges) roots for the components family. */
   private def compStores(storeDir: String): (String, String, String, String) = {
@@ -176,18 +182,18 @@ object OpsFamilies {
       fam: String): Seq[StoreInventory.Entry] = fam match {
     case "spans" =>
       Seq(StoreInventory.Entry(s"${fam}_counts",
-        spansStore(requireDir(fam, storeDir)), path = true))
+        PathLoc(spansStore(requireDir(fam, storeDir)))))
     case "components" =>
       val (sigs, labels, _, edges) = compStores(requireDir(fam, storeDir))
-      Seq(StoreInventory.Entry(s"${fam}_sigs", sigs, path = true),
-        StoreInventory.Entry(s"${fam}_labels", labels, path = true),
-        StoreInventory.Entry(s"${fam}_edges", edges, path = true))
+      Seq(StoreInventory.Entry(s"${fam}_sigs", PathLoc(sigs)),
+        StoreInventory.Entry(s"${fam}_labels", PathLoc(labels)),
+        StoreInventory.Entry(s"${fam}_edges", PathLoc(edges)))
     case "langmodel" =>
       val root = langStore(requireDir(fam, storeDir))
-      Seq(StoreInventory.Entry(s"${fam}_tri", s"$root/tri", path = true),
-        StoreInventory.Entry(s"${fam}_prior", s"$root/prior", path = true))
+      Seq(StoreInventory.Entry(s"${fam}_tri", PathLoc(s"$root/tri")),
+        StoreInventory.Entry(s"${fam}_prior", PathLoc(s"$root/prior")))
     case _ => tables(store, fam)
-      .map(t => StoreInventory.Entry(t._1, t._2))
+      .map(t => StoreInventory.Entry(t._1, TableLoc(t._2)))
   }
 
   /** The subset of [[stores]] whose per-date partition PRESENCE is
@@ -229,19 +235,19 @@ object OpsFamilies {
         IncrementalPostings.appendNorms(docs, s"${store}_post", d)
       },
       drop = (sp, d) => IncrementalStore.dropDate(sp,
-        Seq(s"${store}_post", s"${store}_post_dl"), d),
+        tbls(s"${store}_post", s"${store}_post_dl"), d),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_post", s"${store}_post_dl"))))
+        tbls(s"${store}_post", s"${store}_post_dl"))))
     case "minhash" => CurateFamily(fam,
       append = (slice, d) => IncrementalDedup.appendBandsBucketed(
         slice.select(col(idCol).as("doc_id"), col(textCol).as("text")),
         s"${store}_mh", d),
       drop = (sp, d) =>
-        IncrementalStore.dropDate(sp, Seq(s"${store}_mh"), d),
+        IncrementalStore.dropDate(sp, tbls(s"${store}_mh"), d),
       report = Some((sp, d) => IncrementalDedup.newPairsBucketed(
         sp, s"${store}_mh", d, pairThreshold, upTo = Some(d))),
       foldedThrough = Some(sp =>
-        StoreMaintenance.retentionHorizon(sp, Seq(s"${store}_mh"))),
+        StoreMaintenance.retentionHorizon(sp, tbls(s"${store}_mh"))),
       // empty-first-date guard: the day report scans the band table,
       // which only an append creates (CurateFamily.exists contract)
       exists = Some(sp => sp.catalog.tableExists(s"${store}_mh")))
@@ -265,7 +271,7 @@ object OpsFamilies {
       report = Some((sp, d) => IncrementalSemantic.newPairs(
         sp, s"${store}_sem", d, semThreshold, upTo = Some(d))),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_sem_bands", s"${store}_sem_vecs",
+        tbls(s"${store}_sem_bands", s"${store}_sem_vecs",
           s"${store}_sem_occ"))),
       // empty-first-date guard: the pair report scans bands+vecs, which
       // only an append creates (initModel writes just the _cfg table)
@@ -291,7 +297,7 @@ object OpsFamilies {
       drop = (sp, d) =>
         IncrementalVectors.dropDate(sp, s"${store}_vec", d),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_vec_codes", s"${store}_vec_cells"))))
+        tbls(s"${store}_vec_codes", s"${store}_vec_cells"))))
     case "sq8" => CurateFamily(fam,
       append = (slice, d) => {
         val sp = slice.sparkSession
@@ -306,7 +312,7 @@ object OpsFamilies {
       },
       drop = (sp, d) => IncrementalSQ.dropDate(sp, s"${store}_sq", d),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_sq_codes"))))
+        tbls(s"${store}_sq_codes"))))
     case "matryoshka" => CurateFamily(fam,
       append = (slice, d) => {
         val sp = slice.sparkSession
@@ -332,7 +338,7 @@ object OpsFamilies {
       },
       drop = (sp, d) => Matryoshka.dropDate(sp, s"${store}_mat", d),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_mat_cells"))))
+        tbls(s"${store}_mat_cells"))))
     case "maxsim" => CurateFamily(fam,
       append = (slice, d) => {
         val sp = slice.sparkSession
@@ -352,26 +358,26 @@ object OpsFamilies {
       drop = (sp, d) =>
         IncrementalVectors.dropDate(sp, s"${store}_tok", d),
       foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        Seq(s"${store}_tok_codes", s"${store}_tok_cells"))))
+        tbls(s"${store}_tok_codes", s"${store}_tok_cells"))))
     case "langmodel" =>
       val root = langStore(requireDir(fam, storeDir))
       CurateFamily(fam,
         append = (slice, d) => IncrementalLangModel.appendCounts(
           slice.select(col(idCol).as("doc_id"), col(langCol).as("lang"),
             col(textCol).as("text")), root, d),
-        drop = (sp, d) => IncrementalStore.dropDatePath(sp,
-          Seq(s"$root/tri", s"$root/prior"), d),
-        foldedThrough = Some(sp => StoreMaintenance.retentionHorizonPath(
-          sp, Seq(s"$root/tri", s"$root/prior"))))
+        drop = (sp, d) => IncrementalStore.dropDate(sp,
+          langStores(root), d),
+        foldedThrough = Some(sp =>
+          StoreMaintenance.retentionHorizon(sp, langStores(root))))
     case "spans" =>
       val st = spansStore(requireDir(fam, storeDir))
       CurateFamily(fam,
         append = (slice, d) => IncrementalSpans.appendCounts(
           slice.select(col(idCol).as("doc_id"), col(textCol).as("text")),
           st, d),
-        drop = (sp, d) => IncrementalStore.dropDatePath(sp, Seq(st), d),
+        drop = (sp, d) => IncrementalStore.dropDate(sp, Seq(PathLoc(st)), d),
         foldedThrough = Some(sp =>
-          StoreMaintenance.retentionHorizonPath(sp, Seq(st))))
+          StoreMaintenance.retentionHorizon(sp, Seq(PathLoc(st)))))
     case "components" =>
       val (sigs, labels, repmap, edges) = compStores(requireDir(fam, storeDir))
       require(inDir.nonEmpty,
@@ -401,8 +407,8 @@ object OpsFamilies {
         },
         drop = (sp, d) => IncrementalComponents.dropDate(sp, sigs, labels,
           repmap, edges, d),
-        foldedThrough = Some(sp =>
-          StoreMaintenance.retentionHorizonPath(sp, Seq(sigs, labels))))
+        foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
+          Seq(PathLoc(sigs), PathLoc(labels)))))
     case other => throw new IllegalArgumentException(
       s"unknown family '$other' — registered: ${Names.mkString(", ")}")
   }
@@ -517,11 +523,11 @@ object OpsFamilies {
       vecPsiRefit: Option[Double] = None,
       storeDir: String = "",
       semPsiReband: Option[Double] = None): MaintainFamily = {
-    def expireAll(tbls: Seq[String]): Option[
+    def expireAll(stores: Seq[StoreLoc]): Option[
         (SparkSession, String) => StoreMaintenance.ExpireResult] =
       retainTo.map(cut => (sp: SparkSession, w: String) => {
-        val rs = tbls.filter(sp.catalog.tableExists)
-          .map(t => StoreMaintenance.expire(sp, t, cut(w)))
+        val rs = stores.filter(_.exists(sp))
+          .map(s => StoreMaintenance.expire(sp, s, cut(w)))
         StoreMaintenance.ExpireResult(
           rs.flatMap(_.dropped).distinct.sorted,
           rs.flatMap(_.retained).distinct.sorted)
@@ -529,18 +535,18 @@ object OpsFamilies {
     fam match {
       case "postings" => MaintainFamily(fam,
         maintain = (sp, w) => {
-          StoreMaintenance.compact(sp, s"${store}_post", w,
+          StoreMaintenance.compact(sp, TableLoc(s"${store}_post"), w,
             merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
           IncrementalPostings.compactNorms(sp, s"${store}_post", w)
         },
-        expire = expireAll(Seq(s"${store}_post", s"${store}_post_dl")),
+        expire = expireAll(tbls(s"${store}_post", s"${store}_post_dl")),
         audit = Some((sp, _) => sp.table(s"${store}_post")
           .agg(countDistinct(col("term")).as("n_terms"),
             countDistinct(col("doc_id")).as("n_docs"))))
       case "minhash" => MaintainFamily(fam,
         maintain = (sp, w) =>
-          StoreMaintenance.compact(sp, s"${store}_mh", w),
-        expire = expireAll(Seq(s"${store}_mh")))
+          StoreMaintenance.compact(sp, TableLoc(s"${store}_mh"), w),
+        expire = expireAll(tbls(s"${store}_mh")))
       case "semantic" => MaintainFamily(fam,
         // the banding family's detect→act POLICY
         // ([[IncrementalSemantic.maintainPolicy]]) armed by
@@ -557,7 +563,7 @@ object OpsFamilies {
             s"""{"event":"sem_policy","store":"${store}_sem",""" +
               s""""window":"$w","action":"$a"}"""))
         },
-        expire = expireAll(Seq(s"${store}_sem_bands",
+        expire = expireAll(tbls(s"${store}_sem_bands",
           s"${store}_sem_vecs", s"${store}_sem_occ")),
         audit = Some((sp, _) => {
           // baseline = earliest plain date; after a gen rewrite the
@@ -582,7 +588,7 @@ object OpsFamilies {
         }))
       case "vectors" =>
         vectorStyleMaintain(fam, s"${store}_vec",
-          expireAll(Seq(s"${store}_vec_codes", s"${store}_vec_cells")),
+          expireAll(tbls(s"${store}_vec_codes", s"${store}_vec_cells")),
           vecMaxCellRows, vecPsiRefit)
       case "maxsim" =>
         // the token store IS an IncrementalVectors store — the same
@@ -591,7 +597,7 @@ object OpsFamilies {
         // both vectors AND maxsim arms both stores' policies, each
         // acting on its own base)
         vectorStyleMaintain(fam, s"${store}_tok",
-          expireAll(Seq(s"${store}_tok_codes", s"${store}_tok_cells")),
+          expireAll(tbls(s"${store}_tok_codes", s"${store}_tok_cells")),
           vecMaxCellRows, vecPsiRefit)
       case "sq8" => MaintainFamily(fam,
         // codes are disjoint per-id state: the fold is a pure re-bin
@@ -605,8 +611,8 @@ object OpsFamilies {
         // to requires. Acting needs the corpus; the audit detects, the
         // operator refits (refitGrid) or re-inits at curate time.
         maintain = (sp, w) =>
-          StoreMaintenance.compact(sp, s"${store}_sq_codes", w),
-        expire = expireAll(Seq(s"${store}_sq_codes")),
+          StoreMaintenance.compact(sp, TableLoc(s"${store}_sq_codes"), w),
+        expire = expireAll(tbls(s"${store}_sq_codes")),
         audit = Some((sp, _) => {
           // the scalar family's drift signal served from the store's
           // own rows: per-partition code count + SATURATION fraction
@@ -619,7 +625,7 @@ object OpsFamilies {
             sp.sql("SELECT CAST('' AS STRING) AS ds, " +
               "CAST(0 AS BIGINT) AS n_codes, " +
               "CAST(0.0 AS DOUBLE) AS sat_frac").limit(0)
-          else IncrementalStore.consistentScan(sp, codes)
+          else StoreMaintenance.consistentScan(sp, TableLoc(codes))
             .groupBy(col("ds"))
             .agg(count(lit(1)).as("n_codes"),
               round(sum(when(col("code") === 0 || col("code") === 255,
@@ -630,8 +636,8 @@ object OpsFamilies {
         // cell rows are disjoint per-id state — pure re-bin fold; the
         // prefix quantizer is frozen model state (re-init = new store)
         maintain = (sp, w) =>
-          StoreMaintenance.compact(sp, s"${store}_mat_cells", w),
-        expire = expireAll(Seq(s"${store}_mat_cells")),
+          StoreMaintenance.compact(sp, TableLoc(s"${store}_mat_cells"), w),
+        expire = expireAll(tbls(s"${store}_mat_cells")),
         audit = Some((sp, _) => cellStoreAudit(sp, s"${store}_mat")))
       case "langmodel" =>
         val root = langStore(requireDir(fam, storeDir))
@@ -639,29 +645,20 @@ object OpsFamilies {
           // the additive folds: trigram counts sum per (cand, tri),
           // priors per cand — the compacted model scores bit-equal
           maintain = (sp, w) => {
-            StoreMaintenance.compactPath(sp, s"$root/tri", w,
+            StoreMaintenance.compact(sp, PathLoc(s"$root/tri"), w,
               merge = _.groupBy(col("cand"), col("tri"))
                 .agg(sum(col("c")).as("c")))
-            StoreMaintenance.compactPath(sp, s"$root/prior", w,
+            StoreMaintenance.compact(sp, PathLoc(s"$root/prior"), w,
               merge = _.groupBy(col("cand")).agg(sum(col("ndl")).as("ndl")))
           },
           // on a counting model retention expiry IS exact unlearning of
           // the expired dates (additive state minus their partitions)
-          expire = retainTo.map(cut => (sp: SparkSession, w: String) => {
-            val rs = Seq(s"$root/tri", s"$root/prior")
-              .map(p => StoreMaintenance.expirePath(sp, p, cut(w)))
-            StoreMaintenance.ExpireResult(
-              rs.flatMap(_.dropped).distinct.sorted,
-              rs.flatMap(_.retained).distinct.sorted)
-          }),
+          expire = expireAll(langStores(root)),
           audit = Some((sp, _) => {
             // model shape: candidate languages, vocabulary, training
             // docs — the derived quantities scoring rebuilds from sums.
             // Vocabulary-bounded aggregates; zeros when uningested.
-            val root0 = new org.apache.hadoop.fs.Path(s"$root/tri")
-            val fsys = root0.getFileSystem(
-              sp.sparkContext.hadoopConfiguration)
-            if (!fsys.exists(root0))
+            if (!langStores(root).head.exists(sp))
               sp.sql("SELECT CAST(0 AS BIGINT) AS n_langs, " +
                 "CAST(0 AS BIGINT) AS vocab, " +
                 "CAST(0 AS BIGINT) AS n_train_docs")
@@ -679,21 +676,17 @@ object OpsFamilies {
         MaintainFamily(fam,
           // the additive fold: per-hash counts sum across dates, so the
           // compacted store serves every report bit-equal (q109's law)
-          maintain = (sp, w) => StoreMaintenance.compactPath(sp, st, w,
+          maintain = (sp, w) => StoreMaintenance.compact(sp, PathLoc(st), w,
             merge = _.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))),
           // on a counting store expiry IS exact unlearning of the
           // expired dates (additive state minus a date's partition)
-          expire = retainTo.map(cut => (sp: SparkSession, w: String) =>
-            StoreMaintenance.expirePath(sp, st, cut(w))),
+          expire = expireAll(Seq(PathLoc(st))),
           audit = Some((sp, _) => {
             // audit-never-wedge: an uningested store reads as zeros
-            val root = new org.apache.hadoop.fs.Path(st)
-            val fsys = root.getFileSystem(
-              sp.sparkContext.hadoopConfiguration)
-            if (!fsys.exists(root))
+            if (!PathLoc(st).exists(sp))
               sp.sql("SELECT CAST(0 AS BIGINT) AS n_hashes, " +
                 "CAST(0 AS BIGINT) AS n_dup")
-            else IncrementalStore.consistentScanPath(sp, st)
+            else StoreMaintenance.consistentScan(sp, PathLoc(st))
               .groupBy(col("h")).agg(sum(col("cnt")).as("total"))
               .agg(count(lit(1)).as("n_hashes"),
                 sum(when(col("total") >= 2, 1L).otherwise(0L))
@@ -713,11 +706,8 @@ object OpsFamilies {
           },
           audit = Some((sp, _) => {
             // audit-never-wedge: an uningested store reads as zeros
-            val root = new org.apache.hadoop.fs.Path(sigs)
-            val fsys = root.getFileSystem(
-              sp.sparkContext.hadoopConfiguration)
-            val sigN = if (fsys.exists(root))
-              IncrementalStore.consistentScanPath(sp, sigs)
+            val sigN = if (PathLoc(sigs).exists(sp))
+              StoreMaintenance.consistentScan(sp, PathLoc(sigs))
                 .agg(count(lit(1)).as("n_sig_docs"))
             else sp.sql("SELECT CAST(0 AS BIGINT) AS n_sig_docs")
             IncrementalComponents.currentLabels(sp, labels, repmap)

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.split.MarkerLedger
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** STORE OBSERVABILITY for the orchestrated families — the "is my
@@ -23,35 +22,19 @@ import org.apache.spark.sql.functions._
   * double-counts. */
 object StoreInventory {
 
-  /** One inventoried backing store: a catalog TABLE by default, or a
-    * filesystem PATH store (`ds=`-partitioned plain parquet — the spans
-    * and components families) with `path = true`. Both share the fold
-    * protocol files (`_fold_pending_*`, `_compact_*_done`,
-    * `_expired_through`, `_folded_set_*`) in their roots, so every
-    * detector rule below applies identically. */
-  final case class Entry(family: String, store: String,
-      path: Boolean = false)
+  /** One inventoried backing store: a catalog table or a filesystem
+    * path store (`ds=`-partitioned plain parquet — the spans and
+    * components families). Both share the fold protocol files
+    * (`_fold_pending_*`, `_compact_*_done`, `_expired_through`,
+    * `_folded_set_*`) in their roots, so every detector rule below
+    * applies identically. */
+  final case class Entry(family: String, store: StoreLoc)
 
   /** (partition values, store root) — None when the store is absent. */
   private def resolve(spark: SparkSession, e: Entry)
       : Option[(Seq[String], org.apache.hadoop.fs.Path)] =
-    if (e.path) {
-      val root = new org.apache.hadoop.fs.Path(e.store)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) None
-      else Some((fs.listStatus(root).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("ds="))
-        .map(_.stripPrefix("ds=")).toSeq, root))
-    } else if (!spark.catalog.tableExists(e.store)) None
-    else Some((
-      spark.sql(s"SHOW PARTITIONS ${e.store}").collect()
-        .map(_.getString(0).stripPrefix("ds=")).toSeq,
-      new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(e.store)).location)))
-
-  private def scan(spark: SparkSession, e: Entry): DataFrame =
-    if (e.path) IncrementalStore.consistentScanPath(spark, e.store)
-    else IncrementalStore.consistentScan(spark, e.store)
+    if (!e.store.exists(spark)) None
+    else Some((e.store.partitions(spark), e.store.root(spark)))
 
   /** One row per (family, ds) a family's table holds:
     * `(family, ds, n_rows)`. Consolidated (`c_*`) and generation
@@ -59,7 +42,7 @@ object StoreInventory {
     * per-date view below them is gone by design. */
   def dates(spark: SparkSession,
       families: Seq[(String, String)]): DataFrame =
-    datesOf(spark, families.map(f => Entry(f._1, f._2)))
+    datesOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))))
 
   /** [[dates]] over mixed table/path entries. A path store whose root
     * exists but holds no `ds=` partition yet (a dir created by a
@@ -68,12 +51,12 @@ object StoreInventory {
   def datesOf(spark: SparkSession, families: Seq[Entry]): DataFrame = {
     val present = families.filter(e => resolve(spark, e) match {
       case None => false
-      case Some((ps, _)) => !e.path || ps.nonEmpty
+      case Some((ps, _)) => e.store.isInstanceOf[TableLoc] || ps.nonEmpty
     })
     require(present.nonEmpty,
-      s"none of the inventory stores exist: ${families.map(_.store).mkString(", ")}")
+      s"none of the inventory stores exist: ${families.map(_.store.name).mkString(", ")}")
     present.map { e =>
-      scan(spark, e)
+      StoreMaintenance.consistentScan(spark, e.store)
         .groupBy(col("ds")).agg(count(lit(1)).as("n_rows"))
         .select(lit(e.family).as("family"), col("ds"), col("n_rows"))
     }.reduce(_ unionAll _)
@@ -97,7 +80,7 @@ object StoreInventory {
     * strings — the ledger scale shape). */
   def missing(spark: SparkSession,
       families: Seq[(String, String)]): DataFrame =
-    missingOf(spark, families.map(f => Entry(f._1, f._2)))
+    missingOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))))
 
   /** [[missing]] over mixed table/path entries. */
   def missingOf(spark: SparkSession, families: Seq[Entry]): DataFrame = {
@@ -155,7 +138,7 @@ object StoreInventory {
     * `_compact_*_done` commit marker is a crashed, uncommitted rewrite
     * and earns no credit — but sentinel WITH the commit marker is a
     * fold that crashed between commit and cleanup, credited, both
-    * matching [[IncrementalStore.consistentScan]]'s resolution
+    * matching [[StoreMaintenance.consistentScan]]'s resolution
     * exactly. Dates [[CurateJob]] flagged `{date}.empty`
     * (all-suppressed re-crawls) landed no partition anywhere by
     * construction and are skipped. Reported rows are therefore exactly
@@ -167,7 +150,8 @@ object StoreInventory {
     * generation label. */
   def missingVsLedger(spark: SparkSession, families: Seq[(String, String)],
       markerDir: String): DataFrame =
-    missingVsLedgerOf(spark, families.map(f => Entry(f._1, f._2)), markerDir)
+    missingVsLedgerOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))),
+      markerDir)
 
   /** [[missingVsLedger]] over mixed table/path entries — path stores
     * share the fold protocol files, so every credit rule applies

@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Retention maintenance for the incremental per-date stores (the q92
   * signature bands, q128 postings, q133 codes/cells tables and the q109
-  * span-count path store). All of them append one set of files per
-  * ingestion date FOREVER — correct (rows are additive or disjoint
+  * span-count path store) — one protocol over both store kinds, which
+  * differ only in their [[StoreLoc]]. All of them append one set of
+  * files per ingestion date FOREVER — correct (rows are additive or disjoint
   * state) but unbounded: at thousands of dates the per-bucket file count
   * grows linearly and scan open-cost starts to dominate the reports the
   * layouts exist to serve (the same unbounded-growth property as the
@@ -30,11 +30,11 @@ import org.apache.spark.sql.functions._
   *
   * CRASH SAFETY (exactly-once rows without a transactional format): the
   * consolidated partition is not authoritative until a `_compact_…_done`
-  * marker lands next to the table's partition dirs — append, THEN
+  * marker lands next to the store's partition dirs — publish, THEN
   * marker, THEN drop the old partitions, THEN clear the sentinel and
   * last the marker (sentinel first so a reader never sees "sentinel
   * without marker" after the olds are gone — that state means
-  * "uncommitted label" to [[consistentTable]]). A re-run
+  * "uncommitted label" to [[consistentScan]]). A re-run
   * resumes from any interruption: no marker ⇒ the consolidated partition
   * is a partial write, drop it and redo from the still-intact old
   * partitions; marker present ⇒ the fold is complete, just finish
@@ -86,9 +86,8 @@ object StoreMaintenance {
   // the pid-liveness check applies ONLY when the hostname matches this
   // host — on HDFS a live fold's lease written from another host must not
   // be judged dead just because that pid is absent locally. Foreign-host
-  // (or legacy host-less) leases are reclaimed only via the `maxAgeHours`
-  // stillness path, which every production entry point now plumbs with a
-  // [[DefaultLeaseMaxAgeHours]] default — a crashed foreign-host fold is
+  // (or legacy host-less) leases are reclaimed only by stillness past
+  // [[DefaultLeaseMaxAgeHours]] — a crashed foreign-host fold is
   // recoverable without manual lease surgery, while a LIVE foreign fold
   // (hours, not days) is never at risk.
   //
@@ -111,11 +110,8 @@ object StoreMaintenance {
     * (foreign host, unreadable content). Folds and appends are
     * minutes-long operations; 24 h is orders of magnitude past any live
     * hold while still bounding how long a crashed foreign-host fold can
-    * block a store. Pass `None` to disable age-based reclaim entirely, or
-    * a smaller value where faster takeover is safe. */
+    * block a store. */
   val DefaultLeaseMaxAgeHours: Double = 24.0
-
-  private def defaultAge: Option[Double] = Some(DefaultLeaseMaxAgeHours)
 
   private[operators] def leaseFile(location: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(location, "_maintenance_lease")
@@ -172,7 +168,7 @@ object StoreMaintenance {
     * return without ever planting the sentinel. A replayed
     * already-completed fold used to plant the sentinel first and only then
     * discover the no-op, and in that window concurrent
-    * [[consistentTable]]/[[consistentPath]] readers saw "sentinel present
+    * [[consistentScan]] readers saw "sentinel present
     * + marker absent" and excluded the COMMITTED label partition (serving
     * without the entire folded history); the check-then-skip is safe here
     * because the caller's maintenance lease already excludes racing
@@ -183,7 +179,7 @@ object StoreMaintenance {
     * crashed fold's own, and appends have been blocked since before its
     * first effect) and "fresh fold invocation" (anything this label left
     * on disk is residue of a PRIOR COMPLETED fold, because the sentinel
-    * outlives both the marker and the drops — see the fold bodies). The
+    * outlives both the marker and the drops — see [[foldBody]]). The
     * trailing delete is an idempotent backstop: a completing body removes
     * the sentinel itself, BEFORE the marker (reader-ordering). */
   private def withPendingSentinel(fs: org.apache.hadoop.fs.FileSystem,
@@ -243,16 +239,15 @@ object StoreMaintenance {
           raw = "", readable = false)
       }.toOption)
 
-  private def leaseStale(holder: LeaseHolder,
-      maxAgeHours: Option[Double]): Boolean = {
+  private def leaseStale(holder: LeaseHolder): Boolean = {
     // pid liveness is only meaningful on the host that wrote the lease,
     // and only for a fully-readable record
     val dead = holder.readable && holder.pid > 0 && holder.host == localHost && {
       val h = ProcessHandle.of(holder.pid)
       !h.isPresent || !h.get().isAlive
     }
-    val aged = maxAgeHours.exists(h =>
-      System.currentTimeMillis() - holder.ts > (h * 3600 * 1000).toLong)
+    val aged = System.currentTimeMillis() - holder.ts >
+      (DefaultLeaseMaxAgeHours * 3600 * 1000).toLong
     dead || aged
   }
 
@@ -270,14 +265,13 @@ object StoreMaintenance {
     }
 
   private def liveAppendLeases(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, maxAgeHours: Option[Double])
-      : Seq[LeaseHolder] =
+      dir: org.apache.hadoop.fs.Path): Seq[LeaseHolder] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
       .filter(_.getPath.getName.startsWith(AppendLeasePrefix))
       .flatMap { st =>
         leaseHolder(fs, st.getPath) match {
-          case Some(h) if leaseStale(h, maxAgeHours)
+          case Some(h) if leaseStale(h)
               && sweepIfUnchanged(fs, st.getPath, h) =>
             None // swept the crashed append
           case other => other
@@ -287,17 +281,16 @@ object StoreMaintenance {
   /** Take the maintenance lease for `location` or throw. A live lease —
     * including one held by THIS process (a concurrent fold in the same
     * JVM) — rejects; a stale one (dead pid on THIS host, or older than
-    * `maxAgeHours` when given) is reclaimed. After acquiring, any live
+    * [[DefaultLeaseMaxAgeHours]]) is reclaimed. After acquiring, any live
     * append lease ([[withAppendLease]]) forces a back-off: the fold
     * releases its own lease and throws, so it can never drop a partition
     * an in-flight append is writing. */
-  def acquireLease(spark: SparkSession, location: String,
-      maxAgeHours: Option[Double] = defaultAge): Unit = {
+  def acquireLease(spark: SparkSession, location: String): Unit = {
     val p = leaseFile(location)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p.getParent)) fs.mkdirs(p.getParent)
     leaseHolder(fs, p).foreach { h =>
-      if (!leaseStale(h, maxAgeHours) || !sweepIfUnchanged(fs, p, h)) {
+      if (!leaseStale(h) || !sweepIfUnchanged(fs, p, h)) {
         // a sweep can fail because a NEW holder replaced the lease between
         // judgment and delete — re-read so the message names the holder
         // that actually blocks us, not the stale one we judged
@@ -312,7 +305,7 @@ object StoreMaintenance {
     finally out.close()
     // declared first, THEN look for writers — any append that our listing
     // misses necessarily created its lease after ours and will see ours
-    val writers = liveAppendLeases(fs, p.getParent, maxAgeHours)
+    val writers = liveAppendLeases(fs, p.getParent)
     if (writers.nonEmpty) {
       fs.delete(p, false)
       throw new IllegalStateException(
@@ -333,12 +326,11 @@ object StoreMaintenance {
   /** Writer-side guard: throw if a LIVE fold holds `location`'s lease
     * (sweeping a stale one while here). Check-only — for the full
     * write-duration guard, use [[withAppendLease]]. */
-  def assertNoActiveFold(spark: SparkSession, location: String,
-      maxAgeHours: Option[Double] = defaultAge): Unit = {
+  def assertNoActiveFold(spark: SparkSession, location: String): Unit = {
     val p = leaseFile(location)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     leaseHolder(fs, p).foreach { h =>
-      if (!leaseStale(h, maxAgeHours) || !sweepIfUnchanged(fs, p, h)) {
+      if (!leaseStale(h) || !sweepIfUnchanged(fs, p, h)) {
         // re-read for the message: the blocker may be a REPLACEMENT holder
         val now = leaseHolder(fs, p).getOrElse(h)
         throw new IllegalStateException(
@@ -358,15 +350,29 @@ object StoreMaintenance {
   }
 
   /** Run `body` (an incremental-store append) under a SHARED append lease
-    * on `location`: the lease file is created FIRST, the fold lease is
-    * checked second (abort-and-clean-up if a live fold holds it), and the
-    * append lease is removed when the write finishes. Symmetric with
-    * [[acquireLease]]'s post-acquire writer listing — see the mutual-
-    * exclusion note above for why declare-then-check on both sides leaves
-    * no interleaving where a fold and an append both proceed. */
-  def withAppendLease[T](spark: SparkSession, location: String,
-      maxAgeHours: Option[Double] = defaultAge)(body: => T): T = {
-    val dir = new org.apache.hadoop.fs.Path(location)
+    * on the store: the lease file is created FIRST in the store root, the
+    * fold lease is checked second (abort-and-clean-up if a live fold
+    * holds it), and the append lease is removed when the write finishes.
+    * Symmetric with [[acquireLease]]'s post-acquire writer listing — see
+    * the mutual-exclusion note above for why declare-then-check on both
+    * sides leaves no interleaving where a fold and an append both
+    * proceed. A path store's root is created first; a table that does not
+    * exist yet runs its first append under [[TableLoc.withInitLease]]
+    * (the loser of two concurrent first appends fails fast). */
+  def withAppendLease[T](spark: SparkSession, loc: StoreLoc)(body: => T): T =
+    loc match {
+      case t: TableLoc if !t.exists(spark) => t.withInitLease(spark) {
+        // the table may have been created between our exists-check and
+        // our claim — the creator already released the init lease, so
+        // take the normal shared path over the now-real location
+        if (t.exists(spark)) sharedAppendLease(spark, t.root(spark))(body)
+        else body
+      }
+      case _ => sharedAppendLease(spark, loc.root(spark))(body)
+    }
+
+  private def sharedAppendLease[T](spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path)(body: => T): T = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val mine = new org.apache.hadoop.fs.Path(dir,
@@ -375,77 +381,10 @@ object StoreMaintenance {
     try out.writeBytes(leaseContent())
     finally out.close()
     try {
-      assertNoActiveFold(spark, location, maxAgeHours)
+      assertNoActiveFold(spark, dir.toString)
       body
     } finally fs.delete(mine, false)
   }
-
-  /** [[withAppendLease]] resolved through the catalog — the guard for
-    * table-backed stores. A table that does not exist yet has no location
-    * to lease and no partitions a fold could drop — but two concurrent
-    * FIRST appends would still race the catalog's table creation, so the
-    * init append runs under the EXCLUSIVE lease machinery on a sibling of
-    * the would-be warehouse path (never the path itself: a managed-table
-    * create refuses a non-empty location). The loser fails fast and its
-    * retry takes the normal shared path; a crashed init's lease ages out
-    * by the standard dead-pid/stillness rules. */
-  def withAppendLeaseTable[T](spark: SparkSession, table: String,
-      maxAgeHours: Option[Double] = defaultAge)(body: => T): T =
-    if (spark.catalog.tableExists(table))
-      withAppendLease(spark, spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(table)).location.toString,
-        maxAgeHours)(body)
-    else {
-      val initLoc = spark.sessionState.catalog
-        .defaultTablePath(TableIdentifier(table)).toString + "_init_lease"
-      acquireLease(spark, initLoc, maxAgeHours)
-      try {
-        // the table may have been created between our exists-check and
-        // our claim — the creator already released the init lease, so
-        // take the normal shared path over the now-real location
-        if (spark.catalog.tableExists(table))
-          withAppendLease(spark, spark.sessionState.catalog
-            .getTableMetadata(TableIdentifier(table)).location.toString,
-            maxAgeHours)(body)
-        else body
-      } finally {
-        releaseLease(spark, initLoc)
-        // drop the (now-empty) sibling dir — warehouse hygiene
-        val d = new org.apache.hadoop.fs.Path(initLoc)
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
-        ()
-      }
-    }
-
-  /** [[assertNoActiveFold]] resolved through the catalog (check-only;
-    * prefer [[withAppendLeaseTable]] for writes). */
-  def assertNoActiveFoldTable(spark: SparkSession, table: String,
-      maxAgeHours: Option[Double] = defaultAge): Unit =
-    if (spark.catalog.tableExists(table))
-      assertNoActiveFold(spark, spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(table)).location.toString,
-        maxAgeHours)
-
-  /** The table's `ds` partition values (bounded catalog metadata). */
-  private def partitions(spark: SparkSession, table: String): Seq[String] =
-    spark.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).stripPrefix("ds="))
-      .toSeq
-
-  /** The latest date a retention fold has CONSUMED in `tables` — the
-    * max horizon over their `c_<upTo>` labels (None with no fold, or
-    * absent tables). Per-date history at or before this date no longer
-    * exists as its own partitions, so drop-then-re-append reprocessing
-    * of such a date would double-count its rows against the
-    * consolidated label — [[CurateJob]] wires this through
-    * [[CurateFamily.foldedThrough]] to refuse exactly that (bounded
-    * catalog metadata, one SHOW PARTITIONS per table). */
-  def foldHorizon(spark: SparkSession, tables: Seq[String]): Option[String] =
-    tables.filter(spark.catalog.tableExists)
-      .flatMap(t => partitions(spark, t))
-      .filter(_.startsWith("c_")).map(_.stripPrefix("c_"))
-      .maxOption
 
   // ---- reader-side fold consistency ---------------------------------------
   //
@@ -489,7 +428,7 @@ object StoreMaintenance {
   //     both; after it the sidecar is already durable) and deleted only
   //     when the label partition itself is consumed by a later fold.
   //   - `_expired_through`: the max retention cutoff ever applied by
-  //     [[expire]]/[[expirePath]] (monotonic; lexicographic date order) —
+  //     [[expire]] (monotonic; lexicographic date order) —
   //     a date at or under it was dropped BY POLICY, not mutated by hand.
   private val FoldedSetPrefix = "_folded_set_"
   private[operators] val ExpiredThroughFile = "_expired_through"
@@ -550,7 +489,7 @@ object StoreMaintenance {
     ()
   }
 
-  /** The max cutoff [[expire]]/[[expirePath]] ever applied to the store
+  /** The max cutoff [[expire]] ever applied to the store
     * rooted at `root` (None = no expiry ran). */
   private[operators] def expiredThroughAt(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -573,82 +512,67 @@ object StoreMaintenance {
       try out.writeBytes(cutoff) finally out.close()
     }
 
-  /** The latest date a RETENTION POLICY has provably disposed of across
-    * `tables` — max over [[expire]]'s durable `_expired_through` records
-    * (None with no expiry, or absent tables). The [[foldHorizon]]
-    * companion for the EXPIRED side: a fold consumed a date's history
-    * into a label, an expiry made it GONE — re-appending either kind is
-    * wrong (double-count / policy resurrection), so curation fences on
-    * the max of both ([[graft.operators.OpsFamilies]] wires it). */
-  def expiredThrough(spark: SparkSession, tables: Seq[String]): Option[String] =
-    tables.filter(spark.catalog.tableExists).flatMap { t =>
-      val root = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(t)).location)
-      expiredThroughAt(
-        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    }.maxOption
+  /** The latest date a retention fold has CONSUMED in `stores` — the
+    * max horizon over their `c_<upTo>` labels (None with no fold, or
+    * absent stores). Per-date history at or before this date no longer
+    * exists as its own partitions, so drop-then-re-append reprocessing
+    * of such a date would double-count its rows against the
+    * consolidated label — [[CurateJob]] wires this through
+    * [[CurateFamily.foldedThrough]] to refuse exactly that (bounded
+    * metadata, one partition listing per store). */
+  def foldHorizon(spark: SparkSession, stores: Seq[StoreLoc]): Option[String] =
+    stores.filter(_.exists(spark))
+      .flatMap(_.partitions(spark))
+      .filter(_.startsWith("c_")).map(_.stripPrefix("c_"))
+      .maxOption
 
-  /** The curation fence horizon for `tables`: the max of the fold horizon
+  /** The curation fence horizon for `stores`: the max of the fold horizon
     * (history consumed into a `c_*` label) and the expiry horizon (history
-    * dropped by policy) — dates at or under it must never re-append. */
+    * dropped by policy, [[expire]]'s durable `_expired_through` record) —
+    * dates at or under it must never re-append: a fold consumed a date's
+    * history into a label, an expiry made it GONE, and re-appending either
+    * kind is wrong (double-count / policy resurrection), so curation
+    * fences on the max of both ([[graft.operators.OpsFamilies]] wires
+    * it). Absent stores contribute nothing. */
   def retentionHorizon(spark: SparkSession,
-      tables: Seq[String]): Option[String] =
-    (foldHorizon(spark, tables).toSeq ++
-      expiredThrough(spark, tables).toSeq).maxOption
+      stores: Seq[StoreLoc]): Option[String] =
+    (foldHorizon(spark, stores).toSeq ++
+      stores.filter(_.exists(spark))
+        .flatMap(s => expiredThroughAt(s.fs(spark), s.root(spark)))
+    ).maxOption
 
-  /** [[retentionHorizon]] for PATH stores (`ds=`-partitioned plain
-    * parquet): `c_*` labels from the directory listing, the expiry
-    * record from the store root — same fence semantics. */
-  def retentionHorizonPath(spark: SparkSession,
-      stores: Seq[String]): Option[String] =
-    stores.flatMap { s =>
-      val root = new org.apache.hadoop.fs.Path(s)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) Nil
-      else {
-        val folds = fs.listStatus(root).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith("ds=c_"))
-          .map(_.stripPrefix("ds=c_")).toSeq
-        folds ++ expiredThroughAt(fs, root).toSeq
-      }
-    }.maxOption
-
-  /** The PATH-store twin of [[consistentTable]]: a plain
-    * `spark.read.parquet(store)` over the `ds=<date>` layout double-reads
-    * the same crash windows (the fold's label dir lands by rename before
-    * the marker; the old dirs are deleted after it). Same resolution: no
-    * sentinel ⇒ read all; sentinel without marker ⇒ the label dir is
-    * uncommitted (invisible — note the PATH fold stages-and-renames, so a
-    * partial label dir only exists after a crash between rename and
-    * marker); sentinel + marker ⇒ the label (plus past-horizon dates for
-    * a compact) is exclusive. A missing store root reads exactly like
-    * the plain reader (throws), preserving caller contracts. */
-  def consistentPath(spark: SparkSession, store: String)
-      : org.apache.spark.sql.DataFrame =
-    consistentPathOver(spark, store, spark.read.parquet(store))
-
-  /** [[consistentPath]]'s crash-window resolution applied to a
-    * caller-provided reader over the same `ds=` layout — for readers
-    * that must pin an explicit schema (the components family's
-    * empty-store fallback). */
-  def consistentPathOver(spark: SparkSession, store: String,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(store)
+  /** The AUTHORITATIVE rows of a per-date store — its plain scan hardened
+    * against the fold crash/drop windows above. Every serve path reads
+    * stores through this, so a crash at ANY point of a
+    * compact/rewrite/tombstone/refit pass leaves serves consistent
+    * (pre-fold before the marker, post-fold after), never double-reading
+    * half-dropped history (a path fold's label dir lands by rename before
+    * the marker, so a partial label dir only exists after a crash between
+    * rename and marker). Cost when no fold is pending — the steady state
+    * — is one directory listing. An absent store reads exactly like the
+    * plain reader (throws), preserving caller contracts. `over` replaces
+    * the store's own reader for callers that must pin an explicit schema
+    * (the components family's empty-store fallback). */
+  def consistentScan(spark: SparkSession, loc: StoreLoc,
+      over: Option[DataFrame] = None): DataFrame = {
+    val root = loc.root(spark)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(root)) pendingFolds(fs, root) else Nil)
-      .headOption.fold(df) { label =>
-        if (!foldCommitted(fs, root, label)) df.filter(col("ds") =!= label)
-        else if (label.startsWith("r_")) df.filter(col("ds") === label)
-        else {
-          val horizon = effectiveDate(label)
-          df.filter(col("ds") === label ||
-            regexp_replace(col("ds"), "^c_", "") > horizon)
-        }
+    val df = over.getOrElse(loc.scan(spark))
+    pendingFolds(fs, root).headOption.fold(df) { label =>
+      if (!foldCommitted(fs, root, label)) df.filter(col("ds") =!= label)
+      else if (label.startsWith("r_")) df.filter(col("ds") === label)
+      else {
+        // horizon compact: the label plus everything PAST the horizon
+        // (exactly the complement of compact's foldable set)
+        val horizon = effectiveDate(label)
+        df.filter(col("ds") === label ||
+          regexp_replace(col("ds"), "^c_", "") > horizon)
       }
+    }
   }
 
-  /** Did `gen`'s rewrite on `table` take its FIRST durable effect? True
-    * iff its fold-pending sentinel never landed (or the table itself does
+  /** Did `gen`'s rewrite on `loc` take its FIRST durable effect? True
+    * iff its fold-pending sentinel never landed (or the store itself does
     * not exist) AND its generation partition does not exist. The refit
     * families use this after a rewrite abort to tell "nothing happened —
     * safe to unstage the new model" (lease contention with a live append)
@@ -663,72 +587,40 @@ object StoreMaintenance {
     * `r_<gen>` partition; a never-started one never creates it (gen
     * freshness is the [[rewrite]] caller contract). */
   private[operators] def rewriteNeverStarted(spark: SparkSession,
-      table: String, gen: String): Boolean = {
-    if (!spark.catalog.tableExists(table)) true
-    else {
-      val root = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(table)).location)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      !fs.exists(pendingFile(root.toString, s"r_$gen")) &&
-        !partitions(spark, table).contains(s"r_$gen")
+      loc: StoreLoc, gen: String): Boolean =
+    !loc.exists(spark) || {
+      val root = loc.root(spark)
+      !loc.fs(spark).exists(pendingFile(root.toString, s"r_$gen")) &&
+        !loc.partitions(spark).contains(s"r_$gen")
     }
-  }
-
-  /** The AUTHORITATIVE rows of a per-date TABLE store — `spark.table`
-    * hardened against the fold crash/drop windows above. Every serve path
-    * reads stores through this (via [[IncrementalStore.consistentScan]]),
-    * so a crash at ANY point of a compact/rewrite/tombstone/refit pass
-    * leaves serves consistent (pre-fold before the marker, post-fold
-    * after), never double-reading half-dropped history. Cost when no fold
-    * is pending — the steady state — is one directory listing. */
-  def consistentTable(spark: SparkSession, table: String)
-      : org.apache.spark.sql.DataFrame = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-    val root = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df = spark.table(table)
-    pendingFolds(fs, root).headOption.fold(df) { label =>
-      if (!foldCommitted(fs, root, label)) df.filter(col("ds") =!= label)
-      else if (label.startsWith("r_")) df.filter(col("ds") === label)
-      else {
-        // horizon compact: the label plus everything PAST the horizon
-        // (exactly the complement of foldTable's foldable set)
-        val horizon = effectiveDate(label)
-        df.filter(col("ds") === label ||
-          regexp_replace(col("ds"), "^c_", "") > horizon)
-      }
-    }
-  }
 
   /** Fold every partition with effective date ≤ `upTo` into one
     * consolidated `c_<upTo>` partition. Idempotent and crash-resumable
     * (see object scaladoc); a no-op when nothing is foldable (0 or 1 old
-    * partitions, or only the consolidated label itself). Concurrency
-    * contract: run it like any table-maintenance pass — not while a
-    * writer is appending the same table (readers planned before the
-    * final partition drops see a consistent snapshot only if their file
-    * listing predates the drops).
+    * partitions, or only the consolidated label itself) and on an absent
+    * path store. Concurrency contract: run it like any table-maintenance
+    * pass — not while a writer is appending the same store (readers
+    * planned before the final partition drops see a consistent snapshot
+    * only if their file listing predates the drops).
     *
     * `merge` optionally rewrites the folded rows before they land —
     * for ADDITIVE stores this is where compaction shrinks ROWS, not just
     * files (the q128 tf rows sum across dates: merging
     * `Σ tf GROUP BY term, doc_id` preserves every report bit-exactly
     * while collapsing a doc's N date rows to one — Lucene's segment-merge
-    * doc elision, Spark-shaped). The caller owns the invariant: the
-    * transform must preserve every reader's aggregate over the store and
-    * emit the table's exact column set (minus `ds`). */
-  def compact(spark: SparkSession, table: String, upTo: String,
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
-        = identity,
-      maxAgeHours: Option[Double] = defaultAge): Unit =
+    * doc elision, Spark-shaped; the span store's (h, cnt) rows likewise).
+    * The caller owns the invariant: the transform must preserve every
+    * reader's aggregate over the store and emit the store's exact column
+    * set (minus `ds`). */
+  def compact(spark: SparkSession, loc: StoreLoc, upTo: String,
+      merge: DataFrame => DataFrame = identity): Unit =
     // a single foldable partition is a no-win rename — require 2. A
     // repeated compact at a horizon whose `c_<upTo>` already committed
     // is a NO-OP even when fresh pre-horizon dates landed since (a label
     // with no pending sentinel at entry is a prior completed fold —
     // see foldBody); fold late arrivals with a LATER, distinct horizon.
-    foldTable(spark, table, s"c_$upTo",
-      ds => effectiveDate(ds) <= upTo, minOlds = 2, merge, maxAgeHours)
+    fold(spark, loc, s"c_$upTo", ds => effectiveDate(ds) <= upTo,
+      minOlds = 2, merge)
 
   /** What [[expire]] did: the partitions physically dropped, and the
     * labels SKIPPED because their content cannot be attributed to dates
@@ -743,7 +635,10 @@ object StoreMaintenance {
     * consolidated labels `c_X` with `X ≤ cutoff` (a label's content is
     * exactly the dates folded through X). Where [[compact]] keeps every
     * row and shrinks files, expiry makes data GONE; a time-based
-    * retention policy is this, run at each horizon.
+    * retention policy is this, run at each horizon. On a counting store
+    * (spans, the NB model's tri/prior stores) the expiry IS exact
+    * unlearning of the expired dates — additive state minus a date's
+    * partition equals a train without it.
     *
     * Partitions that MIGHT hold pre-cutoff rows but cannot be split —
     * a `c_X` with X > cutoff (per-row dates are consumed by the fold)
@@ -752,27 +647,24 @@ object StoreMaintenance {
     * half-dropped: align expiry horizons with fold horizons (expire at
     * X right after compacting to X) and nothing is ever stranded.
     *
-    * Bounded metadata DDL per partition — no data motion, no rewrite;
+    * Bounded metadata per partition — no data motion, no rewrite;
     * idempotent and trivially crash-resumable (a re-run drops whatever
     * is left). Holds the maintenance lease for the duration and fails
-    * closed on an unfinished fold, like every store mutation. */
-  def expire(spark: SparkSession, table: String, cutoff: String,
-      maxAgeHours: Option[Double] = defaultAge): ExpireResult = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-    require(meta.partitionColumnNames == Seq("ds"),
-      s"$table is not a per-date store (partitions: ${meta.partitionColumnNames})")
-    val fs = new org.apache.hadoop.fs.Path(meta.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    acquireLease(spark, meta.location.toString, maxAgeHours)
+    * closed on an unfinished fold, like every store mutation. An absent
+    * path store expires to nothing; an absent table throws. */
+  def expire(spark: SparkSession, loc: StoreLoc,
+      cutoff: String): ExpireResult = {
+    if (!loc.mutable(spark)) return ExpireResult(Nil, Nil)
+    val root = loc.root(spark)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    acquireLease(spark, root.toString)
     try {
-      val pend = pendingFolds(fs,
-        new org.apache.hadoop.fs.Path(meta.location))
+      val pend = pendingFolds(fs, root)
       if (pend.nonEmpty) throw new IllegalStateException(
         s"expire rejected: crashed/unfinished fold '${pend.head}' on " +
-          s"$table must be re-run to completion first — expiry's drops " +
-          "would race its drop phase")
-      val parts = partitions(spark, table)
+          s"${loc.name} must be re-run to completion first — expiry's " +
+          "drops would race its drop phase")
+      val parts = loc.partitions(spark)
       val dropped = parts.filter { ds =>
         !ds.startsWith("r_") && effectiveDate(ds) <= cutoff
       }
@@ -781,112 +673,55 @@ object StoreMaintenance {
           (ds.startsWith("c_") && effectiveDate(ds) > cutoff)
       }
       dropped.foreach { ds =>
-        // a dropped c_X label's fold marker goes WITH it (mirror
-        // expirePath, marker first so a crash between the two deletes
-        // re-heals): an orphan _compact_<ds>_done would otherwise
-        // survive until the next same-label fold's freshNoOp cleanup —
-        // a latent window where the marker asserts a label that is gone
-        fs.delete(new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(meta.location),
+        // a dropped c_X label's fold marker goes WITH it, marker first so
+        // a crash between the two deletes re-heals: an orphan
+        // _compact_<ds>_done would otherwise survive until the next
+        // same-label fold's freshNoOp cleanup — a latent window where the
+        // marker asserts a label that is gone
+        fs.delete(new org.apache.hadoop.fs.Path(root,
           s"_compact_${ds}_done"), false)
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (ds='$ds')")
+        loc.dropPartition(spark, ds)
       }
       // durable AFTER the drops (a crash mid-drop re-runs and re-records):
       // the policy horizon the ledger-keyed inventory credits — without
       // it every expired date would read as "mutated outside the
       // orchestrator" forever (ADVICE r18)
-      recordExpiredThrough(fs,
-        new org.apache.hadoop.fs.Path(meta.location), cutoff)
-      ExpireResult(dropped.sorted, retained.sorted)
-    } finally releaseLease(spark, meta.location.toString)
-  }
-
-  /** [[expire]] for the PATH-based per-date stores (spans, the NB
-    * model's tri/prior stores): same contract — drop `ds=` directories
-    * whose content is provably at or before `cutoff`, skip-and-report
-    * past-cutoff `c_X` and all `r_*` labels, lease-held, fail closed on
-    * an unfinished fold, idempotent (a dropped label's stale
-    * `_compact_*_done` marker is removed FIRST, so a crash between the
-    * two deletes re-heals on the next run). On a counting store the
-    * expiry IS exact unlearning of the expired dates — additive state
-    * minus a date's partition equals a train without it. */
-  def expirePath(spark: SparkSession, store: String, cutoff: String,
-      maxAgeHours: Option[Double] = defaultAge): ExpireResult = {
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return ExpireResult(Nil, Nil)
-    acquireLease(spark, store, maxAgeHours)
-    try {
-      val pend = pendingFolds(fs, root)
-      if (pend.nonEmpty) throw new IllegalStateException(
-        s"expire rejected: crashed/unfinished fold '${pend.head}' on " +
-          s"$store must be re-run to completion first — expiry's drops " +
-          "would race its drop phase")
-      val parts = fs.listStatus(root).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("ds="))
-        .map(_.stripPrefix("ds=")).toSeq
-      val dropped = parts.filter { ds =>
-        !ds.startsWith("r_") && effectiveDate(ds) <= cutoff
-      }
-      val retained = parts.filter { ds =>
-        ds.startsWith("r_") ||
-          (ds.startsWith("c_") && effectiveDate(ds) > cutoff)
-      }
-      dropped.foreach { ds =>
-        fs.delete(new org.apache.hadoop.fs.Path(root,
-          s"_compact_${ds}_done"), false)
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"ds=$ds"), true)
-      }
-      // the durable policy horizon (see [[expire]]) — same record, same
-      // ledger-keyed-inventory consumer, path-store layout
       recordExpiredThrough(fs, root, cutoff)
       ExpireResult(dropped.sorted, retained.sorted)
-    } finally releaseLease(spark, store)
+    } finally releaseLease(spark, root.toString)
   }
 
   /** Rewrite EVERY row of a per-date store through `transform`, folding
     * all partitions into one `r_<gen>` generation partition — the
     * whole-store maintenance primitive under
-    * [[IncrementalVectors.splitHotCells]] (a transform that must touch
-    * an arbitrary subset of rows has to rewrite the partitions holding
-    * them; folding while at it is [[compact]] for free). Same marker
-    * protocol, same crash-resume windows, same bucket-spec preservation;
-    * `gen` must be fresh per pass (a repeated gen whose rewrite already
-    * completed is a no-op — the partitions are already folded into its
-    * label). Per-date history is consumed by design: re-running an old
-    * ingestion date is no longer possible afterwards, exactly as with a
-    * date-horizon compact. */
-  def rewrite(spark: SparkSession, table: String, gen: String,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      maxAgeHours: Option[Double] = defaultAge): Unit =
-    foldTable(spark, table, s"r_$gen", _ => true, minOlds = 1, transform,
-      maxAgeHours)
+    * [[IncrementalVectors.splitHotCells]] and the deletion-propagation
+    * primitive (a transform that must touch an arbitrary subset of rows
+    * has to rewrite the partitions holding them; folding while at it is
+    * [[compact]] for free). Same marker protocol, same crash-resume
+    * windows, same layout preservation; `gen` must be fresh per pass (a
+    * repeated gen whose rewrite already completed is a no-op — the
+    * partitions are already folded into its label). Per-date history is
+    * consumed by design: re-running an old ingestion date is no longer
+    * possible afterwards, exactly as with a date-horizon compact. */
+  def rewrite(spark: SparkSession, loc: StoreLoc, gen: String,
+      transform: DataFrame => DataFrame): Unit =
+    fold(spark, loc, s"r_$gen", _ => true, minOlds = 1, transform)
 
-  /** Shared fold machinery: append the transformed union of the selected
+  /** Shared fold machinery: publish the transformed union of the selected
     * old partitions as `label`, commit with a marker, then drop the olds
     * (see the object scaladoc for the crash-window analysis). */
-  private def foldTable(spark: SparkSession, table: String, label: String,
+  private def fold(spark: SparkSession, loc: StoreLoc, label: String,
       foldable: String => Boolean, minOlds: Int,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      maxAgeHours: Option[Double] = defaultAge): Unit = {
-    val cat = spark.sessionState.catalog
-    val meta = cat.getTableMetadata(TableIdentifier(table))
-    require(meta.partitionColumnNames == Seq("ds"),
-      s"$table is not a per-date store (partitions: ${meta.partitionColumnNames})")
-    val fs = new org.apache.hadoop.fs.Path(meta.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(
-      meta.location.toString, s"_compact_${label}_done")
-
-    def olds(): Seq[String] = partitions(spark, table)
-      .filter(ds => ds != label && foldable(ds))
-
+      transform: DataFrame => DataFrame): Unit = {
+    if (!loc.mutable(spark)) return
+    val root = loc.root(spark)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(root, s"_compact_${label}_done")
     // hold the maintenance lease for the whole fold (appends fail fast
     // against it); released on any in-process exit — a hard crash leaves
     // it for the dead-pid / stale-by-age sweep
-    acquireLease(spark, meta.location.toString, maxAgeHours)
-    try withPendingSentinel(fs,
-        new org.apache.hadoop.fs.Path(meta.location), label)(freshNoOp = () => {
+    acquireLease(spark, root.toString)
+    try withPendingSentinel(fs, root, label)(freshNoOp = () => {
       // fresh invocation (no crashed fold to resume — the sentinel
       // outlives both the marker and the drops, so a crash at ANY point
       // leaves it): anything this label left on disk is residue of a
@@ -899,54 +734,39 @@ object StoreMaintenance {
       // resolved BEFORE the sentinel is planted, so concurrent readers
       // never see "sentinel + no marker" and exclude the committed label.
       if (fs.exists(marker)) fs.delete(marker, false)
-      partitions(spark, table).contains(label)
+      val committed = loc.partitions(spark).contains(label)
+      if (committed) loc.unstage(spark, label)
+      committed
     }) { _ =>
-      foldBody(spark, table, label, minOlds, transform, fs, marker, olds _,
-        pendingFile(meta.location.toString, label))
-    } finally releaseLease(spark, meta.location.toString)
+      foldBody(spark, loc, label, foldable, minOlds, transform, fs, marker)
+    } finally releaseLease(spark, root.toString)
   }
 
-  private def foldBody(spark: SparkSession, table: String, label: String,
-      minOlds: Int,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      fs: org.apache.hadoop.fs.FileSystem, marker: org.apache.hadoop.fs.Path,
-      olds: () => Seq[String], pending: org.apache.hadoop.fs.Path): Unit = {
-    val cat = spark.sessionState.catalog
-    val meta = cat.getTableMetadata(TableIdentifier(table))
+  private def foldBody(spark: SparkSession, loc: StoreLoc, label: String,
+      foldable: String => Boolean, minOlds: Int,
+      transform: DataFrame => DataFrame,
+      fs: org.apache.hadoop.fs.FileSystem,
+      marker: org.apache.hadoop.fs.Path): Unit = {
+    val root = marker.getParent
+    def olds(): Seq[String] = loc.partitions(spark)
+      .filter(ds => ds != label && foldable(ds))
     if (!fs.exists(marker)) {
       val old = olds()
       // below the threshold a fold never starts, so there is nothing to
       // resume and nothing worth folding
-      if (old.size < minOlds) return
+      if (old.size < minOlds) { loc.unstage(spark, label); return }
       // at/above the threshold with no marker, a `label` partition can
       // only be a crashed fold's own uncommitted partial write (a fresh
       // invocation with a committed label returned in freshNoOp above,
       // and appends were sentinel-blocked throughout the crashed fold) —
       // the old partitions are intact and authoritative: drop it and redo
-      if (partitions(spark, table).contains(label))
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (ds='$label')")
-      val folded = transform(spark.table(table)
-          .filter(col("ds").isin(old.map(x => x: Any): _*))
-          .drop("ds"))
-        .withColumn("ds", lit(label))
-      // same bucketed-append path as the daily ingests — spec preserved
-      val base = folded.write.mode("append").partitionBy("ds")
-      val writer = meta.bucketSpec match {
-        case Some(b) =>
-          val bb = base.bucketBy(b.numBuckets,
-            b.bucketColumnNames.head, b.bucketColumnNames.tail: _*)
-          if (b.sortColumnNames.nonEmpty)
-            bb.sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*)
-          else bb
-        case None => base
-      }
-      writer.saveAsTable(table)
+      if (loc.partitions(spark).contains(label)) loc.dropPartition(spark, label)
+      loc.publish(spark, transform(loc.read(spark, old)), label)
       // a generation label's durable coverage sidecar lands BEFORE the
       // commit marker (pre-marker crash redoes both; post-marker it is
       // already durable) — the ledger-keyed inventory's exact ordering
       // token, replacing the cross-filesystem mtime inference
-      if (label.startsWith("r_"))
-        writeFoldedSet(fs, marker.getParent, label, old)
+      if (label.startsWith("r_")) writeFoldedSet(fs, root, label, old)
       // commit point: from here the consolidated partition is the truth
       fs.create(marker, true).close()
     }
@@ -954,8 +774,8 @@ object StoreMaintenance {
     // a consumed generation label's own sidecar goes with its partition
     // (its coverage was merged into this label's sidecar above)
     olds().foreach { ds =>
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (ds='$ds')")
-      if (ds.startsWith("r_")) deleteFoldedSet(fs, marker.getParent, ds)
+      loc.dropPartition(spark, ds)
+      if (ds.startsWith("r_")) deleteFoldedSet(fs, root, ds)
     }
     // EPILOGUE ORDER is reader-load-bearing: the sentinel must go before
     // the marker. Readers treat "sentinel present + marker absent" as
@@ -966,110 +786,6 @@ object StoreMaintenance {
     // readers see a quiescent store (olds dropped, label committed —
     // scan-all is correct), and the worst crash leaves only an orphan
     // marker, cleaned at the next same-label entry above.
-    fs.delete(pending, false)
-    fs.delete(marker, false)
-    ()
-  }
-
-  /** [[compact]] for the PATH-based per-date stores (the q109 span-count
-    * store: plain parquet under `<store>/ds=<date>/`). Same horizon
-    * semantics, same marker protocol, same optional additive `merge`
-    * (the span store's (h, cnt) rows sum across dates); the fold is
-    * written to a sibling staging dir and MOVED into place as the
-    * consolidated partition (a filesystem rename — writing into the
-    * store root while scanning it would race the reader's file
-    * listing). */
-  def compactPath(spark: SparkSession, store: String, upTo: String,
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
-        = identity,
-      maxAgeHours: Option[Double] = defaultAge): Unit =
-    // 0/1 olds is a no-win rename: an existing label dir next to <2 olds
-    // is a prior COMPLETED fold, so minOlds = 2 keeps the partial rule
-    // sound (the table-store compact's reasoning, verbatim)
-    foldPath(spark, store, s"c_$upTo",
-      ds => effectiveDate(ds) <= upTo, minOlds = 2, merge, maxAgeHours)
-
-  /** [[rewrite]] for the PATH-based per-date stores: rewrite EVERY row
-    * through `transform`, folding all `ds` partitions into one `r_<gen>`
-    * generation partition — same marker protocol and staging-rename as
-    * [[compactPath]], same fresh-gen and consumed-history contract as
-    * [[rewrite]]. This is the deletion-propagation primitive for path
-    * stores (a tombstone pass must touch an arbitrary subset of rows, so
-    * it has to rewrite the partitions holding them). */
-  def rewritePath(spark: SparkSession, store: String, gen: String,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      maxAgeHours: Option[Double] = defaultAge): Unit =
-    foldPath(spark, store, s"r_$gen", _ => true, minOlds = 1, transform,
-      maxAgeHours)
-
-  private def foldPath(spark: SparkSession, store: String, label: String,
-      foldable: String => Boolean, minOlds: Int,
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      maxAgeHours: Option[Double]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val labelDir = new org.apache.hadoop.fs.Path(root, s"ds=$label")
-    val marker = new org.apache.hadoop.fs.Path(root, s"_compact_${label}_done")
-    val staging = new org.apache.hadoop.fs.Path(
-      root.getParent, s"${root.getName}_staging_$label")
-    acquireLease(spark, store, maxAgeHours)
-    try withPendingSentinel(fs, root, label)(freshNoOp = () => {
-      // fresh invocation — no crashed fold to resume, so on-disk label
-      // state is a PRIOR COMPLETED fold's (see foldBody: the sentinel
-      // outlives marker and drops). Clean an orphan marker; a repeated
-      // label is a no-op, never a drop-and-redo over the committed dir —
-      // resolved BEFORE the sentinel lands, so readers never transiently
-      // exclude the committed label (the table fold's reasoning).
-      if (fs.exists(marker)) fs.delete(marker, false)
-      if (fs.exists(labelDir)) { fs.delete(staging, true); true } else false
-    }) { _ =>
-      foldPathBody(spark, label, foldable, minOlds, merge, root, fs,
-        labelDir, marker, staging)
-    } finally releaseLease(spark, store)
-  }
-
-  private def foldPathBody(spark: SparkSession, label: String,
-      foldable: String => Boolean, minOlds: Int,
-      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      root: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem,
-      labelDir: org.apache.hadoop.fs.Path, marker: org.apache.hadoop.fs.Path,
-      staging: org.apache.hadoop.fs.Path): Unit = {
-    def olds(): Seq[org.apache.hadoop.fs.Path] = fs.listStatus(root)
-      .filter(_.isDirectory).map(_.getPath)
-      .filter { p =>
-        val ds = p.getName.stripPrefix("ds=")
-        p.getName.startsWith("ds=") && ds != label && foldable(ds)
-      }.toSeq
-
-    if (!fs.exists(marker)) {
-      val old = olds()
-      // below the threshold a fold never starts — nothing to resume
-      if (old.size < minOlds) { fs.delete(staging, true); return }
-      // resuming at/above the threshold, no marker: a label dir can only
-      // be the crashed fold's own uncommitted write (the stage-rename
-      // landed but the marker didn't) — olds are intact, drop it and redo
-      if (fs.exists(labelDir)) fs.delete(labelDir, true)
-      fs.delete(staging, true)
-      merge(spark.read.parquet(old.map(_.toString): _*))
-        .write.mode("overwrite").parquet(staging.toString)
-      // the staging dir becomes the consolidated partition in one rename;
-      // its _SUCCESS sidecar is harmless to partition discovery
-      if (!fs.rename(staging, labelDir))
-        throw new java.io.IOException(s"rename $staging -> $labelDir failed")
-      // durable coverage token for generation labels — see the table fold
-      if (label.startsWith("r_"))
-        writeFoldedSet(fs, root, label,
-          old.map(_.getName.stripPrefix("ds=")))
-      fs.create(marker, true).close()
-    }
-    olds().foreach { p =>
-      fs.delete(p, true)
-      val ds = p.getName.stripPrefix("ds=")
-      if (ds.startsWith("r_")) deleteFoldedSet(fs, root, ds)
-    }
-    // sentinel BEFORE marker — the reader-ordering rule (see foldBody)
     fs.delete(pendingFile(root.toString, label), false)
     fs.delete(marker, false)
     ()
@@ -1077,7 +793,7 @@ object StoreMaintenance {
 
   /** Anti-join transform for DELETION PROPAGATION (tombstone passes): drops
     * every row whose `keyCol` appears in `tombstones` (whose FIRST column
-    * is read as the key set). Feed it to [[rewrite]] / [[rewritePath]] to
+    * is read as the key set). Feed it to [[rewrite]] to
     * physically remove a document's rows from a per-date store — an
     * opt-out or takedown must make the rows GONE from the files, not
     * masked at read time. The tombstone set is takedown-list-sized

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.HeavyHitters
-import graft.operators.{Search, Stats, TextProfile}
+import graft.operators.{Search, Stats, TableLoc, TextProfile}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -659,7 +659,7 @@ object Quality {
       graft.operators.IncrementalPostings.appendCountsBucketed(
         docs.filter(pmod(col("doc_id"), lit(3L)) === d), tbl, s"d$d")
     }
-    graft.operators.StoreMaintenance.compact(s, tbl, "d1",
+    graft.operators.StoreMaintenance.compact(s, TableLoc(tbl), "d1",
       merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
     val out = graft.operators.IncrementalPostings.reportBucketed(s, tbl)
       .localCheckpoint() // table dropped below; the checkpoint holds the data

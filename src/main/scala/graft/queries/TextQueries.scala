@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Fnv64, TextFunctions => TF}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, TableLoc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -296,7 +296,8 @@ object TextQueries {
       ingest(0); ingest(1)
     }
     graft.Phases.timed("maintain") {
-      graft.operators.StoreMaintenance.compact(s, s"${base}_codes", "d1")
+      graft.operators.StoreMaintenance.compact(s, TableLoc(s"${base}_codes"),
+        "d1")
     }
     graft.Phases.timed("build") { ingest(2) }
     // own phase label: a serve regression AFTER a fold (e.g. a bucket
@@ -1257,7 +1258,7 @@ object TextQueries {
             slice.select(col("id").as("doc_id"), col("text")),
             s"${base}_mh", d),
         drop = (sp, d) => graft.operators.IncrementalStore
-          .dropDate(sp, Seq(s"${base}_mh"), d),
+          .dropDate(sp, Seq(TableLoc(s"${base}_mh")), d),
         // loose estimation threshold (q91's note): exact verification
         // below does the filtering; as-of the date for reprocess parity
         report = Some((sp, d) => graft.operators.IncrementalDedup
@@ -1281,7 +1282,8 @@ object TextQueries {
             s"${base}_post", d)
         },
         drop = (sp, d) => graft.operators.IncrementalStore
-          .dropDate(sp, Seq(s"${base}_post", s"${base}_post_dl"), d)))
+          .dropDate(sp,
+            Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc), d)))
     val summary = graft.Phases.timed("orchestrate") {
       new graft.operators.CurateJob(s, graft.operators.CurateConfig(
         "curate", s"$tmp/in", s"$tmp/markers", s"$tmp/reports", families))
@@ -1440,7 +1442,7 @@ object TextQueries {
           .appendNorms(slice, s"${base}_post", d)
       },
       drop = (sp, d) => graft.operators.IncrementalStore.dropDate(sp,
-        Seq(s"${base}_post", s"${base}_post_dl"), d)))
+        Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc), d)))
     val curateCfg = graft.operators.CurateConfig("cur", s"$tmp/in",
       s"$tmp/curmarkers", s"$tmp/reports", curateFams,
       suppressIds = sp => graft.operators.TakedownJob.appliedIds(
@@ -1527,7 +1529,8 @@ object TextQueries {
     val families = Seq(
       graft.operators.MaintainFamily("postings",
         maintain = (sp, w) => {
-          graft.operators.StoreMaintenance.compact(sp, s"${base}_post", w,
+          graft.operators.StoreMaintenance.compact(sp,
+            TableLoc(s"${base}_post"), w,
             merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
           graft.operators.IncrementalPostings
             .compactNorms(sp, s"${base}_post", w)
@@ -1538,7 +1541,7 @@ object TextQueries {
             countDistinct(col("doc_id")).as("n_docs")))),
       graft.operators.MaintainFamily("sq8",
         maintain = (sp, w) => graft.operators.StoreMaintenance
-          .compact(sp, s"${base}v_codes", w)))
+          .compact(sp, TableLoc(s"${base}v_codes"), w)))
     val summary = graft.Phases.timed("maintain") {
       new graft.operators.MaintainJob(s, graft.operators.MaintainConfig(
         "maint", s"$tmp/markers", s"$tmp/audits", families)).run("d1")
@@ -1643,9 +1646,10 @@ object TextQueries {
             .appendNorms(slice, s"${base}_post", d)
         },
         drop = (sp, d) => graft.operators.IncrementalStore.dropDate(sp,
-          Seq(s"${base}_post", s"${base}_post_dl"), d),
+          Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc), d),
         foldedThrough = Some(sp => graft.operators.StoreMaintenance
-          .foldHorizon(sp, Seq(s"${base}_post", s"${base}_post_dl"))))),
+          .foldHorizon(sp,
+            Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc))))),
       suppressIds = sp => graft.operators.TakedownJob.appliedIds(
         sp, s"$tmp/req", s"$tmp/tdmarkers"),
       suppressCol = "doc_id")
@@ -1660,8 +1664,8 @@ object TextQueries {
         graft.operators.MaintainConfig("maint", s"$tmp/mmarkers",
           s"$tmp/audits", Seq(graft.operators.MaintainFamily("postings",
             maintain = (sp, w) => {
-              graft.operators.StoreMaintenance.compact(sp, s"${base}_post",
-                w, merge = _.groupBy("term", "doc_id")
+              graft.operators.StoreMaintenance.compact(sp,
+                TableLoc(s"${base}_post"), w, merge = _.groupBy("term", "doc_id")
                   .agg(sum(col("tf")).as("tf")))
               graft.operators.IncrementalPostings
                 .compactNorms(sp, s"${base}_post", w)
@@ -1725,7 +1729,7 @@ object TextQueries {
     }
     graft.Phases.timed("maintain") {
       tbls.foreach { t =>
-        val res = graft.operators.StoreMaintenance.expire(s, t, "d0")
+        val res = graft.operators.StoreMaintenance.expire(s, TableLoc(t), "d0")
         require(res.dropped == Seq("d0") && res.retained.isEmpty,
           s"expiry must drop exactly d0 from $t: $res")
       }
@@ -1809,7 +1813,7 @@ object TextQueries {
 
   /** q189: RETENTION INSIDE THE MAINTENANCE WINDOW
     * ([[graft.operators.MaintainFamily.expire]]) — q187 proved
-    * `expire`/`expirePath` per store; this runs the policy where a
+    * `expire` per store; this runs the policy where a
     * deployment actually runs it: ONE marker-committed [[graft
     * .operators.MaintainJob]] window that folds the lexical store at
     * the horizon (tf additive merge + norms) and THEN expires both
@@ -1848,13 +1852,14 @@ object TextQueries {
     }
     val fam = graft.operators.MaintainFamily("postings",
       maintain = (sp, w) => {
-        graft.operators.StoreMaintenance.compact(sp, tbl, w,
+        graft.operators.StoreMaintenance.compact(sp, TableLoc(tbl), w,
           merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
         graft.operators.IncrementalPostings.compactNorms(sp, tbl, w)
       },
       expire = Some((sp, w) => {
-        val a = graft.operators.StoreMaintenance.expire(sp, tbl, w)
-        val b = graft.operators.StoreMaintenance.expire(sp, s"${tbl}_dl", w)
+        val a = graft.operators.StoreMaintenance.expire(sp, TableLoc(tbl), w)
+        val b = graft.operators.StoreMaintenance.expire(sp,
+          TableLoc(s"${tbl}_dl"), w)
         graft.operators.StoreMaintenance.ExpireResult(
           (a.dropped ++ b.dropped).distinct.sorted,
           (a.retained ++ b.retained).distinct.sorted)
@@ -1928,9 +1933,10 @@ object TextQueries {
             .appendNorms(slice, s"${base}_post", d)
         },
         drop = (sp, d) => graft.operators.IncrementalStore.dropDate(sp,
-          Seq(s"${base}_post", s"${base}_post_dl"), d),
+          Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc), d),
         foldedThrough = Some(sp => graft.operators.StoreMaintenance
-          .foldHorizon(sp, Seq(s"${base}_post", s"${base}_post_dl"))))),
+          .foldHorizon(sp,
+            Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc))))),
       suppressIds = sp => graft.operators.TakedownJob.appliedIds(
         sp, s"$tmp/req", s"$tmp/tdmarkers"),
       suppressCol = "doc_id")
@@ -2128,7 +2134,7 @@ object TextQueries {
     * `spans` registry entry driven through [[graft.OpsMain]]: curate
     * three dates of the documents corpus into the window-hash count
     * store (`--STORE_DIR`-rooted plain-parquet `ds=` layout), run a
-    * maintenance window at d1 (the ADDITIVE compactPath fold — per-hash
+    * maintenance window at d1 (the ADDITIVE path-store compact fold — per-hash
     * counts sum across dates, so the c_d1 label serves bit-equal), then
     * take down the % 7 = 3 documents. A subtract family cannot delete
     * by id alone — counts carry no doc ids — so the registration is
@@ -2337,7 +2343,7 @@ object TextQueries {
     * [[graft.OpsMain]]: three dates of labeled documents curated into
     * the additive trigram-count + prior store (`--LANG_COL` names the
     * label column — the one curate input the other families don't
-    * read), a maintenance window at d1 (the additive compactPath folds
+    * read), a maintenance window at d1 (the additive path-store compact folds
     * — counts sum per (cand, tri), priors per cand, so the compacted
     * model scores bit-equal — plus the model-shape audit), then
     * takedown of the % 7 = 3 documents: EXACT UNLEARNING, the decrement
@@ -2458,8 +2464,8 @@ object TextQueries {
       require(r.contains("\"processed\":[\"r0\"]"), r)
     }
     val out = graft.Phases.timed("serve") {
-      val storeTok = graft.operators.IncrementalStore
-        .consistentScan(s, s"${base}_tok_cells")
+      val storeTok = graft.operators.StoreMaintenance
+        .consistentScan(s, TableLoc(s"${base}_tok_cells"))
         .select(expr("id div 8").as("doc"),
           pmod(col("id"), lit(8)).cast("int").as("pos"),
           col("e").as("emb"), col("n").as("nrm"))

@@ -34,7 +34,8 @@ class CurateJobSpec extends SparkSpec {
         append = (slice, d) => IncrementalDedup.appendBandsBucketed(
           slice.select(col("id").as("doc_id"), col("text")),
           s"${base}_mh", d),
-        drop = (sp, d) => IncrementalStore.dropDate(sp, Seq(s"${base}_mh"), d),
+        drop = (sp, d) =>
+          IncrementalStore.dropDate(sp, Seq(TableLoc(s"${base}_mh")), d),
         report = Some((sp, d) => IncrementalDedup.newPairsBucketed(
           sp, s"${base}_mh", d, threshold = 0.2, upTo = Some(d))),
         exists = Some(sp => sp.catalog.tableExists(s"${base}_mh"))),
@@ -52,7 +53,7 @@ class CurateJobSpec extends SparkSpec {
             s"${base}_post", d)
         },
         drop = (sp, d) => IncrementalStore.dropDate(sp,
-          Seq(s"${base}_post", s"${base}_post_dl"), d)))
+          Seq(s"${base}_post", s"${base}_post_dl").map(TableLoc), d)))
   }
 
   private def dropStores(base: String): Unit =
@@ -172,15 +173,15 @@ class CurateJobSpec extends SparkSpec {
             "cur_f_post", d)
         },
         drop = (sp, d) => IncrementalStore.dropDate(sp,
-          Seq("cur_f_post", "cur_f_post_dl"), d),
+          Seq("cur_f_post", "cur_f_post_dl").map(TableLoc), d),
         foldedThrough = Some(sp => StoreMaintenance.foldHorizon(sp,
-          Seq("cur_f_post", "cur_f_post_dl")))))
+          Seq("cur_f_post", "cur_f_post_dl").map(TableLoc)))))
       val s1 = job(tmp, fams).run()
       assert(s1.processedDates == Seq("d0", "d1", "d2"), s1.toString)
       val pre = IncrementalPostings.reportBucketed(spark, "cur_f_post")
         .localCheckpoint()
       // retention consumes d0+d1
-      StoreMaintenance.compact(spark, "cur_f_post", "d1",
+      StoreMaintenance.compact(spark, TableLoc("cur_f_post"), "d1",
         merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
       IncrementalPostings.compactNorms(spark, "cur_f_post", "d1")
       val fs = org.apache.hadoop.fs.FileSystem.get(

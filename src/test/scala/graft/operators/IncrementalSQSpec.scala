@@ -326,7 +326,7 @@ class IncrementalSQSpec extends SparkSpec {
         IncrementalSQ.appendDate(slice(d), "isq_cmp", s"d$d"))
       val before = IncrementalSQ.search(spark, "isq_cmp", queries)
         .localCheckpoint()
-      StoreMaintenance.compact(spark, "isq_cmp_codes", "d1")
+      StoreMaintenance.compact(spark, TableLoc("isq_cmp_codes"), "d1")
       val parts = spark.sql("SHOW PARTITIONS isq_cmp_codes").collect()
         .map(_.getString(0)).toSet
       assert(parts == Set("ds=c_d1"), s"fold must consolidate: $parts")

@@ -321,8 +321,8 @@ class IncrementalSemanticSpec extends SparkSpec {
       }
       build("ism_cmp", 0 until 2)
       // band and vector rows are disjoint per (id, date) — no merge
-      StoreMaintenance.compact(spark, "ism_cmp_bands", "d1")
-      StoreMaintenance.compact(spark, "ism_cmp_vecs", "d1")
+      StoreMaintenance.compact(spark, TableLoc("ism_cmp_bands"), "d1")
+      StoreMaintenance.compact(spark, TableLoc("ism_cmp_vecs"), "d1")
       build("ism_cmp", 2 until 3) // a NEW date lands after compaction
       build("ism_cmp_ref", 0 until 3)
       sameRows(IncrementalSemantic.newPairs(spark, "ism_cmp", "d2", 0.95),

@@ -251,7 +251,7 @@ class IncrementalVectorsSpec extends SparkSpec {
         .write.mode("errorifexists").saveAsTable("ivs_mid_ctr_next")
       release()
       val ctr = spark.table("ivs_mid_ctr_next").drop("gen")
-      StoreMaintenance.rewrite(spark, "ivs_mid_cells", "g1",
+      StoreMaintenance.rewrite(spark, TableLoc("ivs_mid_cells"), "g1",
         transform = df => {
           val re = KMeans.assign(df.select(col("id"), col("e")), ctr,
               idCol = "id", vecCol = "e")

@@ -25,7 +25,7 @@ class MaintainJobSpec extends SparkSpec {
     MaintainFamily("post",
       maintain = (sp, w) => {
         calls.incrementAndGet()
-        StoreMaintenance.compact(sp, tbl, w,
+        StoreMaintenance.compact(sp, TableLoc(tbl), w,
           merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
       },
       audit = Some((sp, _) => sp.table(tbl)
@@ -118,7 +118,8 @@ class MaintainJobSpec extends SparkSpec {
       // expire at cutoff w — the fresh label's content is provably ≤ w,
       // so the policy drops it whole (exact retention, nothing stranded)
       val fam = postFamily("mnt_e", calls).copy(
-        expire = Some((sp, w) => StoreMaintenance.expire(sp, "mnt_e", w)),
+        expire = Some((sp, w) =>
+          StoreMaintenance.expire(sp, TableLoc("mnt_e"), w)),
         audit = Some((sp, _) =>
           StoreInventory.dates(sp, Seq("post" -> "mnt_e"))))
       val s1 = job(tmp, Seq(fam)).run("d1")

@@ -44,7 +44,7 @@ class StoreInventorySpec extends SparkSpec {
       assert(StoreInventory.missing(spark, fams).isEmpty)
 
       // 2. a retention fold is NOT lag: tf's d0+d1 live under c_d1
-      StoreMaintenance.compact(spark, tbl, "d1",
+      StoreMaintenance.compact(spark, TableLoc(tbl), "d1",
         merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
       assert(StoreInventory.missing(spark, fams).isEmpty,
         "pre-horizon absences live under the consolidated label")
@@ -164,18 +164,18 @@ class StoreInventorySpec extends SparkSpec {
       // c_* credit vanishes WITH the dropped label, and only the
       // durable policy record keeps d0/d1 from flagging forever
       // (ADVICE r18: a --RETAIN + --LEDGER deployment must stay quiet)
-      StoreMaintenance.compact(spark, tbl, "d1",
+      StoreMaintenance.compact(spark, TableLoc(tbl), "d1",
         merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
-      StoreMaintenance.expire(spark, tbl, "d1")
+      StoreMaintenance.expire(spark, TableLoc(tbl), "d1")
       // the norms table expires its plain dates directly (no fold first)
-      StoreMaintenance.expire(spark, s"${tbl}_dl", "d1")
+      StoreMaintenance.expire(spark, TableLoc(s"${tbl}_dl"), "d1")
       assert(StoreInventory.missingVsLedger(spark, fams,
         s"$tmp/markers").isEmpty,
         "policy-expired dates must credit, not read as lag")
       // the curation fence sees the expiry too: a marker-deleted
       // reprocess of an expired date must refuse (resurrection)
       assert(StoreMaintenance.retentionHorizon(spark,
-        Seq(tbl, s"${tbl}_dl")) == Some("d1"))
+        Seq(tbl, s"${tbl}_dl").map(TableLoc)) == Some("d1"))
       // a NON-expired date hand-dropped afterwards still flags
       spark.sql(s"ALTER TABLE ${tbl}_dl DROP PARTITION (ds='d2')")
       val lag = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")

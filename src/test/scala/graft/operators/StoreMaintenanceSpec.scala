@@ -38,13 +38,47 @@ class StoreMaintenanceSpec extends SparkSpec {
   private val tfMerge: DataFrame => DataFrame =
     _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf"))
 
+  /** One store kind the protocol specs run over: the same 3-date postings
+    * store as a bucketed table or as a path store, with the kind's own
+    * append, report and label-planting (a crash simulation's partial
+    * label write). */
+  private case class Kind(name: String, build: String => StoreLoc,
+      append: (StoreLoc, DataFrame, String) => Unit,
+      report: StoreLoc => DataFrame,
+      putLabel: (StoreLoc, DataFrame, String) => Unit,
+      drop: StoreLoc => Unit)
+
+  private lazy val kinds = Seq(
+    Kind("table",
+      build = t => { buildPostings(t); TableLoc(t) },
+      append = (l, d, ds) =>
+        IncrementalPostings.appendCountsBucketed(d, l.name, ds),
+      report = l => IncrementalPostings.reportBucketed(spark, l.name),
+      putLabel = (l, rows, label) => rows.withColumn("ds", lit(label))
+        .write.mode("append").partitionBy("ds")
+        .bucketBy(8, "term").sortBy("term").saveAsTable(l.name),
+      drop = l => spark.sql(s"DROP TABLE IF EXISTS ${l.name}")),
+    Kind("path",
+      build = t => {
+        val dir = java.nio.file.Files.createTempDirectory("smx-kind")
+          .toString + s"/$t"
+        (0 until 3).foreach(d => IncrementalPostings.appendCounts(
+          docs.filter(pmod(col("doc_id"), lit(3L)) === d), dir, s"d$d"))
+        PathLoc(dir)
+      },
+      append = (l, d, ds) => IncrementalPostings.appendCounts(d, l.name, ds),
+      report = l => IncrementalPostings.report(spark, l.name),
+      putLabel = (l, rows, label) =>
+        rows.write.mode("overwrite").parquet(s"${l.name}/ds=$label"),
+      drop = _ => ()))
+
   test("postings compaction: report bit-equal, files shrink, zero-exchange plan holds") {
     buildPostings("smx_post")
     try {
       val before = IncrementalPostings.reportBucketed(spark, "smx_post")
         .localCheckpoint()
       val filesBefore = dataFiles("smx_post").size
-      StoreMaintenance.compact(spark, "smx_post", "d1", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_post"), "d1", merge = tfMerge)
       assert(partitionsOf("smx_post") == Set("c_d1", "d2"),
         "d0+d1 must fold into c_d1; d2 must survive untouched")
       assert(dataFiles("smx_post").size < filesBefore,
@@ -63,13 +97,13 @@ class StoreMaintenanceSpec extends SparkSpec {
           s"compacted store must not reshuffle:\n$plan")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       // recompaction folds the consolidated partition again
-      StoreMaintenance.compact(spark, "smx_post", "d2", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_post"), "d2", merge = tfMerge)
       assert(partitionsOf("smx_post") == Set("c_d2"))
       sameRows(IncrementalPostings.reportBucketed(spark, "smx_post"), before,
         "recompaction to a later horizon must stay bit-equal")
       // re-running a COMPLETED compaction must not eat the consolidated
       // partition (the marker is gone, but so are the foldable olds)
-      StoreMaintenance.compact(spark, "smx_post", "d2", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_post"), "d2", merge = tfMerge)
       assert(partitionsOf("smx_post") == Set("c_d2"))
       sameRows(IncrementalPostings.reportBucketed(spark, "smx_post"), before,
         "re-running a completed compaction must be a no-op")
@@ -82,13 +116,13 @@ class StoreMaintenanceSpec extends SparkSpec {
       val control = spark.table("exp_t")
         .filter(col("ds") =!= "d0").drop("ds").localCheckpoint()
       // plain-date expiry: d0 gone, content == d1+d2
-      val r1 = StoreMaintenance.expire(spark, "exp_t", "d0")
+      val r1 = StoreMaintenance.expire(spark, TableLoc("exp_t"), "d0")
       assert(r1.dropped == Seq("d0") && r1.retained.isEmpty, r1.toString)
       assert(partitionsOf("exp_t") == Set("d1", "d2"))
       sameRows(spark.table("exp_t").drop("ds"), control,
         "expiry must drop exactly the cutoff dates' rows")
       // idempotent re-run: nothing left to drop
-      val r2 = StoreMaintenance.expire(spark, "exp_t", "d0")
+      val r2 = StoreMaintenance.expire(spark, TableLoc("exp_t"), "d0")
       assert(r2.dropped.isEmpty && r2.retained.isEmpty, r2.toString)
       // fold d1 into c_d1 (single old d1 + d2 stays; minOlds=2 needs
       // two — refold with d2 horizon excluded, so compact at d2 over
@@ -97,19 +131,19 @@ class StoreMaintenanceSpec extends SparkSpec {
 
     buildPostings("exp_l")
     try {
-      StoreMaintenance.compact(spark, "exp_l", "d1", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("exp_l"), "d1", tfMerge)
       assert(partitionsOf("exp_l") == Set("c_d1", "d2"))
       val keepAll = spark.table("exp_l").drop("ds").localCheckpoint()
       // cutoff BEFORE the label's horizon: c_d1 may hold d0 rows but
       // cannot be split (per-row dates are consumed) — skipped loud in
       // `retained`, nothing dropped
-      val r3 = StoreMaintenance.expire(spark, "exp_l", "d0")
+      val r3 = StoreMaintenance.expire(spark, TableLoc("exp_l"), "d0")
       assert(r3.dropped.isEmpty && r3.retained == Seq("c_d1"), r3.toString)
       sameRows(spark.table("exp_l").drop("ds"), keepAll,
         "a skipped label must keep every row")
       // ALIGNED horizon: cutoff d1 drops the whole label — exactly the
       // dates folded through it
-      val r4 = StoreMaintenance.expire(spark, "exp_l", "d1")
+      val r4 = StoreMaintenance.expire(spark, TableLoc("exp_l"), "d1")
       assert(r4.dropped == Seq("c_d1") && r4.retained.isEmpty, r4.toString)
       assert(partitionsOf("exp_l") == Set("d2"))
       // an unfinished fold blocks expiry (its drop phase would race)
@@ -127,7 +161,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       fs.create(sentinel, true).close()
       try {
         val ex = intercept[IllegalStateException] {
-          StoreMaintenance.expire(spark, "exp_l", "d2")
+          StoreMaintenance.expire(spark, TableLoc("exp_l"), "d2")
         }
         assert(ex.getMessage.contains("c_dX"), ex.getMessage)
       } finally fs.delete(sentinel, false)
@@ -144,10 +178,10 @@ class StoreMaintenanceSpec extends SparkSpec {
       IncrementalLangModel.appendCounts(slice(d), ctl, s"d$d"))
     // expire d0 from BOTH sub-stores (tri counts + priors)
     Seq("tri", "prior").foreach { sub =>
-      val r = StoreMaintenance.expirePath(spark, s"$store/$sub", "d0")
+      val r = StoreMaintenance.expire(spark, PathLoc(s"$store/$sub"), "d0")
       assert(r.dropped == Seq("d0") && r.retained.isEmpty, s"$sub: $r")
       // idempotent re-run
-      val r2 = StoreMaintenance.expirePath(spark, s"$store/$sub", "d0")
+      val r2 = StoreMaintenance.expire(spark, PathLoc(s"$store/$sub"), "d0")
       assert(r2.dropped.isEmpty, r2.toString)
     }
     val (m, p) = IncrementalLangModel.model(spark, store)
@@ -155,7 +189,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     sameRows(m, mc, "expired model must equal a train without the date")
     sameRows(p, pc, "expired priors must equal a train without the date")
     // an absent store expires to nothing, loudly-typed not crashing
-    val r3 = StoreMaintenance.expirePath(spark, s"$tmp/nope", "d0")
+    val r3 = StoreMaintenance.expire(spark, PathLoc(s"$tmp/nope"), "d0")
     assert(r3.dropped.isEmpty && r3.retained.isEmpty)
   }
 
@@ -180,7 +214,8 @@ class StoreMaintenanceSpec extends SparkSpec {
         fs0.create(StoreMaintenance.pendingFile(
           tableLocation("smx_crash"), "c_d1"), true).close()
       }
-      StoreMaintenance.compact(spark, "smx_crash", "d1", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_crash"), "d1",
+        merge = tfMerge)
       assert(partitionsOf("smx_crash") == Set("c_d1", "d2"))
       sameRows(IncrementalPostings.reportBucketed(spark, "smx_crash"), before,
         "resume must discard the unmarked partial and refold — no loss, no double count")
@@ -190,11 +225,13 @@ class StoreMaintenanceSpec extends SparkSpec {
         org.apache.spark.sql.catalyst.TableIdentifier("smx_crash"))
       val fs = new org.apache.hadoop.fs.Path(meta.location)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      StoreMaintenance.compact(spark, "smx_crash", "d2", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_crash"), "d2",
+        merge = tfMerge)
       val marker = new org.apache.hadoop.fs.Path(
         meta.location.toString, "_compact_c_d2_done")
       fs.create(marker, true).close() // re-plant the marker: "crashed post-commit"
-      StoreMaintenance.compact(spark, "smx_crash", "d2", merge = tfMerge)
+      StoreMaintenance.compact(spark, TableLoc("smx_crash"), "d2",
+        merge = tfMerge)
       assert(!fs.exists(marker), "a completed compact must clear its marker")
       assert(partitionsOf("smx_crash") == Set("c_d2"))
       sameRows(IncrementalPostings.reportBucketed(spark, "smx_crash"), before,
@@ -203,49 +240,46 @@ class StoreMaintenanceSpec extends SparkSpec {
   }
 
   test("a crashed fold blocks different-label folds AND appends until its same-label resume") {
-    buildPostings("smx_pend")
-    try {
-      val before = IncrementalPostings.reportBucketed(spark, "smx_pend")
-        .localCheckpoint()
-      val loc = tableLocation("smx_pend")
-      val fs = new org.apache.hadoop.fs.Path(loc)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // crash simulation at the WORST point: the c_d1 fold published its
-      // label partition but died before its marker — pending sentinel
-      // left, stale lease already swept. The orphaned c_d1 rows duplicate
-      // d0/d1, which are still present and authoritative.
-      spark.table("smx_pend").filter(col("ds").isin("d0", "d1")).drop("ds")
-        .withColumn("ds", lit("c_d1"))
-        .write.mode("append").partitionBy("ds")
-        .bucketBy(8, "term").sortBy("term").saveAsTable("smx_pend")
-      fs.create(StoreMaintenance.pendingFile(loc, "c_d1"), true).close()
-      // a DIFFERENT-label fold must refuse: it would read the orphaned
-      // c_d1 partition as an ordinary old and double-count every row
-      val exF = intercept[IllegalStateException] {
-        StoreMaintenance.rewrite(spark, "smx_pend", "g9", identity)
-      }
-      assert(exF.getMessage.contains("c_d1"), exF.getMessage)
-      // an append must refuse: if the crashed fold had already landed its
-      // marker, its resume skips to the drop phase and would DROP the
-      // appended date without folding it
-      val exA = intercept[IllegalStateException] {
-        IncrementalPostings.appendCountsBucketed(
-          docs.filter(col("doc_id") % 3 === 0), "smx_pend", "d9")
-      }
-      assert(exA.getMessage.contains("c_d1"), exA.getMessage)
-      // the SAME-label resume heals: partial discarded, refolded, sentinel
-      // cleared — report bit-equal, no loss, no double count
-      StoreMaintenance.compact(spark, "smx_pend", "d1", merge = tfMerge)
-      assert(!fs.exists(StoreMaintenance.pendingFile(loc, "c_d1")),
-        "a completed fold must clear its pending sentinel")
-      sameRows(IncrementalPostings.reportBucketed(spark, "smx_pend"), before,
-        "resume must serve exactly the pre-crash rows")
-      // and both blocked operations now proceed
-      IncrementalPostings.appendCountsBucketed(
-        docs.filter(col("doc_id") % 3 === 0), "smx_pend", "d9")
-      StoreMaintenance.compact(spark, "smx_pend", "d9", merge = tfMerge)
-      assert(partitionsOf("smx_pend") == Set("c_d9"))
-    } finally spark.sql("DROP TABLE IF EXISTS smx_pend")
+    kinds.foreach { k => withClue(s"[${k.name}] ") {
+      val store = k.build("smx_pend")
+      try {
+        val before = k.report(store).localCheckpoint()
+        val loc = store.root(spark).toString
+        val fs = new org.apache.hadoop.fs.Path(loc)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // crash simulation at the WORST point: the c_d1 fold published its
+        // label partition but died before its marker — pending sentinel
+        // left, stale lease already swept. The orphaned c_d1 rows duplicate
+        // d0/d1, which are still present and authoritative.
+        k.putLabel(store, store.scan(spark).filter(col("ds").isin("d0", "d1"))
+          .drop("ds"), "c_d1")
+        fs.create(StoreMaintenance.pendingFile(loc, "c_d1"), true).close()
+        // a DIFFERENT-label fold must refuse: it would read the orphaned
+        // c_d1 partition as an ordinary old and double-count every row
+        val exF = intercept[IllegalStateException] {
+          StoreMaintenance.rewrite(spark, store, "g9", identity)
+        }
+        assert(exF.getMessage.contains("c_d1"), exF.getMessage)
+        // an append must refuse: if the crashed fold had already landed its
+        // marker, its resume skips to the drop phase and would DROP the
+        // appended date without folding it
+        val exA = intercept[IllegalStateException] {
+          k.append(store, docs.filter(col("doc_id") % 3 === 0), "d9")
+        }
+        assert(exA.getMessage.contains("c_d1"), exA.getMessage)
+        // the SAME-label resume heals: partial discarded, refolded, sentinel
+        // cleared — report bit-equal, no loss, no double count
+        StoreMaintenance.compact(spark, store, "d1", merge = tfMerge)
+        assert(!fs.exists(StoreMaintenance.pendingFile(loc, "c_d1")),
+          "a completed fold must clear its pending sentinel")
+        sameRows(k.report(store), before,
+          "resume must serve exactly the pre-crash rows")
+        // and both blocked operations now proceed
+        k.append(store, docs.filter(col("doc_id") % 3 === 0), "d9")
+        StoreMaintenance.compact(spark, store, "d9", merge = tfMerge)
+        assert(store.partitions(spark).toSet == Set("c_d9"))
+      } finally k.drop(store)
+    } }
   }
 
   test("vector store compaction: both searches bit-equal, bucket pruning intact") {
@@ -265,8 +299,8 @@ class StoreMaintenanceSpec extends SparkSpec {
       val ivfBefore = IncrementalVectors.ivfSearch(spark, "smx_vec", queries)
         .localCheckpoint()
       // codes and cells rows are disjoint per (id, date) — no merge
-      StoreMaintenance.compact(spark, "smx_vec_codes", "d1")
-      StoreMaintenance.compact(spark, "smx_vec_cells", "d1")
+      StoreMaintenance.compact(spark, TableLoc("smx_vec_codes"), "d1")
+      StoreMaintenance.compact(spark, TableLoc("smx_vec_cells"), "d1")
       assert(partitionsOf("smx_vec_codes") == Set("c_d1", "d2"))
       sameRows(IncrementalVectors.adcSearch(spark, "smx_vec", queries),
         adcBefore, "ADC must be bit-equal across code-store compaction")
@@ -296,7 +330,8 @@ class StoreMaintenanceSpec extends SparkSpec {
           docs.filter(pmod(col("doc_id"), lit(3L)) === d), table, s"d$d")
       }
       ingest("smx_bands", 0 until 2)
-      StoreMaintenance.compact(spark, "smx_bands", "d1") // band rows: no merge
+      // band rows: no merge
+      StoreMaintenance.compact(spark, TableLoc("smx_bands"), "d1")
       ingest("smx_bands", 2 until 3) // a NEW date lands after compaction
       ingest("smx_bands_ref", 0 until 3)
       sameRows(
@@ -317,7 +352,7 @@ class StoreMaintenanceSpec extends SparkSpec {
         docs.filter(pmod(col("doc_id"), lit(3L)) === d), store, s"d$d")
     }
     val before = IncrementalSpans.report(docs, store).localCheckpoint()
-    StoreMaintenance.compactPath(spark, store, "d1",
+    StoreMaintenance.compact(spark, PathLoc(store), "d1",
       merge = _.groupBy("h").agg(sum(col("cnt")).as("cnt"))) // additive counts
     val dirs = new java.io.File(store).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -326,7 +361,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     sameRows(IncrementalSpans.report(docs, store), before,
       "span report must be bit-equal across path-store compaction")
     // idempotent re-run (no marker, 1 old partition → no-op)
-    StoreMaintenance.compactPath(spark, store, "d1")
+    StoreMaintenance.compact(spark, PathLoc(store), "d1")
     sameRows(IncrementalSpans.report(docs, store), before,
       "re-running the same compaction must be a no-op")
   }
@@ -356,7 +391,7 @@ class StoreMaintenanceSpec extends SparkSpec {
     }
     val merge: DataFrame => DataFrame =
       _.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-    StoreMaintenance.rewritePath(spark, store, "g1", merge)
+    StoreMaintenance.rewrite(spark, PathLoc(store), "g1", merge)
     val dirs = new java.io.File(store).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set("ds=r_g1"),
@@ -365,7 +400,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       == totalBefore,
       "the redone fold must carry exactly the old partitions' mass")
     // re-running a COMPLETED generation is a no-op (0 foldable olds)
-    StoreMaintenance.rewritePath(spark, store, "g1", merge)
+    StoreMaintenance.rewrite(spark, PathLoc(store), "g1", merge)
     assert(spark.read.parquet(store).agg(sum(col("cnt"))).head().getLong(0)
       == totalBefore, "a repeated completed gen must be a no-op")
     // and the fold lease was released
@@ -405,14 +440,16 @@ class StoreMaintenanceSpec extends SparkSpec {
           .write.mode("append").partitionBy("ds")
           .bucketBy(8, "term").sortBy("term").saveAsTable(t)
       // quiescent: the plain scan
-      sameRows(StoreMaintenance.consistentTable(spark, t).drop("ds"), full,
+      sameRows(
+        StoreMaintenance.consistentScan(spark, TableLoc(t)).drop("ds"), full,
         "quiescent store must read in full")
       // PRE-marker rewrite crash: sentinel down, label partial, olds
       // intact — the partial generation must be invisible
       fs.create(new org.apache.hadoop.fs.Path(root,
         "_fold_pending_r_g1"), true).close()
       putLabel(full.limit(100), "r_g1")
-      sameRows(StoreMaintenance.consistentTable(spark, t).drop("ds"), full,
+      sameRows(
+        StoreMaintenance.consistentScan(spark, TableLoc(t)).drop("ds"), full,
         "an uncommitted partial generation must be invisible")
       // POST-marker: label complete, olds pending drop — the label is
       // exclusive truth (a plain scan double-reads here)
@@ -422,7 +459,8 @@ class StoreMaintenanceSpec extends SparkSpec {
         "_compact_r_g1_done"), true).close()
       assert(spark.table(t).count() == 2 * full.count(),
         "the hazard: a plain scan double-reads the window")
-      sameRows(StoreMaintenance.consistentTable(spark, t).drop("ds"), full,
+      sameRows(
+        StoreMaintenance.consistentScan(spark, TableLoc(t)).drop("ds"), full,
         "a committed generation must be read exclusively")
       fs.delete(new org.apache.hadoop.fs.Path(root,
         "_compact_r_g1_done"), false)
@@ -448,7 +486,8 @@ class StoreMaintenanceSpec extends SparkSpec {
       fs.create(new org.apache.hadoop.fs.Path(root,
         "_compact_c_d1_done"), true).close()
       // truth = c_d1 content + the untouched d2, never the folded olds
-      sameRows(StoreMaintenance.consistentTable(spark, t2).drop("ds"), full,
+      sameRows(
+        StoreMaintenance.consistentScan(spark, TableLoc(t2)).drop("ds"), full,
         "horizon fold: consolidated label + past-horizon dates only")
     } finally spark.sql(s"DROP TABLE IF EXISTS $t2")
   }
@@ -463,13 +502,15 @@ class StoreMaintenanceSpec extends SparkSpec {
     putDate(Seq((1L, 2L), (2L, 1L)), "d0")
     putDate(Seq((1L, 1L), (3L, 4L)), "d1")
     val full = spark.read.parquet(store).drop("ds").localCheckpoint()
-    sameRows(StoreMaintenance.consistentPath(spark, store).drop("ds"), full,
+    sameRows(
+      StoreMaintenance.consistentScan(spark, PathLoc(store)).drop("ds"), full,
       "quiescent path store must read in full")
     // PRE-marker crash (rename landed, marker didn't): label invisible
     fs.create(new org.apache.hadoop.fs.Path(root,
       "_fold_pending_r_g1"), true).close()
     putDate(Seq((9L, 9L)), "r_g1")
-    sameRows(StoreMaintenance.consistentPath(spark, store).drop("ds"), full,
+    sameRows(
+      StoreMaintenance.consistentScan(spark, PathLoc(store)).drop("ds"), full,
       "an unmarked label dir must be invisible")
     // POST-marker: label exclusive, undropped olds invisible
     putDate(Seq((1L, 3L), (2L, 1L), (3L, 4L)), "r_g1")
@@ -477,7 +518,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       "_compact_r_g1_done"), true).close()
     assert(spark.read.parquet(store).count() == 7,
       "the hazard: a plain read double-reads the window")
-    sameRows(StoreMaintenance.consistentPath(spark, store).drop("ds"),
+    sameRows(StoreMaintenance.consistentScan(spark, PathLoc(store)).drop("ds"),
       Seq((1L, 3L), (2L, 1L), (3L, 4L)).toDF("h", "cnt"),
       "a committed label dir must be read exclusively")
     // and the family reader on top agrees: dup hashes from the committed
@@ -493,53 +534,51 @@ class StoreMaintenanceSpec extends SparkSpec {
     // partial write' rule once a NEW ingestion date had landed — and
     // dropped the entire folded store. A label with no pending sentinel
     // at entry is a PRIOR COMPLETED fold: the replay must be a no-op.
-    buildPostings("smx_replay")
-    try {
-      StoreMaintenance.rewrite(spark, "smx_replay", "g1", tfMerge)
-      assert(partitionsOf("smx_replay") == Set("r_g1"))
-      val folded = spark.table("smx_replay").localCheckpoint()
-      // a fresh ingestion date lands AFTER the completed rewrite
-      IncrementalPostings.appendCountsBucketed(
-        docs.filter(pmod(col("doc_id"), lit(3L)) === 0), "smx_replay", "d9")
-      val appended = spark.table("smx_replay")
-        .filter(col("ds") === "d9").localCheckpoint()
-      // the at-least-once replay of the SAME gen: a no-op, never a drop
-      StoreMaintenance.rewrite(spark, "smx_replay", "g1", tfMerge)
-      assert(partitionsOf("smx_replay") == Set("r_g1", "d9"),
-        "the replay must preserve both the completed label and the new date")
-      sameRows(spark.table("smx_replay").filter(col("ds") === "r_g1"),
-        folded.filter(col("ds") === "r_g1"),
-        "the completed generation's rows must be untouched")
-      sameRows(spark.table("smx_replay").filter(col("ds") === "d9"), appended,
-        "the fresh date's rows must be untouched (never folded by a replay)")
-    } finally spark.sql("DROP TABLE IF EXISTS smx_replay")
-    // same-horizon COMPACT replay after completion + fresh PRE-horizon
-    // appends: the consolidated label survives (same discriminator); the
-    // fresh dates stay unfolded until a LATER-horizon compact (documented
-    // — a repeated completed compact is a no-op, never a drop-and-refold)
-    buildPostings("smx_replay_c")
-    try {
-      StoreMaintenance.compact(spark, "smx_replay_c", "d1", merge = tfMerge)
-      assert(partitionsOf("smx_replay_c") == Set("c_d1", "d2"))
-      val before = IncrementalPostings.reportBucketed(spark, "smx_replay_c")
-        .localCheckpoint()
-      // two fresh dates BELOW the horizon land after the completed fold
-      IncrementalPostings.appendCountsBucketed(
-        docs.filter(pmod(col("doc_id"), lit(3L)) === 1), "smx_replay_c", "d0a")
-      IncrementalPostings.appendCountsBucketed(
-        docs.filter(pmod(col("doc_id"), lit(3L)) === 2), "smx_replay_c", "d0b")
-      StoreMaintenance.compact(spark, "smx_replay_c", "d1", merge = tfMerge)
-      assert(partitionsOf("smx_replay_c") == Set("c_d1", "d0a", "d0b", "d2"),
-        "a repeated same-horizon compact must no-op, never eat c_d1 or the fresh dates")
-      // a LATER horizon folds everything; tf mass is conserved exactly
-      val massBefore = spark.table("smx_replay_c")
-        .agg(sum(col("tf"))).head().getLong(0)
-      StoreMaintenance.compact(spark, "smx_replay_c", "d2", merge = tfMerge)
-      assert(partitionsOf("smx_replay_c") == Set("c_d2"))
-      assert(spark.table("smx_replay_c").agg(sum(col("tf"))).head().getLong(0)
-        == massBefore, "the later-horizon fold must conserve the tf mass")
-      assert(before.count() > 0) // the pre-replay report was non-trivial
-    } finally spark.sql("DROP TABLE IF EXISTS smx_replay_c")
+    kinds.foreach { k => withClue(s"[${k.name}] ") {
+      val store = k.build("smx_replay")
+      try {
+        StoreMaintenance.rewrite(spark, store, "g1", tfMerge)
+        assert(store.partitions(spark).toSet == Set("r_g1"))
+        val folded = store.scan(spark).localCheckpoint()
+        // a fresh ingestion date lands AFTER the completed rewrite
+        k.append(store, docs.filter(pmod(col("doc_id"), lit(3L)) === 0), "d9")
+        val appended = store.scan(spark)
+          .filter(col("ds") === "d9").localCheckpoint()
+        // the at-least-once replay of the SAME gen: a no-op, never a drop
+        StoreMaintenance.rewrite(spark, store, "g1", tfMerge)
+        assert(store.partitions(spark).toSet == Set("r_g1", "d9"),
+          "the replay must preserve both the completed label and the new date")
+        sameRows(store.scan(spark).filter(col("ds") === "r_g1"),
+          folded.filter(col("ds") === "r_g1"),
+          "the completed generation's rows must be untouched")
+        sameRows(store.scan(spark).filter(col("ds") === "d9"), appended,
+          "the fresh date's rows must be untouched (never folded by a replay)")
+      } finally k.drop(store)
+      // same-horizon COMPACT replay after completion + fresh PRE-horizon
+      // appends: the consolidated label survives (same discriminator); the
+      // fresh dates stay unfolded until a LATER-horizon compact (documented
+      // — a repeated completed compact is a no-op, never a drop-and-refold)
+      val storeC = k.build("smx_replay_c")
+      try {
+        StoreMaintenance.compact(spark, storeC, "d1", merge = tfMerge)
+        assert(storeC.partitions(spark).toSet == Set("c_d1", "d2"))
+        val before = k.report(storeC).localCheckpoint()
+        // two fresh dates BELOW the horizon land after the completed fold
+        k.append(storeC, docs.filter(pmod(col("doc_id"), lit(3L)) === 1), "d0a")
+        k.append(storeC, docs.filter(pmod(col("doc_id"), lit(3L)) === 2), "d0b")
+        StoreMaintenance.compact(spark, storeC, "d1", merge = tfMerge)
+        assert(storeC.partitions(spark).toSet == Set("c_d1", "d0a", "d0b", "d2"),
+          "a repeated same-horizon compact must no-op, never eat c_d1 or the fresh dates")
+        // a LATER horizon folds everything; tf mass is conserved exactly
+        val massBefore = storeC.scan(spark)
+          .agg(sum(col("tf"))).head().getLong(0)
+        StoreMaintenance.compact(spark, storeC, "d2", merge = tfMerge)
+        assert(storeC.partitions(spark).toSet == Set("c_d2"))
+        assert(storeC.scan(spark).agg(sum(col("tf"))).head().getLong(0)
+          == massBefore, "the later-horizon fold must conserve the tf mass")
+        assert(before.count() > 0) // the pre-replay report was non-trivial
+      } finally k.drop(storeC)
+    } }
   }
 
   test("fold epilogue clears the sentinel before the marker: the post-drop window reads full, and an orphan marker is healed") {
@@ -550,32 +589,32 @@ class StoreMaintenanceSpec extends SparkSpec {
     // first, the worst crash leaves only an orphan marker; readers see a
     // quiescent store and the next same-label entry cleans the marker
     // without owing (or performing) any drops.
-    buildPostings("smx_orphan")
-    try {
-      val before = IncrementalPostings.reportBucketed(spark, "smx_orphan")
-        .localCheckpoint()
-      StoreMaintenance.rewrite(spark, "smx_orphan", "g1", tfMerge)
-      val loc = tableLocation("smx_orphan")
-      val fs = new org.apache.hadoop.fs.Path(loc)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // crash state: drops done, sentinel deleted, marker delete lost
-      val marker = new org.apache.hadoop.fs.Path(loc, "_compact_r_g1_done")
-      fs.create(marker, true).close()
-      assert(!fs.exists(StoreMaintenance.pendingFile(loc, "r_g1")))
-      // (a) readers see a quiescent store — full content, never empty
-      sameRows(IncrementalPostings.reportBucketed(spark, "smx_orphan"),
-        before, "the orphan-marker window must read the full store")
-      // (b) appends are not blocked (no sentinel), and
-      IncrementalPostings.appendCountsBucketed(
-        docs.filter(pmod(col("doc_id"), lit(3L)) === 0), "smx_orphan", "d9")
-      // (c) the same-label re-entry heals the orphan without dropping the
-      // fresh date (the old marker-present path would have dropped d9
-      // unfolded — data loss through the recovery path)
-      StoreMaintenance.rewrite(spark, "smx_orphan", "g1", tfMerge)
-      assert(!fs.exists(marker), "the orphan marker must be cleaned")
-      assert(partitionsOf("smx_orphan") == Set("r_g1", "d9"),
-        "healing must preserve the completed label AND the fresh date")
-    } finally spark.sql("DROP TABLE IF EXISTS smx_orphan")
+    kinds.foreach { k => withClue(s"[${k.name}] ") {
+      val store = k.build("smx_orphan")
+      try {
+        val before = k.report(store).localCheckpoint()
+        StoreMaintenance.rewrite(spark, store, "g1", tfMerge)
+        val loc = store.root(spark).toString
+        val fs = new org.apache.hadoop.fs.Path(loc)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // crash state: drops done, sentinel deleted, marker delete lost
+        val marker = new org.apache.hadoop.fs.Path(loc, "_compact_r_g1_done")
+        fs.create(marker, true).close()
+        assert(!fs.exists(StoreMaintenance.pendingFile(loc, "r_g1")))
+        // (a) readers see a quiescent store — full content, never empty
+        sameRows(k.report(store), before,
+          "the orphan-marker window must read the full store")
+        // (b) appends are not blocked (no sentinel), and
+        k.append(store, docs.filter(pmod(col("doc_id"), lit(3L)) === 0), "d9")
+        // (c) the same-label re-entry heals the orphan without dropping the
+        // fresh date (the old marker-present path would have dropped d9
+        // unfolded — data loss through the recovery path)
+        StoreMaintenance.rewrite(spark, store, "g1", tfMerge)
+        assert(!fs.exists(marker), "the orphan marker must be cleaned")
+        assert(store.partitions(spark).toSet == Set("r_g1", "d9"),
+          "healing must preserve the completed label AND the fresh date")
+      } finally k.drop(store)
+    } }
   }
 
   test("the FIRST append to a brand-new table is serialized by the init lease") {
@@ -619,13 +658,13 @@ class StoreMaintenanceSpec extends SparkSpec {
       assert(ex.getMessage.contains("fold in progress"), ex.getMessage)
       // and a second fold against the same live lease also fails fast
       val ex2 = intercept[IllegalStateException] {
-        StoreMaintenance.compact(spark, t, "d2", tfMerge)
+        StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       }
       assert(ex2.getMessage.contains("lease"), ex2.getMessage)
       StoreMaintenance.releaseLease(spark, tableLocation(t))
       // a real fold acquires and releases around its work: appends succeed
       // immediately after it returns
-      StoreMaintenance.compact(spark, t, "d2", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       IncrementalPostings.appendCountsBucketed(
         docs.filter(pmod(col("doc_id"), lit(3L)) === 0), t, "d9")
       assert(partitionsOf(t).contains("d9"))
@@ -645,7 +684,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       // the fold takes over the crashed holder's lease and completes
       val before = IncrementalPostings
         .reportBucketed(spark, t).localCheckpoint()
-      StoreMaintenance.compact(spark, t, "d2", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       sameRows(IncrementalPostings.reportBucketed(spark, t), before,
         "fold after stale-lease takeover must preserve the report")
       assert(partitionsOf(t) == Set("c_d2"))
@@ -673,11 +712,13 @@ class StoreMaintenanceSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("some-other-host"), ex.getMessage)
       intercept[IllegalStateException] {
-        StoreMaintenance.compact(spark, t, "d2", tfMerge)
+        StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       }
-      // the explicit stillness rule is the only reclaim path for it
-      StoreMaintenance.assertNoActiveFold(spark, tableLocation(t),
-        maxAgeHours = Some(0.5))
+      // stillness is the only reclaim path for it: the same foreign lease,
+      // aged past the default horizon, is reclaimed
+      plantLease(tableLocation(t), deadPid, host = "some-other-host",
+        ts = System.currentTimeMillis() - (25 * 3600 * 1000L))
+      StoreMaintenance.assertNoActiveFold(spark, tableLocation(t))
       IncrementalPostings.appendCountsBucketed(
         docs.filter(pmod(col("doc_id"), lit(3L)) === 0), t, "d9")
       assert(partitionsOf(t).contains("d9"))
@@ -693,7 +734,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       plantLease(tableLocation(t), ProcessHandle.current().pid(),
         name = "_append_lease_test")
       val ex = intercept[IllegalStateException] {
-        StoreMaintenance.compact(spark, t, "d2", tfMerge)
+        StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       }
       assert(ex.getMessage.contains("backed off"), ex.getMessage)
       val foldLease = new org.apache.hadoop.fs.Path(
@@ -709,7 +750,7 @@ class StoreMaintenanceSpec extends SparkSpec {
       plantLease(tableLocation(t), proc.pid(), name = "_append_lease_dead")
       val before = IncrementalPostings
         .reportBucketed(spark, t).localCheckpoint()
-      StoreMaintenance.compact(spark, t, "d2", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       sameRows(IncrementalPostings.reportBucketed(spark, t), before,
         "fold after stale append-lease sweep must preserve the report")
       assert(partitionsOf(t) == Set("c_d2"))
@@ -722,14 +763,14 @@ class StoreMaintenanceSpec extends SparkSpec {
     try {
       // a crashed fold on ANOTHER host, 25 h ago — past the documented
       // 24 h default horizon, so no manual lease surgery is needed: the
-      // next fold (plain defaults, no explicit maxAgeHours) takes over
+      // next fold takes over at the default horizon
       def plantAged(): Unit = plantLease(tableLocation(t), 12345L,
         host = "some-other-host",
         ts = System.currentTimeMillis() - (25 * 3600 * 1000L))
       plantAged()
       val before = IncrementalPostings.reportBucketed(spark, t)
         .localCheckpoint()
-      StoreMaintenance.compact(spark, t, "d2", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       sameRows(IncrementalPostings.reportBucketed(spark, t), before,
         "fold after an age-based foreign-lease reclaim must preserve the report")
       assert(partitionsOf(t) == Set("c_d2"))
@@ -758,12 +799,12 @@ class StoreMaintenanceSpec extends SparkSpec {
         StoreMaintenance.assertNoActiveFold(spark, tableLocation(t))
       }
       intercept[IllegalStateException] {
-        StoreMaintenance.compact(spark, t, "d2", tfMerge)
+        StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       }
       // a genuinely abandoned unreadable lease still ages out instead of
       // wedging the store forever
       fs.setTimes(p, System.currentTimeMillis() - (25 * 3600 * 1000L), -1)
-      StoreMaintenance.compact(spark, t, "d2", tfMerge)
+      StoreMaintenance.compact(spark, TableLoc(t), "d2", tfMerge)
       assert(partitionsOf(t) == Set("c_d2"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }

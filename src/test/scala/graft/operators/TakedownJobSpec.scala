@@ -186,7 +186,7 @@ class TakedownJobSpec extends SparkSpec {
           IncrementalPostings.appendNorms(slice, "td_k_post", d)
         },
         drop = (sp, d) => IncrementalStore.dropDate(sp,
-          Seq("td_k_post", "td_k_post_dl"), d)))
+          Seq("td_k_post", "td_k_post_dl").map(TableLoc), d)))
       val curateCfg = CurateConfig("cur", s"$tmp/in", s"$tmp/curmarkers",
         s"$tmp/reports", fams,
         suppressIds = sp =>
