@@ -35,7 +35,11 @@ package graft.operators
   * across the cluster — a handful of overlapped families saturates the
   * fixed-cost latencies without stacking N full shuffles' memory. A
   * single family (or bound 1) short-circuits to the plain sequential
-  * loop. */
+  * loop.
+  *
+  * `graft.split.Splitter` reuses the pool for its per-key promote: each
+  * key's filesystem ops touch only that key's own staging and output
+  * dirs, the same disjointness the family blocks rely on. */
 object FamilyPar {
 
   def foreach[A](items: Seq[A], maxConcurrent: Int = 4)(f: A => Unit): Unit = {

@@ -24,7 +24,9 @@ final case class SplitConfig(
     maxRecordsPerFile: Long = 0L,
     saltBuckets: Int = 1)
 
-/** Run summary (reference O15, parquet-splitter.py:190-196). */
+/** Run summary (reference O15, parquet-splitter.py:190-196).
+  * `droppedNullRows` maps each processed date to its null-key rows, which
+  * no output holds (SURVEY §2.2.3). */
 final case class SplitSummary(
     kind: String,
     inputDates: Int,
@@ -32,14 +34,20 @@ final case class SplitSummary(
     missingDates: Seq[String],
     processedDates: Seq[String],
     skippedMissing: Seq[String],
-    skippedEmpty: Seq[String])
+    skippedEmpty: Seq[String],
+    droppedNullRows: Map[String, Long])
 
 /** Orchestrator — the full incremental split pipeline (reference O16):
   * list inputs, list markers, anti-join, then per missing date
-  * read→validate→split→write→marker. Dates are processed sequentially
-  * (faithful to the reference; each date's write already fans out across
-  * all executors, so inter-date parallelism buys little and keeps failure
-  * attribution simple).
+  * read→validate→split→write→marker, each date in one Spark pass (see
+  * [[Splitter.splitOne]]: one keyed write over every shuffle partition,
+  * with the guard counts taken inside it, then a parallel promote).
+  *
+  * Dates run sequentially, as in the reference: markers commit in sorted
+  * date order and the run stops at the first failed date, so every marker
+  * on disk covers a prefix of the missing dates. Each date's write already
+  * uses every core, so overlapping dates would buy little and would make
+  * a failure's committed set depend on timing.
   */
 final class SplitJob(spark: SparkSession, config: SplitConfig) {
   private val ledger = new MarkerLedger(spark.sparkContext.hadoopConfiguration)
@@ -56,17 +64,17 @@ final class SplitJob(spark: SparkSession, config: SplitConfig) {
     var processed = List.empty[String]
     var skippedMissing = List.empty[String]
     var skippedEmpty = List.empty[String]
+    var dropped = Map.empty[String, Long]
 
     missing.foreach { date =>
       val inPath = PathOps.normalizePrefix(config.inDir) + s"$date.parquet"
       splitter.splitOne(inPath, config.outDir, date) match {
-        case SplitOutcome.Written(outputs, _, dropped) =>
-          if (dropped > 0)
-            spark.sparkContext.setLocalProperty("graft.split.droppedNulls", dropped.toString)
+        case SplitOutcome.Written(outputs, _, nullRows) =>
           // marker LAST — the commit point (parquet-splitter.py:176-186)
           ledger.writeMarker(config.markerDir,
             Marker(config.kind, date, inPath, outputs, tsFmt.format(Instant.now())))
           processed ::= date
+          dropped += date -> nullRows
         case SplitOutcome.MissingInput => skippedMissing ::= date
         case SplitOutcome.EmptyInput =>
           // O8 policy: faithful mode never commits (livelock quirk); the
@@ -78,6 +86,6 @@ final class SplitJob(spark: SparkSession, config: SplitConfig) {
       }
     }
     SplitSummary(config.kind, input.size, done.size, missing,
-      processed.reverse, skippedMissing.reverse, skippedEmpty.reverse)
+      processed.reverse, skippedMissing.reverse, skippedEmpty.reverse, dropped)
   }
 }

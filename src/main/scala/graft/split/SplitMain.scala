@@ -62,7 +62,9 @@ object SplitMain {
         println(s"[split] kind=${summary.kind} inputs=${summary.inputDates} " +
           s"done=${summary.doneDates} processed=${summary.processedDates.mkString(",")} " +
           s"skippedMissing=${summary.skippedMissing.mkString(",")} " +
-          s"skippedEmpty=${summary.skippedEmpty.mkString(",")}")
+          s"skippedEmpty=${summary.skippedEmpty.mkString(",")} " +
+          s"droppedNullRows=${summary.droppedNullRows.toSeq.sorted
+            .map { case (d, n) => s"$d:$n" }.mkString(",")}")
     }
     spark.stop()
   }

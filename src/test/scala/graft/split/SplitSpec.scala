@@ -13,21 +13,6 @@ class SplitSpec extends SparkSpec {
   private def freshJob(tmp: String) = new SplitJob(spark,
     SplitConfig("test", s"$golden/input", s"$tmp/output", s"$tmp/markers"))
 
-  /** Write df as ONE plain parquet FILE at `target` (not a Spark dataset
-    * directory) — the reference's S3-object input shape, required for
-    * ledger-listing tests. */
-  private def writePlainParquet(df: org.apache.spark.sql.DataFrame, target: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpDir = target + "_tmpwrite"
-    df.coalesce(1).write.parquet(tmpDir)
-    val part = fs.listStatus(new Path(tmpDir))
-      .find(_.getPath.getName.startsWith("part-")).get
-    fs.mkdirs(new Path(target).getParent)
-    fs.rename(part.getPath, new Path(target))
-    fs.delete(new Path(tmpDir), true)
-  }
-
   test("PathOps stems + prefix normalization handle reference edge cases") {
     assert(PathOps.normalizePrefix("a/b///") == "a/b/")
     assert(PathOps.normalizePrefix("a/b") == "a/b/")
@@ -102,6 +87,12 @@ class SplitSpec extends SparkSpec {
     }
     assert(splitter.splitOne(s"$tmp/in_empty/20250102.parquet", s"$tmp/out", "20250102")
       == SplitOutcome.EmptyInput)
+    // the empty date leaves nothing behind: no staging dir, no key dir
+    assert(!Files.exists(Paths.get(s"$tmp/out/_staging_20250102")))
+    val left = Files.list(Paths.get(s"$tmp/out")).toArray.map(_.toString).toSeq
+    assert(left == Seq(s"$tmp/out/0000000001"), left)
+    assert(!Files.list(Paths.get(s"$tmp/out/0000000001")).toArray
+      .exists(_.toString.contains("20250102")))
     assert(splitter.splitOne(s"$tmp/in_missing/20250103.parquet", s"$tmp/out", "20250103")
       == SplitOutcome.MissingInput)
   }
@@ -192,7 +183,7 @@ class SplitSpec extends SparkSpec {
   test("O8 policy flag: emptyInputMarker=true commits an outputs:[] marker (no livelock)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("split-emptypolicy").toString
-    writePlainParquet(spark.emptyDataset[(String, String, Long, String)]
+    PlainParquet.write(spark.emptyDataset[(String, String, Long, String)]
       .toDF("date", "item_id", "sales_figures", "store_id"),
       s"$tmp/in/20250101.parquet")
 
@@ -222,10 +213,10 @@ class SplitSpec extends SparkSpec {
   test("quirk parity: nested inputs are discovered recursively, then warn-skipped (§2.2.5)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("split-nested").toString
-    writePlainParquet(Seq(("2025/01/01", "0000000001", 5L, "0001"))
+    PlainParquet.write(Seq(("2025/01/01", "0000000001", 5L, "0001"))
       .toDF("date", "item_id", "sales_figures", "store_id"),
       s"$tmp/in/20250101.parquet")
-    writePlainParquet(Seq(("2025/01/02", "0000000002", 6L, "0001"))
+    PlainParquet.write(Seq(("2025/01/02", "0000000002", 6L, "0001"))
       .toDF("date", "item_id", "sales_figures", "store_id"),
       s"$tmp/in/nested/20250102.parquet")
 
