@@ -51,6 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `"noise_factor"`: max/min of the successful sentinel times —
   *     ≈1 means a quiet host (trust the numbers), ≫1 means contention
   *     (trust only the minima, and only where reps ≥ 2);
+  *   - `"slots"`: the session's task slots — [[Session]] defaults them
+  *     to the host's cores, so a 4-slot and a 32-slot record differ here;
   *   - `"run_id"`: stamps the snapshot AND the final line, so a stale
   *     `BENCH_PARTIAL.json` from a previous run can never be mistaken
   *     for this one (the file is also deleted at startup).
@@ -59,9 +61,57 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * printed at the end.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
+
+  /** Timed action: a noop-format write. It executes the WHOLE physical
+    * plan including a final ORDER BY — under a count()-only action,
+    * Catalyst's EliminateSorts removes the output sort and every
+    * orderBy-terminated query is under-measured. */
+  def run(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** Release everything a query materialized: Dataset caches (k-means'
+    * persisted dims) AND localCheckpoint RDDs (the label-propagation /
+    * PageRank results whose disposal Components.scala documents as
+    * caller-owned). Queries are self-contained, so a blanket sweep
+    * between measurements is safe — without it a 3-pass bench over
+    * q62/q81/q95/q98 accumulates one executor-storage snapshot per run. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  /** The JIT warm-up described above, skipped where the sf0.001 testdata
+    * is absent; failures are ignored. */
+  def warmUp(spark: SparkSession): Unit = {
+    val warmDir = "/root/testdata/sf0.001"
+    if (new java.io.File(warmDir).isDirectory)
+      Seq("q01_agg", "q03_join_topk", "q07_window_rank", "q20_dedup_exact",
+          "q30_knn_brute").foreach { name =>
+        try run(SparkEntry.queries(name)(spark, warmDir))
+        catch { case _: Throwable => () }
+        sweep(spark)
+      }
+  }
+
+  /** One timed run of registered query `name` on the noop sink, then
+    * [[sweep]]: its wall seconds, NEGATIVE time-to-failure if it throws
+    * (never disguised as a fast success), and the [[Phases]] it recorded. */
+  def timeOne(spark: SparkSession, sfDir: String,
+      name: String): (Double, Map[String, Double]) = {
+    Phases.drain() // discard any stale phase records from a failed rep
+    val t0 = System.nanoTime()
+    val ok = try { run(SparkEntry.queries(name)(spark, sfDir)); true }
+    catch { case e: Throwable => System.err.println(s"FAIL $name: $e"); false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    sweep(spark)
+    (if (ok) dt else -dt, Phases.drain())
+  }
+
+  def main(args: Array[String]): Unit = Session.run("graft-bench")(bench)
+
+  private def bench(spark: SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "840").toDouble
     // HARD wall cap on the measurement loop (round 18): the driver's
     // official record died rc=124 three rounds running because the
@@ -87,39 +137,14 @@ object Bench {
     // host still stops at the guaranteed two
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val runId = java.lang.Long.toHexString(System.currentTimeMillis())
+    // task slots the run had: records from differently sized sessions
+    // must not read alike
+    val slots = spark.sparkContext.defaultParallelism
     // a previous run's snapshot must never be readable as this run's
     new java.io.File(partialPath).delete()
     new java.io.File(summaryPath).delete()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val start = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - start) / 1e9
-    // Timed action: a noop-format write. It executes the WHOLE physical
-    // plan including a final ORDER BY — under a count()-only action,
-    // Catalyst's EliminateSorts removes the output sort and every
-    // orderBy-terminated query is under-measured.
-    def run(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    // Release everything a query materialized: Dataset caches (k-means'
-    // persisted dims) AND localCheckpoint RDDs (the label-propagation /
-    // PageRank results whose disposal Components.scala documents as
-    // caller-owned). Queries are self-contained, so a blanket sweep
-    // between measurements is safe — without it a 3-pass bench over
-    // q62/q81/q95/q98 accumulates one executor-storage snapshot per run.
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    val warmDir = "/root/testdata/sf0.001"
-    val warmOk = new java.io.File(warmDir).isDirectory
     val names = SparkEntry.queries.keys.toSeq.sorted
     // failure semantics: a failed rep records NEGATIVE time-to-failure and
     // poisons the query (never disguised as a fast success); min over the
@@ -172,10 +197,12 @@ object Bench {
     // now carries the division itself — `host_drift` = this run's
     // sentinel median over the PINNED r12 operative-baseline median
     // (BENCH_QUIET_r12.json, q20 over 39 readings on a quiet host), and
-    // `total_sentinel_adj` = total ÷ host_drift, directly comparable to
-    // the r12 total on the shared queries — but ONLY when `measured`
-    // equals `universe`: a wall-capped record totals just its measured
-    // subset, and the reader must compare per-query or not at all. The
+    // `total_sentinel_adj` = total ÷ host_drift, comparable to the r12
+    // total on the shared queries — but ONLY when `measured` equals
+    // `universe` (a wall-capped record totals just its measured subset,
+    // and the reader must compare per-query or not at all) AND `slots`
+    // is 32: r12 ran local[32], and a session's slots default to the
+    // host's cores, so an r12 comparison needs SPARK_GRAFT_CPUS=32. The
     // pin changes ONLY if the operative baseline or the sentinel query
     // changes.
     val sentinelRef = 0.2627
@@ -216,14 +243,14 @@ object Bench {
         "\"" + k + "\":" +
           m.map { case (p, v) => "\"" + p + "\":" + v }.mkString("{", ",", "}")
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","errors":${errors.mkString("[", ",", "]")},"complete":${best.size == names.size},"final":$finalRecord,"wall_capped":$wallCapped,"measured":${best.size},"universe":${names.size},"elapsed_sec":$elapsed,"wall_sec":$wallSec,"reps":$repsJson,"raw":$rawJson,"phases":$phasesJson,"sentinel_query":"$sentinelName","sentinel":${fmtSeq(sentinel.toSeq)},"noise_factor":$noise,"sentinel_spread":$spread,"contended":$contended,"sentinel_median":$sentMed,"sentinel_ref":$sentinelRef,"host_drift":$drift,"total_sentinel_adj":$totalAdj,"run_id":"$runId"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","errors":${errors.mkString("[", ",", "]")},"complete":${best.size == names.size},"final":$finalRecord,"wall_capped":$wallCapped,"measured":${best.size},"universe":${names.size},"elapsed_sec":$elapsed,"wall_sec":$wallSec,"reps":$repsJson,"raw":$rawJson,"phases":$phasesJson,"sentinel_query":"$sentinelName","sentinel":${fmtSeq(sentinel.toSeq)},"noise_factor":$noise,"sentinel_spread":$spread,"contended":$contended,"sentinel_median":$sentMed,"sentinel_ref":$sentinelRef,"host_drift":$drift,"total_sentinel_adj":$totalAdj,"slots":$slots,"run_id":"$runId"}"""
     }
     def compactSummaryJson(finalRecord: Boolean): String = {
       val errors = best.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       val (noise, spread, contended) = sentinelStats()
       val (sentMed, drift, totalAdj) = sentinelAdj()
       val total = best.values.filter(_ >= 0).sum
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","errors":${errors.mkString("[", ",", "]")},"complete":${best.size == names.size},"final":$finalRecord,"wall_capped":$wallCapped,"measured":${best.size},"universe":${names.size},"elapsed_sec":$elapsed,"noise_factor":$noise,"sentinel_spread":$spread,"contended":$contended,"sentinel_median":$sentMed,"sentinel_ref":$sentinelRef,"host_drift":$drift,"total_sentinel_adj":$totalAdj,"run_id":"$runId","queries_artifact":"$partialPath"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","errors":${errors.mkString("[", ",", "]")},"complete":${best.size == names.size},"final":$finalRecord,"wall_capped":$wallCapped,"measured":${best.size},"universe":${names.size},"elapsed_sec":$elapsed,"noise_factor":$noise,"sentinel_spread":$spread,"contended":$contended,"sentinel_median":$sentMed,"sentinel_ref":$sentinelRef,"host_drift":$drift,"total_sentinel_adj":$totalAdj,"slots":$slots,"run_id":"$runId","queries_artifact":"$partialPath"}"""
     }
     def snapshot(finalRecord: Boolean = false): Unit = try {
       val tmp = new java.io.File(partialPath + ".tmp")
@@ -232,42 +259,30 @@ object Bench {
       tmp.renameTo(new java.io.File(partialPath))
       ()
     } catch { case _: Throwable => () } // never let bookkeeping kill the run
-    def timeOne(name: String): Double = {
-      Phases.drain() // discard any stale phase records from a failed rep
-      val t0 = System.nanoTime()
-      val ok = try { run(SparkEntry.queries(name)(spark, sfDir)); true }
-      catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      sweep()
-      val ph = Phases.drain()
-      if (ok && ph.nonEmpty)
+    def measure(name: String): Double = {
+      val (t, ph) = timeOne(spark, sfDir, name)
+      if (t >= 0 && ph.nonEmpty)
         phasesMin(name) = phasesMin.get(name).fold(ph) { prev =>
           (prev.keySet ++ ph.keySet).map(k => k -> math.min(
             prev.getOrElse(k, Double.MaxValue),
             ph.getOrElse(k, Double.MaxValue))).toMap
         }
-      if (ok) dt else -dt
+      t
     }
     // Sentinel runs are calibration-only: never merged into the query's
     // own record (its official number stays comparable across rounds —
     // min over exactly `reps` measurement reps, like every other query).
     def timeSentinel(): Unit = {
-      sentinel += timeOne(sentinelName)
+      sentinel += measure(sentinelName)
       System.err.println(
         s"""BENCH {"sentinel":"$sentinelName","sec":${sentinel.last},"elapsed":$elapsed}""")
     }
-    if (warmOk)
-      Seq("q01_agg", "q03_join_topk", "q07_window_rank", "q20_dedup_exact",
-          "q30_knn_brute").foreach { name =>
-        try run(SparkEntry.queries(name)(spark, warmDir))
-        catch { case _: Throwable => () }
-        sweep()
-      }
+    warmUp(spark)
     // one DISCARDED sentinel execution first: the sentinel series exists to
     // witness HOST contention, and a cold first reading (JIT + scan warm-up
     // at the real SF — measured ~2× steady-state) would inflate
     // noise_factor on a perfectly quiet host
-    timeOne(sentinelName)
+    measure(sentinelName)
     timeSentinel() // baseline host-load reading before any measurement
     // reps 1..guaranteed ignore the REFINEMENT budget (worst case =
     // min-of-2 instead of cold singles); only refinement reps beyond
@@ -297,7 +312,7 @@ object Bench {
         // the wall cap stops ANY pass (a cold-singles tail parses,
         // a killed process records nothing).
         if (fitsWall(name) && (rep <= guaranteed || elapsed < budgetSec)) {
-          val t = timeOne(name)
+          val t = measure(name)
           best(name) = best.get(name).map(combine(_, t)).getOrElse(t)
           raw(name) = raw.getOrElse(name, Nil) :+ t
           System.err.println(
@@ -339,6 +354,5 @@ object Bench {
       tmp.renameTo(new java.io.File(summaryPath))
       ()
     } catch { case _: Throwable => () }
-    spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Dev tool: BOUNDED-MEMORY flagship probe — the spill-evidence half of
   * the 100 TB claim. [[ScaleProbe]] shows wall-clock growth in a 128 GiB
@@ -19,22 +19,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MemProbe {
   def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val frac = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the squeeze: unified execution+storage pool cut from 0.6 of
-      // (heap - 300MB) to `frac` — with a 4g heap and 32 tasks this is
-      // ~20-25 MB of execution memory per task slot
-      .config("spark.memory.fraction", frac)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the squeeze: unified execution+storage pool cut from 0.6 of
+    // (heap - 300MB) to `frac` — with a 4g heap and SPARK_GRAFT_CPUS=32
+    // this is ~20-25 MB of execution memory per task slot
+    Session.run("graft-memprobe", Map("spark.memory.fraction" -> frac))(
+      probe(_, frac, args))
+  }
+
+  private def probe(spark: SparkSession, frac: String, args: Array[String]): Unit = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val big = ScaleProbe.ensureScaledTables(spark, n,
       sys.env.get("SPARK_GRAFT_SCALE_TABLES")
         .map(_.split(",").map(_.trim).toSet))
@@ -119,24 +113,19 @@ object MemProbe {
       "q179_incr_semantic_two_level", "q180_semantic_band_drift")
     val probes = if (args.nonEmpty) flagships.filter(args.contains) else flagships
 
-    def run(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     val heap = Runtime.getRuntime.maxMemory() / (1 << 20)
     println(f"MemProbe: heap ${heap}MB, memory.fraction $frac, tables $big")
     println(f"${"query"}%-28s ${"sec"}%8s ${"spill-mem MB"}%13s ${"spill-disk MB"}%14s ${"peak-task MB"}%13s ${"failed"}%7s ${"status"}%7s")
     probes.foreach { name =>
       metrics.reset()
       val t0 = System.nanoTime()
-      val ok = try { run(SparkEntry.queries(name)(spark, big)); true }
+      val ok = try { Bench.run(SparkEntry.queries(name)(spark, big)); true }
       catch { case e: Throwable =>
         System.err.println(s"[memprobe] $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
         false
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      sweep()
+      Bench.sweep(spark)
       // deterministic drain of the async listener queues (via the
       // graftbridge package — listenerBus is private[spark]) so tail
       // task-end events can't leak into the next query's counters; a
@@ -146,6 +135,5 @@ object MemProbe {
       if (!drained) System.err.println(s"[memprobe] $name: listener bus drain timed out — next query's counters may include stragglers")
       println(f"$name%-28s $dt%8.1f ${metrics.memSpilled / (1 << 20)}%13d ${metrics.diskSpilled / (1 << 20)}%14d ${metrics.peakExecMem / (1 << 20)}%13d ${metrics.failedTasks}%7d ${if (ok) "OK" else "FAIL"}%7s")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators._
-import graft.split.SplitMain.getArg
+import graft.split.SplitMain.{getArg, withSession}
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point for the OPERATIONAL TRIAD — the last mile between
@@ -223,28 +223,12 @@ object OpsMain {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    // under spark-submit this creates the session; driven in-process
-    // (specs, a host app) it adopts the existing one and must not stop
-    // it — getOrCreate falls back to the process-wide DEFAULT session
-    // too, so ownership must check both (a host driving main from a
-    // worker thread has no thread-local active session, but stopping
-    // its default session would kill the host)
-    val created = SparkSession.getActiveSession.isEmpty &&
-      SparkSession.getDefaultSession.isEmpty
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-ops")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (getArg(args, "CLOUD_WRITE", "false").toBoolean)
-      graft.sources.CloudConf.configure(builder)
-    val spark = builder.getOrCreate()
-    if (created) spark.sparkContext.setLogLevel("WARN")
-    println(run(args, spark))
-    if (created) spark.stop()
-  }
+  /** Under spark-submit this creates the session; driven in-process
+    * (specs, a host app) it adopts the existing one and leaves it
+    * running ([[graft.Session.run]]); `--CLOUD_WRITE true` applies
+    * [[graft.sources.CloudConf]] to either. */
+  def main(args: Array[String]): Unit =
+    withSession("graft-ops", args) { spark =>
+      println(run(args, spark))
+    }
 }

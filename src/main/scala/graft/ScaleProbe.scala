@@ -145,21 +145,15 @@ object ScaleProbe {
     big
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Session.run("graft-scaleprobe")(probe(_, args))
+
+  private def probe(spark: SparkSession, args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val only = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt.max(1)
     val base = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val big = ensureScaledTables(spark, n, only)
 
     val allProbes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -375,22 +369,19 @@ object ScaleProbe {
           else ensureDecoupledDocs(s, n))))
     val probes = if (args.nonEmpty) allProbes.filter(p => args.contains(p._1)) else allProbes
 
-    // noop-write action (same methodology as Bench: executes the full plan
-    // including final sorts); min of `reps` runs (default 3), robust to GC
-    // noise — a 50× composite probe sets SPARK_GRAFT_SCALE_REPS=1, where
+    // Bench's noop-write action; min of `reps` runs (default 3), robust to
+    // GC noise — a 50× composite probe sets SPARK_GRAFT_SCALE_REPS=1, where
     // per-run minutes dwarf JIT/GC jitter
-    def run(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     def time(fn: => Unit): Double = (1 to reps).map { _ =>
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
     }.min
     // warm-up
-    probes.foreach { case (_, fn) => run(fn(spark, base)) }
+    probes.foreach { case (_, fn) => Bench.run(fn(spark, base)) }
     println(f"${"query"}%-20s ${"1x sec"}%8s ${s"${n}x sec"}%8s ${"growth"}%7s  (linear = ${n}.0)")
     probes.foreach { case (name, fn) =>
-      val t1 = time(run(fn(spark, base)))
-      val tn = time(run(fn(spark, big)))
+      val t1 = time(Bench.run(fn(spark, base)))
+      val tn = time(Bench.run(fn(spark, big)))
       println(f"$name%-20s $t1%8.2f $tn%8.2f ${tn / t1}%7.1f")
     }
-    spark.stop()
   }
 }

@@ -194,9 +194,10 @@ object IncrementalSemantic {
     * bh) occupancy summary (model-sized — the [[bandDriftPsi]] feed,
     * derived by reading back the just-landed band partition: that read
     * makes summary == landed rows UNCONDITIONALLY — a pinned pre-write
-    * frame was measured (OccProbe) at the SAME cost and rejected, since
-    * a lost cached block recomputes from lineage and would silently
-    * desynchronize the audit feed under a non-deterministic input. The
+    * frame was measured at the SAME cost and rejected (README, "Semantic
+    * append drift"), since a lost cached block recomputes from lineage
+    * and would silently desynchronize the audit feed under a
+    * non-deterministic input. The
     * ~1.18× two-level append overhead is the summary aggregation +
     * second commit itself, the priced cost of [[bandDriftPsi]] never
     * re-scanning the band store). The expensive work (levels·nPlanes
@@ -213,17 +214,7 @@ object IncrementalSemantic {
     * Recovery is the standard contract: [[dropDate]], then retry. */
   def appendDate(emb: DataFrame, table: String, date: String,
       nBuckets: Int = 8, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit =
-    appendDate(emb, table, date, nBuckets, idCol, vecCol, writeOcc = true)
-
-  /** [[appendDate]] with the occupancy write optional — the
-    * [[graft.OccProbe]] ISOLATION HOOK only, never a supported store
-    * state (`writeOcc = false` leaves [[bandDriftPsi]] blind on the
-    * date): the probe prices the summary's marginal append cost by
-    * running the identical append with and without it. */
-  private[graft] def appendDate(emb: DataFrame, table: String,
-      date: String, nBuckets: Int, idCol: String, vecCol: String,
-      writeOcc: Boolean): Unit = {
+      vecCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
     val (nPlanes, r, dim, levels) = cfg(spark, table)
     IncrementalStore.appendBucketed(
@@ -235,7 +226,7 @@ object IncrementalSemantic {
       bandRows(emb, idCol, vecCol, nPlanes, r, dim, levels),
       s"${table}_bands", date, keyCols(levels), nBuckets,
       guard = requireNoPendingReband(_, table, "append"))
-    if (writeOcc) IncrementalStore.appendTable(
+    IncrementalStore.appendTable(
       occFromBandRows(
         spark.table(s"${table}_bands").filter(col("ds") === date), levels,
         nPlanes / r),
@@ -243,12 +234,11 @@ object IncrementalSemantic {
       guard = requireNoPendingReband(_, table, "append"))
   }
 
-  /** The daily-join candidate (a_id, b_id) stream BEFORE verification —
-    * factored so the mass probes ([[graft.MassProbe]]) can measure the
-    * store path's candidate mass (the quantity the frozen two-level
-    * config exists to cut) without paying verification; [[newPairs]]
-    * verifies it with exact cosine from the vector table. */
-  private[graft] def candidatePairs(spark: SparkSession, table: String,
+  /** The daily-join candidate (a_id, b_id) stream BEFORE verification;
+    * [[newPairs]] verifies it with exact cosine from the vector table.
+    * Its mass is the quantity the frozen two-level config exists to cut
+    * (README, "Two-level config frozen in the store"). */
+  private def candidatePairs(spark: SparkSession, table: String,
       date: String, upTo: Option[String] = None): DataFrame = {
     requireNoPendingReband(spark, table, "serve")
     val (_, _, _, levels) = cfg(spark, table)

@@ -442,15 +442,6 @@ object Similarity {
       .select(col("a_id"), col("b_id"), col("cosine"))
   }
 
-  /** Candidate (a_id, b_id) pairs for [[cosineNearDupBanded]] — factored
-    * so the scale probes can measure candidate MASS (the quantity the
-    * two-level law exists to cut) without paying verification.
-    * Single-level: pairs sharing any (band, bandHash). Two-level: pairs
-    * sharing any (band1, bh1) AND any (band2, bh2) — implemented as one
-    * equi-join on the composite key (the ∃i ∧ ∃j product space, b² keys
-    * per row), never as a filter over the level-1 candidate stream, which
-    * would materialize exactly the quadratic mass the second level exists
-    * to avoid. */
   /** The (nBands-long) band-hash ARRAY for one signature `level` of the
     * hyperplane banding — THE band construction, shared by the batch
     * candidate paths and the incremental semantic store
@@ -474,6 +465,13 @@ object Similarity {
   private[operators] def vectorDim(emb: DataFrame, vecCol: String): Int =
     probedDim(emb, vecCol)
 
+  /** Candidate (a_id, b_id) pairs for [[cosineNearDupBanded]], before
+    * verification. Single-level: pairs sharing any (band, bandHash).
+    * Two-level: pairs sharing any (band1, bh1) AND any (band2, bh2) —
+    * implemented as one equi-join on the composite key (the ∃i ∧ ∃j
+    * product space, b² keys per row), never as a filter over the level-1
+    * candidate stream, which would materialize exactly the quadratic mass
+    * the second level exists to avoid. */
   private[graft] def bandedCandidatePairs(embeddings: DataFrame,
       nPlanes: Int, r: Int, engaged: Boolean,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

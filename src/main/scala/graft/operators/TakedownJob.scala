@@ -185,7 +185,8 @@ object TakedownJob {
     else {
       // ONE multi-path scan, not a per-batch union: at years of
       // takedown batches an N-way union's plan ANALYSIS alone dominates
-      // the feed (LedgerProbe carries the measurement). Contract: the
+      // the feed (measured in README, "Orchestrator ledger and
+      // suppression feed — measured at 10-year scale"). Contract: the
       // request catalog has one producer and a stable id column name,
       // so the batches read as one schema.
       val raw = spark.read.parquet(done.map(d => prefix + s"$d.parquet"): _*)

@@ -20,13 +20,13 @@ import org.apache.spark.sql.SparkSession
   * Pure data + explicit application: local runs (file:// paths, no
   * spark-hadoop-cloud module on the classpath) must NOT bind the committer
   * protocol classes, so nothing here is applied implicitly — SplitMain
-  * wires it behind `--CLOUD_WRITE true`.
+  * and OpsMain wire it behind `--CLOUD_WRITE true`.
   */
 object CloudConf {
 
   /** The full setting map, defaults mirroring the reference's client
     * config. Keys use the `spark.hadoop.` prefix form so the same map
-    * works through a SparkSession builder, spark-submit `--conf`, or
+    * works as [[graft.Session]]'s `extra`, spark-submit `--conf`, or
     * [[applyTo]]. */
   def settings(maxRetries: Int = 10, poolSize: Int = 64,
       connectTimeoutMs: Int = 10000,
@@ -46,13 +46,6 @@ object CloudConf {
       "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter",
     // idempotent per-date re-runs
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
-
-  /** Apply to a session builder (the SplitMain path). */
-  def configure(b: SparkSession.Builder,
-      s: Map[String, String] = settings()): SparkSession.Builder = {
-    s.foreach { case (k, v) => b.config(k, v) }
-    b
-  }
 
   /** Apply to an already-built session: SQL confs are runtime-settable and
     * take effect immediately; `spark.hadoop.*` entries land in the

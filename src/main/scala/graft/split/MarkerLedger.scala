@@ -68,7 +68,8 @@ final class MarkerLedger(conf: Configuration) {
     * children only. The recursive walk above is the SPLIT engine's
     * pinned reference quirk (§2.2.5) and pays a per-file stat on the
     * whole subtree; a flat catalog needs one directory listing
-    * (LedgerProbe carries the measured gap at 10 years of dates). */
+    * (README, "Orchestrator ledger and suppression feed — measured at
+    * 10-year scale"). */
   def listStemsFlat(dir: String, suffix: String): Set[String] = {
     val path = new Path(PathOps.normalizePrefix(dir))
     val fs = fsFor(dir)

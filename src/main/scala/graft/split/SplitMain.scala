@@ -1,5 +1,7 @@
 package graft.split
 
+import graft.Session
+import graft.sources.CloudConf
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point for the incremental split pipeline — the Spark analog of
@@ -19,6 +21,24 @@ object SplitMain {
     else sys.env.getOrElse(name, default)
   }
 
+  /** Object-store deployments opt in to the S3A client/committer surface
+    * ([[CloudConf]] — the reference's boto3 Config analog) with
+    * `--CLOUD_WRITE true`; never applied implicitly: the committer
+    * protocol classes live in the spark-hadoop-cloud module, absent from
+    * plain local classpaths. */
+  private def cloudSettings(args: Array[String]): Map[String, String] =
+    if (getArg(args, "CLOUD_WRITE", "false").toBoolean) CloudConf.settings()
+    else Map.empty
+
+  /** [[Session.run]] with `--CLOUD_WRITE`'s settings in force: `extra` of
+    * a session created here, and applied to an adopted one too (a host
+    * driving a main in-process), which `Session` leaves as it is. */
+  private[graft] def withSession[T](app: String, args: Array[String])(
+      body: SparkSession => T): T = {
+    val cloud = cloudSettings(args)
+    Session.run(app, cloud) { spark => CloudConf.applyTo(spark, cloud); body(spark) }
+  }
+
   def main(args: Array[String]): Unit = {
     val config = SplitConfig(
       kind = getArg(args, "KIND", "spark"),
@@ -33,39 +53,23 @@ object SplitMain {
     require(config.inDir != null && config.outDir != null && config.markerDir != null,
       "IN_DIR, OUT_DIR and MARKER_DIR are required (flag or env var)")
 
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-split")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // object-store deployments opt in to the S3A client/committer surface
-    // (graft.sources.CloudConf — the reference's boto3 Config analog);
-    // never applied implicitly: the committer protocol classes live in the
-    // spark-hadoop-cloud module, absent from plain local classpaths
-    if (getArg(args, "CLOUD_WRITE", "false").toBoolean)
-      graft.sources.CloudConf.configure(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    getArg(args, "MODE", "batch") match {
-      case "streaming" =>
-        val ckpt = getArg(args, "CHECKPOINT_DIR")
-        require(ckpt != null, "CHECKPOINT_DIR is required in streaming mode")
-        val processed = new StreamingSplitJob(spark, config, ckpt).run()
-        println(s"[split] mode=streaming kind=${config.kind} " +
-          s"processed=${processed.mkString(",")}")
-      case _ =>
-        val summary = new SplitJob(spark, config).run()
-        println(s"[split] kind=${summary.kind} inputs=${summary.inputDates} " +
-          s"done=${summary.doneDates} processed=${summary.processedDates.mkString(",")} " +
-          s"skippedMissing=${summary.skippedMissing.mkString(",")} " +
-          s"skippedEmpty=${summary.skippedEmpty.mkString(",")} " +
-          s"droppedNullRows=${summary.droppedNullRows.toSeq.sorted
-            .map { case (d, n) => s"$d:$n" }.mkString(",")}")
+    withSession("graft-split", args) { spark =>
+      getArg(args, "MODE", "batch") match {
+        case "streaming" =>
+          val ckpt = getArg(args, "CHECKPOINT_DIR")
+          require(ckpt != null, "CHECKPOINT_DIR is required in streaming mode")
+          val processed = new StreamingSplitJob(spark, config, ckpt).run()
+          println(s"[split] mode=streaming kind=${config.kind} " +
+            s"processed=${processed.mkString(",")}")
+        case _ =>
+          val summary = new SplitJob(spark, config).run()
+          println(s"[split] kind=${summary.kind} inputs=${summary.inputDates} " +
+            s"done=${summary.doneDates} processed=${summary.processedDates.mkString(",")} " +
+            s"skippedMissing=${summary.skippedMissing.mkString(",")} " +
+            s"skippedEmpty=${summary.skippedEmpty.mkString(",")} " +
+            s"droppedNullRows=${summary.droppedNullRows.toSeq.sorted
+              .map { case (d, n) => s"$d:$n" }.mkString(",")}")
+      }
     }
-    spark.stop()
   }
 }

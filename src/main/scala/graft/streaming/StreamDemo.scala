@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Example/demo entry point: drain the streaming operators over a static
   * events table (Trigger.AvailableNow) and print the results — the same
@@ -11,24 +11,16 @@ import org.apache.spark.sql.SparkSession
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Session.run("graft-stream-demo") { implicit spark =>
+      val hourly = EventStream.drainToTable(spark,
+        EventStream.hourlyAgg(EventStream.readEvents(spark, dir)), "hourly", "complete")
+      println(s"[stream-demo] hourly buckets: ${hourly.count()}")
+      hourly.orderBy("hour_bucket", "event_type").show(3, truncate = false)
 
-    val hourly = EventStream.drainToTable(spark,
-      EventStream.hourlyAgg(EventStream.readEvents(spark, dir)), "hourly", "complete")
-    println(s"[stream-demo] hourly buckets: ${hourly.count()}")
-    hourly.orderBy("hour_bucket", "event_type").show(3, truncate = false)
-
-    val sessions = EventStream.drainToTable(spark,
-      EventStream.sessionize(EventStream.readEvents(spark, dir)).toDF(), "sessions", "update")
-    println(s"[stream-demo] users sessionized: ${sessions.select("user_id").distinct().count()}")
-    sessions.orderBy("user_id").show(3, truncate = false)
-    spark.stop()
+      val sessions = EventStream.drainToTable(spark,
+        EventStream.sessionize(EventStream.readEvents(spark, dir)).toDF(), "sessions", "update")
+      println(s"[stream-demo] users sessionized: ${sessions.select("user_id").distinct().count()}")
+      sessions.orderBy("user_id").show(3, truncate = false)
+    }
   }
 }

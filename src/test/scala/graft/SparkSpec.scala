@@ -6,19 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared SparkSession for all suites (one JVM-wide session; suites run in
   * the forked test JVM sequentially by default). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session("graft-test",
+    Map("spark.master" -> "local[8]", "spark.sql.shuffle.partitions" -> "8"))
   val sf: String = "/root/testdata/sf0.001"
 }
 

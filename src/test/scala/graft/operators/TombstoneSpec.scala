@@ -279,9 +279,10 @@ class TombstoneSpec extends SparkSpec {
         !plan.contains("BroadcastExchange"),
         s"tombstoneLarge must never broadcast the key set:\n${plan.take(2000)}")
       // and never a shuffled-hash BUILD of the key set either: a hash
-      // build cannot spill (the shape MassProbe measured OOM-aborting
-      // under the 4 GiB ceiling on the two-level pairing join) — the
-      // anti-join must be sort-merge, where both sides spill
+      // build cannot spill (the shape the retired MassProbe dev main
+      // measured OOM-aborting under the 4 GiB ceiling on the two-level
+      // pairing join) — the anti-join must be sort-merge, where both
+      // sides spill
       assert(plan.contains("SortMergeJoin") &&
         !plan.contains("ShuffledHashJoin"),
         s"tombstoneLarge must anti-join sort-merge (spillable):\n${plan.take(2000)}")

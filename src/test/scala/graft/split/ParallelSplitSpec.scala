@@ -5,7 +5,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 import scala.collection.mutable
 
@@ -58,6 +63,44 @@ class ParallelSplitSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
     }
     (result, jobs.sortBy(_._1).toSeq, writeStages.toMap)
+  }
+
+  /** The executed plan of every write `body` runs, from a query-execution
+    * listener registered around it. */
+  private def writePlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try body finally {
+      ListenerBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    (result, plans.toSeq.filter(nodes(_).exists(_.isInstanceOf[DataWritingCommandExec])))
+  }
+
+  /** Every node of `plan`, looking inside AQE's final plan, its query
+    * stages and command results. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+    case p => p.children.flatMap(nodes)
+  })
+
+  /** Ordered mode's contract in the plan: each of the `n` writes sorts
+    * within partitions by the split key, then by input sequence. */
+  private def assertSeqSorted(plans: Seq[SparkPlan], n: Int): Unit = {
+    assert(plans.size == n, plans.map(_.treeString))
+    for (p <- plans) {
+      val localSorts = nodes(p).collect { case s: SortExec if !s.global =>
+        s.sortOrder.map(_.child).collect { case a: Attribute => a.name }
+      }
+      assert(localSorts.contains(Seq("__split_key", "__seq")), p.treeString)
+    }
   }
 
   private def markerOutputs(markerDir: String, date: String): Set[String] =
@@ -147,10 +190,19 @@ class ParallelSplitSpec extends SparkSpec {
       val tmp = Files.createTempDirectory("split-ordered").toString
       val in = orderedDrop(s"$tmp/in/20250101.parquet", 1)
       assert(in.rdd.getNumPartitions > 1, "the drop must scan as several partitions")
-      val outcome = new Splitter(spark, preserveOrder = true)
-        .splitOne(s"$tmp/in/20250101.parquet", s"$tmp/out", "20250101")
+      val (outcome, plans) = writePlans {
+        new Splitter(spark, preserveOrder = true)
+          .splitOne(s"$tmp/in/20250101.parquet", s"$tmp/out", "20250101")
+      }
       assert(outcome.asInstanceOf[SplitOutcome.Written].distinctKeys == 64L)
+      assertSeqSorted(plans, 1)
       assertInputOrder(in, s"$tmp/out", "20250101")
+      // the salted ordered arm range-partitions, and sorts the same way
+      val (_, salted) = writePlans {
+        new Splitter(spark, preserveOrder = true, saltBuckets = 4)
+          .splitOne(s"$tmp/in/20250101.parquet", s"$tmp/out_salted", "20250101")
+      }
+      assertSeqSorted(salted, 1)
     }
   }
 
@@ -160,9 +212,12 @@ class ParallelSplitSpec extends SparkSpec {
       val ins = Seq("20250101", "20250102").zipWithIndex.map { case (d, i) =>
         d -> orderedDrop(s"$tmp/in/$d.parquet", i)
       }
-      val summary = new SplitJob(spark, SplitConfig("test", s"$tmp/in", s"$tmp/out",
-        s"$tmp/markers", preserveOrder = true)).run()
+      val (summary, plans) = writePlans {
+        new SplitJob(spark, SplitConfig("test", s"$tmp/in", s"$tmp/out",
+          s"$tmp/markers", preserveOrder = true)).run()
+      }
       assert(summary.processedDates == ins.map(_._1))
+      assertSeqSorted(plans, ins.size)
       for ((d, in) <- ins) assertInputOrder(in, s"$tmp/out", d)
     }
   }
