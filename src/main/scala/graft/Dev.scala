@@ -25,9 +25,11 @@ import scala.jdk.CollectionConverters._
   *   - `gap <sfDir> <q>` — one warm run, then one sampled run: every ~5 ms
   *     while no job is active, each live thread's stack is sampled and
   *     counted by signature (RUNNABLE threads by their most informative
-  *     frame; blocked threads inside graft code by where they blocked),
-  *     which attributes the gap seconds (wall minus the union of job
-  *     intervals, as in `time`).
+  *     frame; blocked threads inside graft code by where they blocked).
+  *     It prints the share of samples taken in the gap and each
+  *     signature's share of the gap samples, never seconds: sampling slows
+  *     the run it samples (q194 at sf0.01: 31.7 s against 20.2 s), so the
+  *     gap's seconds come from `time`'s unsampled reps.
   *   - `rows <sfDir> <q>` — the query's row count: a one-query check at
   *     any scale factor without a Verify pass over the registry (e.g.
   *     banded-candidate recall at sf0.1).
@@ -241,17 +243,15 @@ object Dev {
     })
     sampler.setDaemon(true)
     sampler.start()
-    val wall = try warmThenTime(spark, dir, name) { body =>
+    try warmThenTime(spark, dir, name) { body =>
       jobs.clear(); sampling = true
       try body finally sampling = false
     } finally { running = false; sampler.join() }
-    // the samples only attribute the gap; its seconds come from the jobs
     val gapFrac = gapSamples.toDouble / math.max(1, allSamples)
-    val gapSec = wall - jobSpan(jobs.done(spark))
-    println(f"GAP $name wall=$wall%.2f gapFrac=$gapFrac%.2f gapSec=$gapSec%.2f")
+    println(f"GAP $name samples=$allSamples gapFrac=$gapFrac%.2f")
     val total = counts.values.asScala.sum.toDouble
     counts.asScala.toSeq.sortBy(-_._2).take(30).foreach { case (sig, n) =>
-      println(f"GAP   ${n / total * gapSec}%6.2f s  n=$n%-5d $sig")
+      println(f"GAP   ${100 * n / total}%5.1f%%  n=$n%-5d $sig")
     }
   }
 

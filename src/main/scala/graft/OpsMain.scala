@@ -73,8 +73,7 @@ object OpsMain {
     val store = a("STORE", "")
     val fams = a("FAMILIES", "postings").split(",")
       .map(_.trim).filter(_.nonEmpty).toSeq
-    val pathFams = Set("spans", "components", "langmodel")
-    require(store.nonEmpty || fams.forall(pathFams.contains),
+    require(store.nonEmpty || fams.forall(OpsFamilies.PathNames.contains),
       "STORE is required (the table-name prefix) for table-backed " +
         "families; purely path-backed invocations (spans, components) " +
         "may give --STORE_DIR alone")
@@ -125,11 +124,8 @@ object OpsMain {
         // ID_COL/TEXT_COL, plus LANG_COL when the langmodel family's
         // exact unlearning needs the labels too)
         val corpus = Option(a("CORPUS")).map { dir =>
-          val prefix = graft.split.PathOps.normalizePrefix(dir)
-          val p = new org.apache.hadoop.fs.Path(prefix)
-          val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val drops = fsys.listStatus(p).map(_.getPath.toString)
-            .filter(_.endsWith(".parquet")).toSeq
+          val drops = new graft.split.MarkerLedger(
+            spark.sparkContext.hadoopConfiguration).catalog(dir)
           val cols = Seq(a("ID_COL", "id"), a("TEXT_COL", "text")) ++
             (if (fams.contains("langmodel")) Seq(a("LANG_COL", "lang"))
              else Seq.empty)
@@ -179,11 +175,11 @@ object OpsMain {
         // committed marker implies (components' labels/edges skip
         // no-new-cluster dates by design — held view only)
         val judge = fams.flatMap(f => OpsFamilies.ledgerStores(store, sd, f))
-        val heldDf = StoreInventory.datesOf(spark, held0)
+        val heldDf = StoreInventory.dates(spark, held0)
         val ledger = a("LEDGER")
         val lagDf = if (ledger != null)
-          StoreInventory.missingVsLedgerOf(spark, judge, ledger)
-        else StoreInventory.missingOf(spark, judge)
+          StoreInventory.missingVsLedger(spark, judge, ledger)
+        else StoreInventory.missing(spark, judge)
         val out = a("OUT")
         if (out != null) {
           // PATH SINK (the scale mode): at 10-year × many-family scale the

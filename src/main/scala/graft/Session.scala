@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration every entry point runs under: the
   * mains, the dev CLI and the test suite. Master is `SPARK_MASTER` if set,
-  * else `local[cores]` ([[cores]]); one shuffle partition per core, AQE on,
+  * else the `spark.master` that `spark-submit --master` passes as a system
+  * property (left to Spark: a builder setting would override it), else
+  * `local[cores]` ([[cores]]); one shuffle partition per core, AQE on,
   * UTC, `nanosAsLong` on (testdata `events.ts` may be INT64
   * TIMESTAMP(NANOS)), UI off, log level WARN. `extra` is applied last, so
   * it overrides any of these.
@@ -18,28 +20,35 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** Task slots, and shuffle partitions, of a session this module creates
-    * ([[coresIn]] of the environment). */
-  val cores: Int = coresIn(sys.env)
+    * ([[coresIn]] of the environment and system properties). */
+  val cores: Int = coresIn(sys.env, sys.props.toMap)
 
   /** `SPARK_GRAFT_CPUS` if set. Otherwise the host's core count when the
-    * master is the `local[cores]` built here; under a `SPARK_MASTER` the
-    * driver's cores say nothing of the cluster's slots (and the count sets
-    * the split's keyed-write task count, which AQE never expands), so it is
-    * 32, the count OpsMain and SplitMain have always used there. */
-  private[graft] def coresIn(env: Map[String, String]): Int =
+    * master is the `local[cores]` built here; under a `SPARK_MASTER` or a
+    * `spark.master` property the driver's cores say nothing of the
+    * cluster's slots (and the count sets the split's keyed-write task
+    * count, which AQE never expands), so it is 32, the count OpsMain and
+    * SplitMain have always used there. */
+  private[graft] def coresIn(env: Map[String, String],
+      props: Map[String, String] = Map.empty): Int =
     env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(
-      if (env.contains("SPARK_MASTER")) 32
+      if (env.contains("SPARK_MASTER") || props.contains("spark.master")) 32
       else Runtime.getRuntime.availableProcessors)
 
-  private[graft] def settings(app: String,
-      extra: Map[String, String]): Map[String, String] = Map(
-    "spark.master" -> sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"),
-    "spark.app.name" -> app,
-    "spark.sql.shuffle.partitions" -> cores.toString,
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false") ++ extra
+  private[graft] def settings(app: String, extra: Map[String, String],
+      env: Map[String, String] = sys.env,
+      props: Map[String, String] = sys.props.toMap): Map[String, String] = {
+    val n = coresIn(env, props)
+    val master = env.get("SPARK_MASTER")
+      .orElse(if (props.contains("spark.master")) None else Some(s"local[$n]"))
+    master.map("spark.master" -> _).toMap ++ Map(
+      "spark.app.name" -> app,
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false") ++ extra
+  }
 
   // getOrCreate also falls back to the process-wide DEFAULT session: a
   // host driving a main from a worker thread has no thread-local active

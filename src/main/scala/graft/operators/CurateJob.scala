@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.split.{Marker, MarkerLedger, PathOps}
+import graft.split.{MarkerLedger, PathOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** One incremental store family registered with the curation
   * orchestrator ([[CurateJob]]): how to land one ingestion date's slice
@@ -111,8 +109,9 @@ final case class CurateSummary(
 /** LEDGER-DRIVEN INCREMENTAL CURATION — the reference's one genuinely
   * novel idea (list input dates, anti-join the done-marker ledger,
   * process exactly the missing dates, commit a marker LAST —
-  * reference/src/Split/parquet-splitter.py:117-196, faithful for the
-  * split engine in [[graft.split.SplitJob]]) generalized over the
+  * reference/src/Split/parquet-splitter.py:117-196, written once in
+  * [[graft.split.MarkerLedger.run]] and faithful for the split engine in
+  * [[graft.split.SplitJob]]) generalized over the
   * incremental store families: a production pipeline runs "for each new
   * ingestion date: append to the dedup + semantic + postings + …
   * stores, emit the day's pair/gate reports" as ONE crash-resumable,
@@ -166,30 +165,11 @@ final case class CurateSummary(
   * quirk is a pinned reference behavior there, not a contract here). */
 final class CurateJob(spark: SparkSession, config: CurateConfig) {
   private val ledger = new MarkerLedger(spark.sparkContext.hadoopConfiguration)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(ZoneOffset.UTC)
-
-  /** Input dates: stems of the catalog's immediate `*.parquet` children —
-    * files OR dataset directories (see [[CurateConfig.inDir]]). Unlike the
-    * split ledger's recursive listing (a pinned reference quirk,
-    * SURVEY.md §2.2.5), the orchestrator's own catalog contract is flat:
-    * nested drops are invisible rather than discovered-then-skipped. */
-  private def inputDates(): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(
-      PathOps.normalizePrefix(config.inDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else PathOps.stemsWithSuffix(
-      fs.listStatus(p).map(_.getPath.toString).toSeq, ".parquet")
-  }
 
   def run(): CurateSummary = {
-    val input = inputDates()
-    val done = ledger.doneDatesFlat(config.markerDir)
-    val missing = (input -- done).toSeq.sorted
-
-    var processed = List.empty[String]
-    var skippedMissing = List.empty[String]
+    // the flat catalog contract (see [[CurateConfig.inDir]]): nested drops
+    // are invisible rather than discovered-then-skipped
+    val backlog = ledger.backlog(config.inDir, config.markerDir)
 
     // the suppression feed, read ONCE for the whole run and pinned
     // (persist + count: list×history-sized ids held in the block
@@ -209,80 +189,69 @@ final class CurateJob(spark: SparkSession, config: CurateConfig) {
       v
     }
 
-    try missing.foreach { date =>
-      val inPath = PathOps.normalizePrefix(config.inDir) + s"$date.parquet"
-      val fs = new org.apache.hadoop.fs.Path(inPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(inPath)))
-        skippedMissing ::= date // O7: discovered-then-gone ⇒ warn+skip
-      else {
-        // refuse a date a retention fold already consumed: its own
-        // partitions are gone, so the drop below would silently no-op
-        // and the re-append would double-count against the consolidated
-        // label — the folded-history contract, enforced where wired
-        config.families.foreach(f => f.foldedThrough.foreach(h =>
-          h(spark).foreach(hz => require(date > hz,
-            s"date $date is at or before family ${f.name}'s retention-" +
-              s"fold horizon $hz — its per-date history was consumed, " +
-              "reprocessing would double-count; if this is a " +
-              "marker-deleted reprocess, restore the marker (the fold " +
-              "output already contains the date); if it is a fresh " +
-              s"late-arriving backfill, re-stage it under a new date " +
-              s"after $hz"))))
-        val raw = spark.read.parquet(inPath)
-        // suppression BEFORE any append: a taken-down id re-delivered by
-        // this date must never reach a store (anti-join is
-        // list×slice-sized — the feed is takedown-history ids, not corpus)
-        val slice = suppress.fold(raw)(sup =>
-          raw.join(sup, Seq(config.suppressCol), "left_anti"))
-        // an EMPTY date (an all-suppressed re-crawl — exactly what the
-        // feed exists to produce — or an empty drop) lands NO partition
-        // in any store, so it is flagged `{date}.empty` alongside its
-        // marker: the ledger-keyed inventory reads the flag as
-        // expected-absent instead of false-flagging every family
-        // forever. One short-circuited take(1) action per date; the
-        // appends are skipped outright (zero-row writes would create no
-        // partition anyway — the flag makes that a stated invariant).
-        val empty = slice.isEmpty
-        // per-family block (crash-resume drop FIRST, then append, then
-        // report), fanned out across the independent families on a
-        // bounded driver pool — each family owns its tables/paths, so
-        // the only thing the sequential loop serialized was fixed
-        // latency (leases, DDL, commit protocol); see [[FamilyPar]] for
-        // why an arbitrary completion subset at a failure recovers
-        // exactly like the sequential prefix did (this drop re-runs)
-        val outputs = FamilyPar.map(config.families,
-            config.maxConcurrentFamilies) { f =>
-          f.drop(spark, date)
-          if (!empty) f.append(slice, date)
-          // an empty date appended nothing, so a family whose backing
-          // state does not exist yet (empty FIRST date) has nothing a
-          // report could scan — skip it rather than abort pre-marker
-          // (the [[CurateFamily.exists]] contract); a non-empty date
-          // just appended, so its state exists by construction
-          f.report.filter(_ => !empty || f.exists.forall(_(spark)))
-            .map { rep =>
-              val dir = PathOps.normalizePrefix(config.reportDir) + f.name
-              rep(spark, date).withColumn("ds", lit(date))
-                .write.mode("overwrite").partitionBy("ds")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(dir)
-              s"$dir/ds=$date"
-            }
-        }.flatten
-        val flag = new org.apache.hadoop.fs.Path(
-          PathOps.normalizePrefix(config.markerDir) + s"$date.empty")
-        val mfs = flag.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (empty) mfs.create(flag, true).close()
-        else mfs.delete(flag, false) // a re-staged non-empty reprocess heals
-        // marker LAST — the commit point (parquet-splitter.py:176-186)
-        ledger.writeMarker(config.markerDir,
-          Marker(config.kind, date, inPath, outputs,
-            tsFmt.format(Instant.now())))
-        processed ::= date
-      }
+    val cycle = try ledger.run(backlog, config.kind) { date =>
+      // refuse a date a retention fold already consumed: its own
+      // partitions are gone, so the drop below would silently no-op
+      // and the re-append would double-count against the consolidated
+      // label — the folded-history contract, enforced where wired
+      config.families.foreach(f => f.foldedThrough.foreach(h =>
+        h(spark).foreach(hz => require(date > hz,
+          s"date $date is at or before family ${f.name}'s retention-" +
+            s"fold horizon $hz — its per-date history was consumed, " +
+            "reprocessing would double-count; if this is a " +
+            "marker-deleted reprocess, restore the marker (the fold " +
+            "output already contains the date); if it is a fresh " +
+            s"late-arriving backfill, re-stage it under a new date " +
+            s"after $hz"))))
+      val raw = spark.read.parquet(backlog.inputKey(date))
+      // suppression BEFORE any append: a taken-down id re-delivered by
+      // this date must never reach a store (anti-join is
+      // list×slice-sized — the feed is takedown-history ids, not corpus)
+      val slice = suppress.fold(raw)(sup =>
+        raw.join(sup, Seq(config.suppressCol), "left_anti"))
+      // an EMPTY date (an all-suppressed re-crawl — exactly what the
+      // feed exists to produce — or an empty drop) lands NO partition
+      // in any store, so it is flagged `{date}.empty` alongside its
+      // marker: the ledger-keyed inventory reads the flag as
+      // expected-absent instead of false-flagging every family
+      // forever. One short-circuited take(1) action per date; the
+      // appends are skipped outright (zero-row writes would create no
+      // partition anyway — the flag makes that a stated invariant).
+      val empty = slice.isEmpty
+      // per-family block (crash-resume drop FIRST, then append, then
+      // report), fanned out across the independent families on a
+      // bounded driver pool — each family owns its tables/paths, so
+      // the only thing the sequential loop serialized was fixed
+      // latency (leases, DDL, commit protocol); see [[FamilyPar]] for
+      // why an arbitrary completion subset at a failure recovers
+      // exactly like the sequential prefix did (this drop re-runs)
+      val outputs = FamilyPar.map(config.families,
+          config.maxConcurrentFamilies) { f =>
+        f.drop(spark, date)
+        if (!empty) f.append(slice, date)
+        // an empty date appended nothing, so a family whose backing
+        // state does not exist yet (empty FIRST date) has nothing a
+        // report could scan — skip it rather than abort pre-marker
+        // (the [[CurateFamily.exists]] contract); a non-empty date
+        // just appended, so its state exists by construction
+        f.report.filter(_ => !empty || f.exists.forall(_(spark)))
+          .map { rep =>
+            val dir = PathOps.normalizePrefix(config.reportDir) + f.name
+            rep(spark, date).withColumn("ds", lit(date))
+              .write.mode("overwrite").partitionBy("ds")
+              .option("partitionOverwriteMode", "dynamic")
+              .parquet(dir)
+            s"$dir/ds=$date"
+          }
+      }.flatten
+      val flag = new org.apache.hadoop.fs.Path(
+        PathOps.normalizePrefix(config.markerDir) + s"$date.empty")
+      val mfs = flag.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (empty) mfs.create(flag, true).close()
+      else mfs.delete(flag, false) // a re-staged non-empty reprocess heals
+      Some(outputs) // the cycle commits the marker LAST
     } finally suppressEval.foreach(_.foreach(_.unpersist(false)))
-    CurateSummary(config.kind, input.size, done.size, missing,
-      processed.reverse, skippedMissing.reverse)
+    CurateSummary(config.kind, backlog.input.size, backlog.done.size,
+      backlog.missing, cycle.committed, cycle.skippedMissing)
   }
 }

@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.split.{Marker, MarkerLedger, PathOps}
+import graft.split.{MarkerLedger, PathOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** One store family registered with the maintenance orchestrator
   * ([[MaintainJob]]): how to run one maintenance window over the
@@ -114,8 +112,6 @@ final case class MaintainSummary(
   * audit contracts; the ledger is one driver-side string per window. */
 final class MaintainJob(spark: SparkSession, config: MaintainConfig) {
   private val ledger = new MarkerLedger(spark.sparkContext.hadoopConfiguration)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(ZoneOffset.UTC)
 
   def run(window: String): MaintainSummary = {
     if (ledger.doneDatesFlat(config.markerDir).contains(window))
@@ -148,9 +144,8 @@ final class MaintainJob(spark: SparkSession, config: MaintainConfig) {
       val expired = results.flatMap(_._1).toMap
       val audited = results.flatMap(_._2)
       // marker LAST — the commit point (parquet-splitter.py:176-186)
-      ledger.writeMarker(config.markerDir,
-        Marker(config.kind, window, config.auditDir,
-          config.families.map(_.name), tsFmt.format(Instant.now())))
+      ledger.commit(config.markerDir, config.kind, window, config.auditDir,
+        config.families.map(_.name))
       MaintainSummary(config.kind, window, skipped = false,
         config.families.map(_.name), audited, expired)
     }

@@ -119,6 +119,9 @@ object OpsFamilies {
     Seq("postings", "minhash", "semantic", "vectors", "sq8", "matryoshka",
       "maxsim", "langmodel", "spans", "components")
 
+  /** The path-backed families: they need `--STORE_DIR`, not `--STORE`. */
+  val PathNames: Set[String] = Set("spans", "components", "langmodel")
+
   /** Path families need `--STORE_DIR`; everything else is table-backed. */
   private def requireDir(fam: String, storeDir: String): String = {
     require(storeDir.nonEmpty,
@@ -177,7 +180,7 @@ object OpsFamilies {
   }
 
   /** Full inventory view over ALL families — table AND path entries
-    * (the HELD view: [[StoreInventory.datesOf]] lists whatever exists). */
+    * (the HELD view: [[StoreInventory.dates]] lists whatever exists). */
   def stores(store: String, storeDir: String,
       fam: String): Seq[StoreInventory.Entry] = fam match {
     case "spans" =>
@@ -394,11 +397,8 @@ object OpsFamilies {
           // before shingling, processDate's contract), and a superset
           // (staged future dates, suppressed ids) is harmless — their
           // signatures are not in the store, so they never match a band
-          val prefix = graft.split.PathOps.normalizePrefix(inDir)
-          val p = new org.apache.hadoop.fs.Path(prefix)
-          val fsys = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          val drops = fsys.listStatus(p).map(_.getPath.toString)
-            .filter(_.endsWith(".parquet")).toSeq
+          val drops = new graft.split.MarkerLedger(
+            sp.sparkContext.hadoopConfiguration).catalog(inDir)
           val allDocs = sp.read.parquet(drops: _*)
             .select(col(idCol).as("doc_id"), col(textCol).as("text"))
           IncrementalComponents.processDate(sp, newDocs, allDocs,

@@ -36,19 +36,14 @@ object StoreInventory {
     if (!e.store.exists(spark)) None
     else Some((e.store.partitions(spark), e.store.root(spark)))
 
-  /** One row per (family, ds) a family's table holds:
+  /** One row per (family, ds) a family's store holds:
     * `(family, ds, n_rows)`. Consolidated (`c_*`) and generation
     * (`r_*`) labels report as-is — they ARE the store's state; the
-    * per-date view below them is gone by design. */
-  def dates(spark: SparkSession,
-      families: Seq[(String, String)]): DataFrame =
-    datesOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))))
-
-  /** [[dates]] over mixed table/path entries. A path store whose root
+    * per-date view below them is gone by design. A path store whose root
     * exists but holds no `ds=` partition yet (a dir created by a
     * zero-row dynamic-overwrite write) contributes no rows rather than
     * a schema-inference failure. */
-  def datesOf(spark: SparkSession, families: Seq[Entry]): DataFrame = {
+  def dates(spark: SparkSession, families: Seq[Entry]): DataFrame = {
     val present = families.filter(e => resolve(spark, e) match {
       case None => false
       case Some((ps, _)) => e.store.isInstanceOf[TableLoc] || ps.nonEmpty
@@ -78,12 +73,7 @@ object StoreInventory {
     * every date (ADVICE r17: the two views must agree on whether a
     * family exists). Driver-side metadata only (families × dates
     * strings — the ledger scale shape). */
-  def missing(spark: SparkSession,
-      families: Seq[(String, String)]): DataFrame =
-    missingOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))))
-
-  /** [[missing]] over mixed table/path entries. */
-  def missingOf(spark: SparkSession, families: Seq[Entry]): DataFrame = {
+  def missing(spark: SparkSession, families: Seq[Entry]): DataFrame = {
     import spark.implicits._
     val resolved = families.map(e => e -> resolve(spark, e))
     val absent = resolved.collect { case (e, None) => e.family }
@@ -147,16 +137,9 @@ object StoreInventory {
     * exist reports `(family, "(absent)")` (the [[missing]]
     * convention). Driver-side metadata only: one marker-dir listing +
     * per-family partition listings + a bounded sidecar read per
-    * generation label. */
-  def missingVsLedger(spark: SparkSession, families: Seq[(String, String)],
-      markerDir: String): DataFrame =
-    missingVsLedgerOf(spark, families.map(f => Entry(f._1, TableLoc(f._2))),
-      markerDir)
-
-  /** [[missingVsLedger]] over mixed table/path entries — path stores
-    * share the fold protocol files, so every credit rule applies
-    * identically. */
-  def missingVsLedgerOf(spark: SparkSession, families: Seq[Entry],
+    * generation label. Path stores share the fold protocol files, so
+    * every credit rule applies to them identically. */
+  def missingVsLedger(spark: SparkSession, families: Seq[Entry],
       markerDir: String): DataFrame = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -164,7 +147,7 @@ object StoreInventory {
     // dates whose post-suppression slice was EMPTY landed no partition
     // anywhere by construction ([[CurateJob]]'s `{date}.empty` flag) —
     // expected-absent, not lagging
-    val empty = ledger.listStemsFlat(markerDir, ".empty")
+    val empty = ledger.listStems(markerDir, ".empty")
     val committed = ledger.doneTimesFlat(markerDir)
       .toSeq.filterNot(kv => empty.contains(kv._1)).sortBy(_._1)
     val rows = families.flatMap { e =>

@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.split.{Marker, MarkerLedger, PathOps}
+import graft.split.{MarkerLedger, PathOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** One store family registered with the takedown orchestrator
   * ([[TakedownJob]]): how to apply one request batch's tombstone ids to
@@ -82,8 +80,8 @@ final case class TakedownSummary(
   * store family exactly once, no matter how many times the job crashes
   * and re-runs. The protocol is the reference's marker ledger
   * (reference/src/Split/parquet-splitter.py:117-196 — list dates,
-  * anti-join done markers, process the missing, commit a marker LAST),
-  * with the exactly-once guarantee coming from a property the ingest
+  * anti-join done markers, process the missing, commit a marker LAST;
+  * [[graft.split.MarkerLedger.run]]), with the exactly-once guarantee coming from a property the ingest
   * side never needed: the per-date rewrite generation is DETERMINISTIC
   * (`{kind}_{date}`), and a [[StoreMaintenance.rewrite]] whose `r_<gen>`
   * label is already committed is a documented no-op.
@@ -197,26 +195,10 @@ object TakedownJob {
 
 final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
   private val ledger = new MarkerLedger(spark.sparkContext.hadoopConfiguration)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(ZoneOffset.UTC)
-  private def fs(p: String) = new org.apache.hadoop.fs.Path(p)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Request dates: stems of the catalog's immediate `*.parquet`
-    * children — flat, the [[CurateJob.inputDates]] contract. */
-  private def requestDates(): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(
-      PathOps.normalizePrefix(config.requestDir))
-    val f = fs(config.requestDir)
-    if (!f.exists(p)) Set.empty
-    else PathOps.stemsWithSuffix(
-      f.listStatus(p).map(_.getPath.toString).toSeq, ".parquet")
-  }
 
   /** A batch's id frame: FIRST column, aliased `id`, de-duplicated. */
-  private def batchIds(date: String): DataFrame = {
-    val raw = spark.read.parquet(
-      PathOps.normalizePrefix(config.requestDir) + s"$date.parquet")
+  private def batchIds(path: String): DataFrame = {
+    val raw = spark.read.parquet(path)
     raw.select(col(raw.columns.head).as("id")).distinct()
   }
 
@@ -230,9 +212,9 @@ final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
         config.families.filter(_.subtractive).map(_.name).mkString(", ") +
         ") — a cross-batch re-requested id would subtract twice; enable " +
         "dedupeAcrossDates or deregister the subtract families")
-    val input = requestDates()
-    val done = ledger.doneDatesFlat(config.markerDir)
-    val missing = (input -- done).toSeq.sorted
+    // request dates: the flat catalog contract, like [[CurateJob]]'s
+    val backlog = ledger.backlog(config.requestDir, config.markerDir)
+    val done = backlog.done
 
     // OUT-OF-ORDER FENCE for subtract families: a missing batch OLDER
     // than the newest done marker is indistinguishable between a
@@ -247,7 +229,7 @@ final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
     // marker and it applies exactly once.
     if (config.families.exists(_.subtractive))
       for (newest <- done.toSeq.sorted.lastOption;
-           stale <- missing.find(_ < newest))
+           stale <- backlog.missing.find(_ < newest))
         throw new IllegalStateException(
           s"batch $stale precedes the newest done marker $newest with " +
             "subtractive families registered — if its marker was deleted, " +
@@ -255,12 +237,6 @@ final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
             "already folded; restore the marker, or re-stage the ids " +
             s"under a new date after $newest")
 
-    def requestFileExists(date: String): Boolean = fs(config.requestDir)
-      .exists(new org.apache.hadoop.fs.Path(
-        PathOps.normalizePrefix(config.requestDir) + s"$date.parquet"))
-
-    var processed = List.empty[String]
-    var skippedMissing = List.empty[String]
     var idsApplied = Map.empty[String, Long]
     // dates whose ids the families have fully absorbed: markers done at
     // entry + dates this run completed. A done batch whose request file
@@ -269,7 +245,7 @@ final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
     // family registered the weakened dedupe could re-subtract a
     // re-requested id, so that combination fails loud (appliedIds'
     // source-of-truth rule).
-    val goneDone = done.filterNot(requestFileExists)
+    val goneDone = done.filterNot(ledger.hasInput(backlog, _))
     if (goneDone.nonEmpty && config.dedupeAcrossDates &&
         config.families.exists(_.subtractive))
       throw new IllegalStateException(
@@ -279,49 +255,38 @@ final class TakedownJob(spark: SparkSession, config: TakedownConfig) {
           "the files or delete their markers to disown the batches")
     var applied = done -- goneDone
 
-    missing.foreach { date =>
-      if (!requestFileExists(date))
-        skippedMissing ::= date // O7: discovered-then-gone ⇒ warn+skip
-      else {
-        val ids = batchIds(date)
-        // PINNED once per date: the anti-join over the applied-history
-        // multi-path scan would otherwise replan per family (the run
-        // already pays a count(), so the cache is free) — list-sized,
-        // released as soon as the date's rewrites are durable
-        val survivors =
-          (if (config.dedupeAcrossDates && applied.nonEmpty) {
-            // one multi-path scan of the applied history (not an N-way
-            // union — see appliedIds' plan-analysis note)
-            val prefix = PathOps.normalizePrefix(config.requestDir)
-            val hist = spark.read.parquet(
-              applied.toSeq.sorted.map(d => prefix + s"$d.parquet"): _*)
-            ids.join(hist.select(col(hist.columns.head).as("id")),
-              Seq("id"), "left_anti")
-          } else ids).persist()
-        try {
-          val n = survivors.count() // bounded: request-list-sized; pins too
-          if (n > 0) {
-            val gen = s"${config.kind}_$date"
-            // independent family rewrites overlap (the survivors frame
-            // is pinned by the count above, so threads share the cached
-            // blocks); a crash leaves an arbitrary completed subset,
-            // which the deterministic-gen no-op shield already covers
-            FamilyPar.foreach(config.families,
-              config.maxConcurrentFamilies)(_.delete(survivors, gen))
-          }
-          // marker LAST — the commit point (parquet-splitter.py:176-186)
-          ledger.writeMarker(config.markerDir,
-            Marker(config.kind, date,
-              PathOps.normalizePrefix(config.requestDir) + s"$date.parquet",
-              config.families.map(_.name),
-              tsFmt.format(Instant.now())))
-          idsApplied += date -> n
-        } finally survivors.unpersist(false)
-        applied += date
-        processed ::= date
-      }
+    val cycle = ledger.run(backlog, config.kind) { date =>
+      val ids = batchIds(backlog.inputKey(date))
+      // PINNED once per date: the anti-join over the applied-history
+      // multi-path scan would otherwise replan per family (the run
+      // already pays a count(), so the cache is free) — list-sized,
+      // released as soon as the date's rewrites are durable
+      val survivors =
+        (if (config.dedupeAcrossDates && applied.nonEmpty) {
+          // one multi-path scan of the applied history (not an N-way
+          // union — see appliedIds' plan-analysis note)
+          val hist = spark.read.parquet(
+            applied.toSeq.sorted.map(backlog.inputKey): _*)
+          ids.join(hist.select(col(hist.columns.head).as("id")),
+            Seq("id"), "left_anti")
+        } else ids).persist()
+      try {
+        val n = survivors.count() // bounded: request-list-sized; pins too
+        if (n > 0) {
+          val gen = s"${config.kind}_$date"
+          // independent family rewrites overlap (the survivors frame
+          // is pinned by the count above, so threads share the cached
+          // blocks); a crash leaves an arbitrary completed subset,
+          // which the deterministic-gen no-op shield already covers
+          FamilyPar.foreach(config.families,
+            config.maxConcurrentFamilies)(_.delete(survivors, gen))
+        }
+        idsApplied += date -> n
+      } finally survivors.unpersist(false)
+      applied += date
+      Some(config.families.map(_.name)) // the cycle commits the marker LAST
     }
-    TakedownSummary(config.kind, input.size, done.size, missing,
-      processed.reverse, skippedMissing.reverse, idsApplied)
+    TakedownSummary(config.kind, backlog.input.size, done.size, backlog.missing,
+      cycle.committed, cycle.skippedMissing, idsApplied)
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Fnv64, TextFunctions => TF}
-import graft.operators.{Dedup, Similarity, TableLoc}
+import graft.operators.{Dedup, Similarity, StoreInventory, TableLoc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1597,12 +1597,13 @@ object TextQueries {
         graft.operators.IncrementalPostings.appendNorms(slice, tbl, s"d$d")
       }
     }
-    val fams = Seq("tf" -> tbl, "norms" -> s"${tbl}_dl")
+    val fams = Seq(StoreInventory.Entry("tf", TableLoc(tbl)),
+      StoreInventory.Entry("norms", TableLoc(s"${tbl}_dl")))
     val out = graft.Phases.timed("serve") {
-      val lag = graft.operators.StoreInventory.missing(s, fams)
+      val lag = StoreInventory.missing(s, fams)
       require(lag.isEmpty, s"healthy store must not lag: ${lag.collect()
         .mkString(",")}")
-      graft.operators.StoreInventory.dates(s, fams).localCheckpoint()
+      StoreInventory.dates(s, fams).localCheckpoint()
     }
     tbls.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     out.orderBy(col("family"), col("ds"))
@@ -1864,8 +1865,9 @@ object TextQueries {
           (a.dropped ++ b.dropped).distinct.sorted,
           (a.retained ++ b.retained).distinct.sorted)
       }),
-      audit = Some((sp, _) => graft.operators.StoreInventory.dates(sp,
-        Seq("tf" -> tbl, "norms" -> s"${tbl}_dl"))))
+      audit = Some((sp, _) => StoreInventory.dates(sp,
+        Seq(StoreInventory.Entry("tf", TableLoc(tbl)),
+          StoreInventory.Entry("norms", TableLoc(s"${tbl}_dl"))))))
     val summary = graft.Phases.timed("maintain") {
       new graft.operators.MaintainJob(s, graft.operators.MaintainConfig(
         "maint", s"$tmp/markers", s"$tmp/audits", Seq(fam))).run("d1")
@@ -1965,13 +1967,13 @@ object TextQueries {
     // the out-of-band mutation the detector exists to catch: d3 vanishes
     // from ONE table with its curate marker still committed
     s.sql(s"ALTER TABLE ${base}_post_dl DROP PARTITION (ds='d3')")
-    val fams = Seq("tf" -> s"${base}_post", "norms" -> s"${base}_post_dl")
+    val fams = Seq(StoreInventory.Entry("tf", TableLoc(s"${base}_post")),
+      StoreInventory.Entry("norms", TableLoc(s"${base}_post_dl")))
     val out = graft.Phases.timed("serve") {
-      val held = graft.operators.StoreInventory.dates(s, fams)
+      val held = StoreInventory.dates(s, fams)
         .select(col("family"), col("ds"), col("n_rows"),
           lit("held").as("status"))
-      val lag = graft.operators.StoreInventory
-        .missingVsLedger(s, fams, s"$tmp/curmarkers")
+      val lag = StoreInventory.missingVsLedger(s, fams, s"$tmp/curmarkers")
         .select(col("family"), col("ds"), lit(0L).as("n_rows"),
           lit("missing").as("status"))
       held.unionAll(lag).localCheckpoint()

@@ -3,6 +3,8 @@ package graft.split
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
+import java.time.format.DateTimeFormatter
+import java.time.{Instant, ZoneOffset}
 
 /** Completion-marker document, the engine's commit record
   * (reference/src/Split/parquet-splitter.py:176-186 and
@@ -29,8 +31,26 @@ final case class Marker(
   }
 }
 
-/** Driver-side processing ledger: which dates exist, which are done, and the
-  * anti-join between them (reference/src/Split/parquet-splitter.py:125-138).
+/** One cycle's listing (reference O2–O5, parquet-splitter.py:125-138):
+  * the input dates, the done dates, and `missing = sorted(input − done)`,
+  * fixed before any date runs, so a caller can fence on all three first. */
+final case class Backlog(inDir: String, markerDir: String, input: Set[String],
+    done: Set[String]) {
+  val missing: Seq[String] = (input -- done).toSeq.sorted
+
+  /** The date's input key, rebuilt flat as `{inDir}/{date}.parquet`. */
+  def inputKey(date: String): String = PathOps.normalizePrefix(inDir) + s"$date.parquet"
+}
+
+/** What [[MarkerLedger.run]] did: the dates whose markers it wrote and the
+  * dates skipped because their input was gone (O7), both in date order. */
+final case class Cycle(committed: Seq[String], skippedMissing: Seq[String])
+
+/** Driver-side processing ledger: which dates exist, which are done, the
+  * anti-join between them, and the per-date cycle that commits a marker
+  * last (reference/src/Split/parquet-splitter.py:125-186). [[SplitJob]],
+  * [[graft.operators.CurateJob]] and [[graft.operators.TakedownJob]] run
+  * this one cycle and supply only their per-date bodies.
   *
   * This is job orchestration ABOVE the query layer — deliberately not a
   * Catalyst rule (SURVEY.md §4). All storage goes through the Hadoop
@@ -43,18 +63,29 @@ final class MarkerLedger(conf: Configuration) {
 
   private def fsFor(p: String): FileSystem = new Path(p).getFileSystem(conf)
 
-  /** List files under `dir` RECURSIVELY whose names end with `suffix`,
-    * mirroring the reference's paginated ListObjectsV2+suffix filter (O2),
-    * which lists the whole prefix subtree (parquet-splitter.py:48-57,125).
-    * Faithful consequence (quirk §2.2.5): a file in a NESTED sub-prefix is
-    * discovered here, but the per-date read key is reconstructed flat as
-    * `{inDir}/{stem}.parquet` (SplitJob), so a nested input turns into a
-    * MissingInput warn-and-skip — exactly the reference's
-    * discovered-then-NoSuchKey behavior (parquet-splitter.py:145,150-152). */
-  def listStems(dir: String, suffix: String): Set[String] = {
+  /** Stems of the files under `dir` whose names end with `suffix`. FLAT
+    * by default — the orchestrator catalog contract
+    * ([[graft.operators.CurateJob]]/TakedownJob/MaintainJob): immediate
+    * children only, files OR dataset directories, so nested drops are
+    * invisible rather than discovered-then-skipped; one directory listing
+    * (README, "Orchestrator ledger and suppression feed — measured at
+    * 10-year scale").
+    *
+    * `nested` lists the whole subtree instead, mirroring the reference's
+    * paginated ListObjectsV2+suffix filter (O2,
+    * parquet-splitter.py:48-57,125): the SPLIT engine's pinned reference
+    * quirk (§2.2.5), which pays a per-file stat on the subtree. Faithful
+    * consequence: a file in a NESTED sub-prefix is discovered, but the
+    * per-date read key is rebuilt flat ([[Backlog.inputKey]]), so a nested
+    * input turns into a missing-input warn-and-skip — exactly the
+    * reference's discovered-then-NoSuchKey behavior
+    * (parquet-splitter.py:145,150-152). */
+  def listStems(dir: String, suffix: String, nested: Boolean = false): Set[String] = {
     val path = new Path(PathOps.normalizePrefix(dir))
     val fs = fsFor(dir)
     if (!fs.exists(path)) Set.empty
+    else if (!nested)
+      PathOps.stemsWithSuffix(fs.listStatus(path).map(_.getPath.toString).toSeq, suffix)
     else {
       val files = scala.collection.mutable.ListBuffer.empty[String]
       val it = fs.listFiles(path, true)
@@ -63,28 +94,20 @@ final class MarkerLedger(conf: Configuration) {
     }
   }
 
-  /** FLAT variant of [[listStems]] — the orchestrator catalog contract
-    * ([[graft.operators.CurateJob]]/TakedownJob/MaintainJob): immediate
-    * children only. The recursive walk above is the SPLIT engine's
-    * pinned reference quirk (§2.2.5) and pays a per-file stat on the
-    * whole subtree; a flat catalog needs one directory listing
-    * (README, "Orchestrator ledger and suppression feed — measured at
-    * 10-year scale"). */
-  def listStemsFlat(dir: String, suffix: String): Set[String] = {
-    val path = new Path(PathOps.normalizePrefix(dir))
-    val fs = fsFor(dir)
-    if (!fs.exists(path)) Set.empty
-    else PathOps.stemsWithSuffix(
-      fs.listStatus(path).map(_.getPath.toString).toSeq, suffix)
+  /** The `{date}.parquet` inputs of a flat catalog, as full paths in date
+    * order: what a multi-path scan of every retained drop reads. An absent
+    * or empty catalog fails here, naming the directory, rather than in the
+    * scan's schema inference. */
+  def catalog(dir: String): Seq[String] = {
+    val dates = listStems(dir, ".parquet").toSeq.sorted
+    require(dates.nonEmpty, s"no {date}.parquet drops under $dir")
+    dates.map(d => PathOps.normalizePrefix(dir) + s"$d.parquet")
   }
 
-  def inputDates(inDir: String): Set[String] = listStems(inDir, ".parquet")
-  def doneDates(markerDir: String): Set[String] = listStems(markerDir, ".json")
-
-  /** [[doneDates]] on the flat contract — for the orchestrators' marker
+  /** Done dates on the flat contract — for the orchestrators' marker
     * dirs, which they create and keep flat by construction. */
   def doneDatesFlat(markerDir: String): Set[String] =
-    listStemsFlat(markerDir, ".json")
+    listStems(markerDir, ".json")
 
   /** Flat marker listing WITH commit times: date stem → the marker
     * file's modification time (epoch ms) — i.e. WHEN each date
@@ -105,12 +128,51 @@ final class MarkerLedger(conf: Configuration) {
         st.getModificationTime).toMap
   }
 
-  /** The incremental core: `sorted(input − done)` (O5, parquet-splitter.py:135-138). */
-  def missingDates(inDir: String, markerDir: String): Seq[String] =
-    (inputDates(inDir) -- doneDates(markerDir)).toSeq.sorted
+  /** List `{date}.parquet` inputs and `{date}.json` markers: flat for the
+    * orchestrators' catalogs, recursively (`nested`) for the split engine,
+    * the pinned reference quirk ([[listStems]]). */
+  def backlog(inDir: String, markerDir: String, nested: Boolean = false): Backlog =
+    Backlog(inDir, markerDir, listStems(inDir, ".parquet", nested),
+      listStems(markerDir, ".json", nested))
 
-  /** Write the marker — the commit point, only called after every split
-    * output for the date has been durably written (O14). */
+  /** Does the date's input still exist? A listed date whose key is gone
+    * (deleted since the listing, or nested under the split's recursive
+    * listing) is O7's warn-and-skip. */
+  def hasInput(b: Backlog, date: String): Boolean = {
+    val p = new Path(b.inputKey(date))
+    p.getFileSystem(conf).exists(p)
+  }
+
+  /** The incremental cycle (reference O16, parquet-splitter.py:140-186):
+    * each missing date in sorted order, one at a time. A date whose input
+    * is gone is skipped (O7). Otherwise `body(date)` runs; when it returns
+    * the date's outputs, the date's marker is written LAST — the commit
+    * point — and when it returns None the date is skipped with no marker,
+    * so the next cycle lists it again. An exception ends the cycle, so
+    * the markers it wrote cover exactly the missing dates before the
+    * failed one. */
+  def run(b: Backlog, kind: String)(body: String => Option[Seq[String]]): Cycle = {
+    val committed = Seq.newBuilder[String]
+    val skipped = Seq.newBuilder[String]
+    b.missing.foreach { date =>
+      if (!hasInput(b, date)) skipped += date
+      else body(date).foreach { outputs =>
+        commit(b.markerDir, kind, date, b.inputKey(date), outputs)
+        committed += date
+      }
+    }
+    Cycle(committed.result(), skipped.result())
+  }
+
+  /** Write the marker for `date`, stamped now — the commit point, only
+    * called after every output for the date has been durably written
+    * (O14). */
+  def commit(markerDir: String, kind: String, date: String, inputKey: String,
+      outputs: Seq[String]): Unit =
+    writeMarker(markerDir, Marker(kind, date, inputKey, outputs,
+      MarkerLedger.stamp.format(Instant.now())))
+
+  /** Write a marker document as given. */
   def writeMarker(markerDir: String, marker: Marker): Unit = {
     val p = new Path(PathOps.normalizePrefix(markerDir) + marker.date + ".json")
     val fs = fsFor(markerDir)
@@ -118,4 +180,10 @@ final class MarkerLedger(conf: Configuration) {
     try out.write(marker.toJson.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+}
+
+object MarkerLedger {
+  /** The markers' `generated_at` format (UTC, whole seconds). */
+  private val stamp = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
+    .withZone(ZoneOffset.UTC)
 }

@@ -1,8 +1,6 @@
 package graft.split
 
 import org.apache.spark.sql.SparkSession
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** Job configuration (reference O1, parquet-splitter.py:14-26). MAX_WORKERS
   * has no analog: Spark task parallelism replaces the thread pool.
@@ -37,11 +35,12 @@ final case class SplitSummary(
     skippedEmpty: Seq[String],
     droppedNullRows: Map[String, Long])
 
-/** Orchestrator — the full incremental split pipeline (reference O16):
-  * list inputs, list markers, anti-join, then per missing date
-  * read→validate→split→write→marker, each date in one Spark pass (see
-  * [[Splitter.splitOne]]: one keyed write over every shuffle partition,
-  * with the guard counts taken inside it, then a parallel promote).
+/** Orchestrator — the full incremental split pipeline (reference O16): the
+  * [[MarkerLedger]] cycle (list inputs recursively and markers, anti-join,
+  * per missing date skip a gone input, marker last) with one date's split
+  * as its body, each date in one Spark pass (see [[Splitter.splitOne]]: one
+  * keyed write over every shuffle partition, with the guard counts taken
+  * inside it, then a parallel promote).
   *
   * Dates run sequentially, as in the reference: markers commit in sorted
   * date order and the run stops at the first failed date, so every marker
@@ -53,39 +52,27 @@ final class SplitJob(spark: SparkSession, config: SplitConfig) {
   private val ledger = new MarkerLedger(spark.sparkContext.hadoopConfiguration)
   private val splitter = new Splitter(spark, config.keyCol, config.preserveOrder,
     config.maxRecordsPerFile, config.saltBuckets)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(ZoneOffset.UTC)
 
   def run(): SplitSummary = {
-    val input = ledger.inputDates(config.inDir)
-    val done = ledger.doneDates(config.markerDir)
-    val missing = (input -- done).toSeq.sorted
-
-    var processed = List.empty[String]
-    var skippedMissing = List.empty[String]
+    val backlog = ledger.backlog(config.inDir, config.markerDir, nested = true)
     var skippedEmpty = List.empty[String]
     var dropped = Map.empty[String, Long]
 
-    missing.foreach { date =>
-      val inPath = PathOps.normalizePrefix(config.inDir) + s"$date.parquet"
-      splitter.splitOne(inPath, config.outDir, date) match {
+    val cycle = ledger.run(backlog, config.kind) { date =>
+      splitter.splitPresent(backlog.inputKey(date), config.outDir, date) match {
         case SplitOutcome.Written(outputs, _, nullRows) =>
-          // marker LAST — the commit point (parquet-splitter.py:176-186)
-          ledger.writeMarker(config.markerDir,
-            Marker(config.kind, date, inPath, outputs, tsFmt.format(Instant.now())))
-          processed ::= date
           dropped += date -> nullRows
-        case SplitOutcome.MissingInput => skippedMissing ::= date
+          Some(outputs)
         case SplitOutcome.EmptyInput =>
           // O8 policy: faithful mode never commits (livelock quirk); the
           // fixed mode writes an empty-outputs marker so the date is done
-          if (config.emptyInputMarker)
-            ledger.writeMarker(config.markerDir,
-              Marker(config.kind, date, inPath, Nil, tsFmt.format(Instant.now())))
           skippedEmpty ::= date
+          if (config.emptyInputMarker) Some(Nil) else None
+        case SplitOutcome.MissingInput => None // the cycle checked the input
       }
     }
-    SplitSummary(config.kind, input.size, done.size, missing,
-      processed.reverse, skippedMissing.reverse, skippedEmpty.reverse, dropped)
+    SplitSummary(config.kind, backlog.input.size, backlog.done.size, backlog.missing,
+      cycle.committed.filter(dropped.contains), cycle.skippedMissing,
+      skippedEmpty.reverse, dropped)
   }
 }

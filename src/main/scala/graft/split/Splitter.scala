@@ -87,10 +87,16 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
     * `{k}/{date}.parquet` — a few FS metadata ops per key, run in parallel
     * across keys. */
   def splitOne(inPath: String, outDir: String, date: String): SplitOutcome = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(inPath).getFileSystem(conf)
-    if (!fs.exists(new Path(inPath))) return SplitOutcome.MissingInput
+    val p = new Path(inPath)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      SplitOutcome.MissingInput
+    else splitPresent(inPath, outDir, date)
+  }
 
+  /** [[splitOne]] past its missing-file guard: the ledger's cycle has
+    * already checked that the input exists. */
+  private[split] def splitPresent(inPath: String, outDir: String,
+      date: String): SplitOutcome = {
     val df = spark.read.parquet(inPath)
     require(df.columns.contains(keyCol),
       s"input $inPath is missing required column '$keyCol'") // O9, job-fatal

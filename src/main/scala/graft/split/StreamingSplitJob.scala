@@ -3,8 +3,6 @@ package graft.split
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** Streaming-native variant of the split pipeline: a Structured Streaming
   * file source with `Trigger.AvailableNow` replaces the marker ledger's
@@ -25,9 +23,6 @@ import java.time.{Instant, ZoneOffset}
   */
 final class StreamingSplitJob(spark: SparkSession, config: SplitConfig,
     checkpointDir: String) {
-
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(ZoneOffset.UTC)
 
   def run(): Seq[String] = {
     val inDir = PathOps.normalizePrefix(config.inDir)
@@ -55,9 +50,8 @@ final class StreamingSplitJob(spark: SparkSession, config: SplitConfig,
           val forDate = batch
             .filter(col("__src").endsWith(s"/$date.parquet")).drop("__src")
           val outputs = splitter.writeGroups(forDate, config.outDir, date)
-          ledger.writeMarker(config.markerDir,
-            Marker(config.kind, date, inDir + s"$date.parquet", outputs.sorted,
-              tsFmt.format(Instant.now())))
+          ledger.commit(config.markerDir, config.kind, date,
+            inDir + s"$date.parquet", outputs.sorted)
           processed.synchronized { processed += date }
         }
       }

@@ -50,6 +50,23 @@ class SessionSpec extends SparkSpec {
       "SPARK_GRAFT_CPUS" -> "64")) == 64)
   }
 
+  test("master: SPARK_MASTER, else a spark-submit --master (the spark.master property) left to Spark, else local[cores]") {
+    val host = Runtime.getRuntime.availableProcessors
+    val local = Session.settings("app", Map.empty, env = Map.empty, props = Map.empty)
+    assert(local("spark.master") == s"local[$host]")
+    assert(local("spark.sql.shuffle.partitions") == host.toString)
+    // a builder setting would override the property spark-submit sets
+    val submitted = Map("spark.master" -> "yarn")
+    val onYarn = Session.settings("app", Map.empty, env = Map.empty, props = submitted)
+    assert(!onYarn.contains("spark.master"), onYarn)
+    assert(onYarn("spark.sql.shuffle.partitions") == "32")
+    assert(Session.coresIn(Map.empty, submitted) == 32)
+    assert(Session.coresIn(Map("SPARK_GRAFT_CPUS" -> "6"), submitted) == 6)
+    val env = Map("SPARK_MASTER" -> "spark://head:7077")
+    assert(Session.settings("app", Map.empty, env, submitted)("spark.master") ==
+      "spark://head:7077")
+  }
+
   test("--CLOUD_WRITE reaches an adopted session: OpsMain.main applies CloudConf to it") {
     // an isolated session, so nothing the flag sets reaches the suite's
     val s2 = spark.newSession()

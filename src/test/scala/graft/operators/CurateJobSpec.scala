@@ -260,7 +260,7 @@ class CurateJobSpec extends SparkSpec {
         .map(_.getString(0)).toSet
       assert(ds == Set("ds=d0"), ds.toString)
       val fams = Seq("tf" -> "cur_e_post", "mh" -> "cur_e_mh")
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty,
         "an empty-flagged date must not read as lag")
       // marker-delete reprocess with the takedown disowned: d1 lands
@@ -273,7 +273,7 @@ class CurateJobSpec extends SparkSpec {
       assert(s2.processedDates == Seq("d1"), s2.toString)
       assert(markerNames(tmp) == Set("d0.json", "d1.json"),
         markerNames(tmp).toString)
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty)
     } finally dropStores("cur_e")
   }
@@ -316,7 +316,7 @@ class CurateJobSpec extends SparkSpec {
       assert(ds == Set("ds=d1"), ds.toString)
       // the detector reads d0 as expected-absent (the .empty flag)
       val fams = Seq("tf" -> "cur_ef_post", "mh" -> "cur_ef_mh")
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty,
         "an empty-flagged first date must not read as lag")
       // and once the store EXISTS, a later empty date still reports

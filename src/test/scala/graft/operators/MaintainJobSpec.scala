@@ -121,7 +121,7 @@ class MaintainJobSpec extends SparkSpec {
         expire = Some((sp, w) =>
           StoreMaintenance.expire(sp, TableLoc("mnt_e"), w)),
         audit = Some((sp, _) =>
-          StoreInventory.dates(sp, Seq("post" -> "mnt_e"))))
+          StoreInventory.dates(sp, Seq(StoreInventory.Entry("post", TableLoc("mnt_e"))))))
       val s1 = job(tmp, Seq(fam)).run("d1")
       assert(!s1.skipped && s1.expired == Map("post" -> Seq("c_d1")),
         s1.toString)

@@ -25,32 +25,32 @@ class StoreInventorySpec extends SparkSpec {
     try {
       build(tbl)
       val fams = Seq("tf" -> tbl, "norms" -> s"${tbl}_dl")
-      assert(StoreInventory.missing(spark, fams).isEmpty,
+      assert(StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).isEmpty,
         "a healthy store must not lag")
       // the inventory counts partitions' rows
-      val inv = StoreInventory.dates(spark, fams).collect()
+      val inv = StoreInventory.dates(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       assert(inv.keySet.map(_._2) == Set("d0", "d1", "d2"))
       assert(inv.forall(_._2 > 0))
 
       // 1. a date dropped OUTSIDE the orchestrators = lag, named exactly
       spark.sql(s"ALTER TABLE ${tbl}_dl DROP PARTITION (ds='d1')")
-      val lag = StoreInventory.missing(spark, fams).collect()
+      val lag = StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag == Set(("norms", "d1")), lag.toString)
       // restore it
       IncrementalPostings.appendNorms(
         docs.filter(pmod(col("doc_id"), lit(3L)) === 1), tbl, "d1")
-      assert(StoreInventory.missing(spark, fams).isEmpty)
+      assert(StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).isEmpty)
 
       // 2. a retention fold is NOT lag: tf's d0+d1 live under c_d1
       StoreMaintenance.compact(spark, TableLoc(tbl), "d1",
         merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
-      assert(StoreInventory.missing(spark, fams).isEmpty,
+      assert(StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).isEmpty,
         "pre-horizon absences live under the consolidated label")
       // but a POST-horizon date dropped from the folded family still is
       spark.sql(s"ALTER TABLE $tbl DROP PARTITION (ds='d2')")
-      val lag2 = StoreInventory.missing(spark, fams).collect()
+      val lag2 = StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag2 == Set(("tf", "d2")), lag2.toString)
       IncrementalPostings.appendCountsBucketed(
@@ -63,7 +63,7 @@ class StoreInventorySpec extends SparkSpec {
         gen = "inv_g1")
       // the delete rewrote BOTH tables to r_inv_g1: neither family has
       // plain dates to compare, so nothing lags
-      assert(StoreInventory.missing(spark, fams).isEmpty,
+      assert(StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).isEmpty,
         "gen-rewritten families are skipped, not false-flagged")
     } finally Seq(tbl, s"${tbl}_dl").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -91,7 +91,7 @@ class StoreInventorySpec extends SparkSpec {
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3).select("doc_id"),
         gen = "invl_g1")
       // both committed dates predate the fold marker: credited, no lag
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty,
         "dates the gen rewrite consumed must be credited, not flagged")
       // d2 lands AFTER the rewrite and commits
@@ -99,15 +99,15 @@ class StoreInventorySpec extends SparkSpec {
       IncrementalPostings.appendCountsBucketed(s2, tbl, "d2")
       IncrementalPostings.appendNorms(s2, tbl, "d2")
       mark("d2")
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty)
       // a post-rewrite date dropped OUTSIDE the orchestrator is named —
       // exactly where the partition-keyed missing() goes blind (the
       // family holds an r_* label, so it skips the family outright)
       spark.sql(s"ALTER TABLE ${tbl}_dl DROP PARTITION (ds='d2')")
-      assert(StoreInventory.missing(spark, fams).isEmpty,
+      assert(StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).isEmpty,
         "partition-keyed detector is blind through a gen rewrite")
-      val lag = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")
+      val lag = StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))), s"$tmp/markers")
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag == Set(("norms", "d2")), lag.toString)
       // an UNCOMMITTED rewrite (crashed: pending sentinel still
@@ -125,7 +125,7 @@ class StoreInventorySpec extends SparkSpec {
       fsys.create(sentinel, true).close()
       try {
         val lag2 = StoreInventory.missingVsLedger(spark,
-          Seq("tf" -> tbl), s"$tmp/markers")
+          Seq(StoreInventory.Entry("tf", TableLoc(tbl))), s"$tmp/markers")
           .collect().map(r => (r.getString(0), r.getString(1))).toSet
         assert(lag2 == Set(("tf", "d0"), ("tf", "d1")), lag2.toString)
         // …but sentinel + commit marker = a fold that crashed AFTER its
@@ -134,14 +134,14 @@ class StoreInventorySpec extends SparkSpec {
         // whose serves read perfectly)
         fsys.create(cmarker, true).close()
         assert(StoreInventory.missingVsLedger(spark,
-          Seq("tf" -> tbl), s"$tmp/markers").isEmpty,
+          Seq(StoreInventory.Entry("tf", TableLoc(tbl))), s"$tmp/markers").isEmpty,
           "a committed-but-uncleaned rewrite must keep its fold credit")
       } finally {
         fsys.delete(sentinel, false); fsys.delete(cmarker, false)
       }
       // a vanished table reports the explicit absent row
       spark.sql(s"DROP TABLE ${tbl}_dl")
-      val lag3 = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")
+      val lag3 = StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))), s"$tmp/markers")
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag3.contains(("norms", "(absent)")), lag3.toString)
     } finally Seq(tbl, s"${tbl}_dl").foreach(t =>
@@ -169,7 +169,7 @@ class StoreInventorySpec extends SparkSpec {
       StoreMaintenance.expire(spark, TableLoc(tbl), "d1")
       // the norms table expires its plain dates directly (no fold first)
       StoreMaintenance.expire(spark, TableLoc(s"${tbl}_dl"), "d1")
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty,
         "policy-expired dates must credit, not read as lag")
       // the curation fence sees the expiry too: a marker-deleted
@@ -178,7 +178,7 @@ class StoreInventorySpec extends SparkSpec {
         Seq(tbl, s"${tbl}_dl").map(TableLoc)) == Some("d1"))
       // a NON-expired date hand-dropped afterwards still flags
       spark.sql(s"ALTER TABLE ${tbl}_dl DROP PARTITION (ds='d2')")
-      val lag = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")
+      val lag = StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))), s"$tmp/markers")
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag == Set(("norms", "d2")), lag.toString)
     } finally Seq(tbl, s"${tbl}_dl").foreach(t =>
@@ -203,7 +203,7 @@ class StoreInventorySpec extends SparkSpec {
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3).select("doc_id"),
         gen = "invs_g1")
       val fams = Seq("tf" -> tbl)
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty, "sidecar names d0+d1 — credited")
       val hconf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(
@@ -224,7 +224,7 @@ class StoreInventorySpec extends SparkSpec {
       val d2marker = new org.apache.hadoop.fs.Path(s"$tmp/markers/d2.json")
       val mfs = d2marker.getFileSystem(hconf)
       mfs.setTimes(d2marker, foldAt - 10000, -1)
-      val lag = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")
+      val lag = StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))), s"$tmp/markers")
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag == Set(("tf", "d2")),
         s"the sidecar must beat a skewed marker mtime: $lag")
@@ -234,13 +234,13 @@ class StoreInventorySpec extends SparkSpec {
       // marker in the same mtime tick as the fold credits rather than
       // mass-false-alarming (coarse-granularity filesystems)
       fsys.delete(sidecar, false)
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty, "legacy fallback keeps mtime credit")
       mfs.setTimes(d2marker, foldAt, -1) // same tick exactly
-      assert(StoreInventory.missingVsLedger(spark, fams,
+      assert(StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))),
         s"$tmp/markers").isEmpty, "same-tick commit must credit (<=)")
       mfs.setTimes(d2marker, foldAt + 10000, -1) // clearly post-fold
-      val lag2 = StoreInventory.missingVsLedger(spark, fams, s"$tmp/markers")
+      val lag2 = StoreInventory.missingVsLedger(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2))), s"$tmp/markers")
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag2 == Set(("tf", "d2")), lag2.toString)
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -255,10 +255,10 @@ class StoreInventorySpec extends SparkSpec {
       val fams = Seq("tf" -> tbl, "norms" -> s"${tbl}_dl")
       // one dedicated row — not three per-date false-lag rows (ADVICE
       // r17: missing() and dates() must agree on whether a family exists)
-      val lag = StoreInventory.missing(spark, fams).collect()
+      val lag = StoreInventory.missing(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       assert(lag == Set(("norms", "(absent)")), lag.toString)
-      val seen = StoreInventory.dates(spark, fams).select("family")
+      val seen = StoreInventory.dates(spark, fams.map(f => StoreInventory.Entry(f._1, TableLoc(f._2)))).select("family")
         .distinct().collect().map(_.getString(0)).toSet
       assert(seen == Set("tf"), seen.toString)
     } finally Seq(tbl, s"${tbl}_dl").foreach(t =>

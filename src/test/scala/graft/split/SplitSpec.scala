@@ -66,6 +66,72 @@ class SplitSpec extends SparkSpec {
     assert(third.processedDates == Seq("20251114"))
   }
 
+  // The ledger cycle on generated drops (no golden corpus needed): one plain
+  // parquet file per date, 12 keys each.
+  private val genDates = Seq("20250101", "20250102", "20250103")
+
+  private def genDrop(tmp: String, date: String, keyCol: String = "item_id"): Unit =
+    PlainParquet.write(spark.range(48).select(
+      format_string("k%02d", pmod(col("id") * 5 + date.toLong, lit(12))).as(keyCol),
+      (col("id") + date.toLong).as("sales_figures")), s"$tmp/in/$date.parquet")
+
+  private def genJob(tmp: String) = new SplitJob(spark,
+    SplitConfig("test", s"$tmp/in", s"$tmp/out", s"$tmp/markers"))
+
+  private def markerOf(tmp: String, date: String): Option[String] = {
+    val p = Paths.get(s"$tmp/markers/$date.json")
+    if (Files.exists(p)) Some(new String(Files.readAllBytes(p))) else None
+  }
+
+  test("ledger on generated drops: second run is a no-op; deleting one marker reprocesses exactly that date") {
+    val tmp = Files.createTempDirectory("split-ledger-gen").toString
+    genDates.foreach(genDrop(tmp, _))
+    val first = genJob(tmp).run()
+    assert(first.missingDates == genDates && first.processedDates == genDates)
+    val markers = genDates.map(d => d -> markerOf(tmp, d).get).toMap
+    genDates.foreach { d =>
+      assert(markers(d).contains(s""""input_key": "$tmp/in/$d.parquet""""), markers(d))
+      assert(markers(d).contains("\"output_count\": 12"), markers(d))
+    }
+
+    val second = genJob(tmp).run()
+    assert(second.inputDates == 3 && second.doneDates == 3)
+    assert(second.missingDates.isEmpty && second.processedDates.isEmpty &&
+      second.skippedMissing.isEmpty && second.skippedEmpty.isEmpty)
+    genDates.foreach(d => assert(markerOf(tmp, d).contains(markers(d)), d))
+
+    Files.delete(Paths.get(s"$tmp/markers/20250102.json"))
+    val third = genJob(tmp).run()
+    assert(third.doneDates == 2)
+    assert(third.missingDates == Seq("20250102") && third.processedDates == Seq("20250102"))
+    assert(markerOf(tmp, "20250101").contains(markers("20250101")))
+    assert(markerOf(tmp, "20250103").contains(markers("20250103")))
+    val redone = markerOf(tmp, "20250102").get
+    val stamp = """"generated_at": "[^"]*"""".r
+    assert(stamp.replaceAllIn(redone, "") == stamp.replaceAllIn(markers("20250102"), ""))
+  }
+
+  test("ledger on generated drops: a date without the key column fails the run after the dates before it; a rerun resumes there") {
+    val tmp = Files.createTempDirectory("split-ledger-fail").toString
+    genDrop(tmp, "20250101")
+    genDrop(tmp, "20250102", keyCol = "sku")
+    genDrop(tmp, "20250103")
+    val e = intercept[IllegalArgumentException](genJob(tmp).run())
+    assert(e.getMessage.contains("missing required column 'item_id'"), e.getMessage)
+    assert(markerOf(tmp, "20250101").nonEmpty)
+    assert(markerOf(tmp, "20250102").isEmpty && markerOf(tmp, "20250103").isEmpty)
+    val before = markerOf(tmp, "20250101")
+
+    Files.delete(Paths.get(s"$tmp/in/20250102.parquet"))
+    genDrop(tmp, "20250102")
+    val resumed = genJob(tmp).run()
+    assert(resumed.doneDates == 1)
+    assert(resumed.missingDates == Seq("20250102", "20250103"))
+    assert(resumed.processedDates == Seq("20250102", "20250103"))
+    assert(markerOf(tmp, "20250101") == before)
+    genDates.foreach(d => assert(markerOf(tmp, d).exists(_.contains("\"output_count\": 12")), d))
+  }
+
   test("quirk parity: null keys dropped and counted; empty input never commits a marker") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("split-quirks").toString
