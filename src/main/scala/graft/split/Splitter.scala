@@ -1,8 +1,13 @@
 package graft.split
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.io.LocalFs
 import graft.operators.FamilyPar
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** One-date split result (analog of the per-date section of process_kind,
@@ -68,7 +73,7 @@ object SplitOutcome {
 final class Splitter(spark: SparkSession, keyCol: String = "item_id",
     preserveOrder: Boolean = false, maxRecordsPerFile: Long = 0L,
     saltBuckets: Int = 1) {
-  import Splitter.{CId, PartId}
+  import Splitter.{CId, OutputFs, PartId}
   require(saltBuckets >= 1, "saltBuckets must be >= 1")
 
   /** Reference-parity layout contract: exactly one part file per key. */
@@ -77,9 +82,11 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
   private def shufflePartitions: Int = spark.sessionState.conf.numShufflePartitions
 
   /** Split one date in one Spark pass. The missing-file and missing-column
-    * guards need no job; the empty-input guard and the null-key count are
-    * taken INSIDE the keyed write by an `Observation` (row count and
-    * non-null key count), so the input is scanned once. An empty date
+    * guards need no job: a plain-file input's schema comes from its footer
+    * ([[scan]]), so no schema-inference job runs either. The empty-input
+    * guard and the null-key count are taken INSIDE the keyed write by an
+    * `Observation` (row count and non-null key count), so the input is
+    * scanned once and the date runs only the write's own jobs. An empty date
     * writes nothing: its staging dir holds no key dir and is deleted by the
     * promote. Layout parity: writes via `partitionBy` on a duplicated key
     * column (so the data keeps `keyCol`, like the reference), then the
@@ -97,7 +104,7 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
     * already checked that the input exists. */
   private[split] def splitPresent(inPath: String, outDir: String,
       date: String): SplitOutcome = {
-    val df = spark.read.parquet(inPath)
+    val df = scan(inPath)
     require(df.columns.contains(keyCol),
       s"input $inPath is missing required column '$keyCol'") // O9, job-fatal
 
@@ -116,11 +123,37 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
     SplitOutcome.Written(outputs.sorted, distinctKeys, total - counted("keyed"))
   }
 
+  /** The scan of one date's input. A plain parquet file, the reference's
+    * drop shape, is scanned with the schema read from its footer in this
+    * thread: the Spark schema stored there, else the parquet schema
+    * converted under the session's conf, which is what `spark.read.parquet`
+    * infers, without its schema-inference job. Anything else (a dataset
+    * directory, whose parts and partition dirs Spark reconciles) is left to
+    * Spark's inference. */
+  private[split] def scan(inPath: String): DataFrame = {
+    val p = new Path(inPath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (!status.isFile) spark.read.parquet(inPath)
+    else {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+      val schema =
+        try ParquetFileFormat.readSchemaFromFooter(new Footer(p, reader.getFooter),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        finally reader.close()
+      spark.read.schema(schema).parquet(inPath)
+    }
+  }
+
   /** The keyed write path alone (no guards): output files per distinct
     * non-null key at `outDir/{key}/{date}[-NNNNN].parquet`. Shared by the
-    * batch ledger job and the streaming variant's foreachBatch. */
+    * batch ledger job and the streaming variant's foreachBatch. The write,
+    * its commit and the promote reach a `file://` output tree through
+    * [[graft.io.LocalFs]] ([[Splitter.OutputFs]]); everything else keeps
+    * the session's filesystem. */
   def writeGroups(df: DataFrame, outDir: String, date: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    OutputFs.foreach { case (k, v) => conf.set(k, v) }
     val fs = new Path(outDir).getFileSystem(conf)
     val stagingDir = PathOps.normalizePrefix(outDir) + s"_staging_$date"
     val keyed = df.filter(col(keyCol).isNotNull)
@@ -154,7 +187,8 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
         seqd.repartition(n, col("__split_key"), pmod(col("__seq"), lit(s)))
           .drop("__seq")
     }
-    val writer = arranged.write.mode("overwrite").partitionBy("__split_key")
+    val writer = arranged.write.mode("overwrite").options(OutputFs)
+      .partitionBy("__split_key")
     (if (maxRecordsPerFile > 0)
        writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer).parquet(stagingDir)
@@ -169,9 +203,11 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
     * listed once; each key's list, mkdirs, cleanup and rename touch only
     * that key's dirs, so keys run in parallel on a driver pool bounded by
     * the session's shuffle-partition count (a few ms of FS round-trips per
-    * key add up to seconds at thousands of keys). A failed key fails the
-    * date after every key has settled, before the staging dir is removed
-    * and before the caller's marker. Results stay in listing order. */
+    * key add up to seconds at thousands of keys). `fs` is the write's
+    * [[graft.io.LocalFs]] overlay, so a new key dir starts no `chmod`
+    * process. A failed key fails the date after every key has settled,
+    * before the staging dir is removed and before the caller's marker.
+    * Results stay in listing order. */
   private def promoteStaging(fs: FileSystem, stagingDir: String, outDir: String,
       date: String): Seq[String] = {
     val staging = new Path(stagingDir)
@@ -223,6 +259,17 @@ final class Splitter(spark: SparkSession, keyCol: String = "item_id",
 }
 
 private object Splitter {
+  /** Writer options that put [[graft.io.LocalFs]] under `file://` paths,
+    * so no created file or directory starts a `chmod` child process (three
+    * per output: its key dir, data file and `.crc`). Spark copies writer
+    * options into that write job's Hadoop conf only, so the input scan,
+    * the ledger, the markers and the session keep their own filesystem.
+    * The instance is not cached: the cache is keyed by scheme, not conf,
+    * and would hand back the session's instance. */
+  val OutputFs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   // NUMERIC sort on the part id: lexicographic name order misorders ids
   // past 99999 ("part-100000" < "part-10001"), which would break the
   // ordered-mode concatenation contract exactly in the huge-date regime;

@@ -2,14 +2,19 @@ package graft.split
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.{NanoTime, SimpleGroupFactory}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SQLExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, TimestampType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 import scala.collection.mutable
@@ -32,7 +37,8 @@ object PlainParquet {
 }
 
 /** Hermetic split coverage on generated inputs: the one-pass parallel write
-  * (job and task counts per date) and ordered mode over many keys. */
+  * (job and task counts per date), the footer schema that replaces schema
+  * inference, and ordered mode over many keys. */
 class ParallelSplitSpec extends SparkSpec {
 
   /** `rows` events over `keys` keys for one date; `pos` is the row's input
@@ -155,6 +161,102 @@ class ParallelSplitSpec extends SparkSpec {
         .map { case (k, rs) => k -> rs.map(_.toSeq.tail.mkString("|")).sorted }
       assert(got == groups, d)
     }
+  }
+
+  /** The SQL execution id of each job `body` starts (None outside one). */
+  private def jobExecutions[T](body: => T): (T, Map[Int, Option[String]]) = {
+    val execs = mutable.Map.empty[Int, Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = execs.synchronized {
+        execs(e.jobId) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      }
+    }
+    ListenerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val result = try body finally {
+      ListenerBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (result, execs.toMap)
+  }
+
+  test("a date runs at most 2 Spark jobs, all inside its write's SQL execution") {
+    val tmp = Files.createTempDirectory("split-jobs").toString
+    val dates = Seq("20250101", "20250102", "20250103")
+    for ((d, i) <- dates.zipWithIndex)
+      PlainParquet.write(events(i, rows = 600, keys = 60 + i), s"$tmp/in/$d.parquet")
+
+    val ((summary, jobs, writeStages), execs) = jobExecutions(recorded {
+      new SplitJob(spark, SplitConfig("test", s"$tmp/in", s"$tmp/out", s"$tmp/markers")).run()
+    })
+    assert(summary.processedDates == dates)
+    assert(writeStages.size == dates.size, writeStages)
+    // each date's jobs end with its write job; every one of them, the
+    // first included, belongs to that write's SQL execution
+    val perDate = mutable.ArrayBuffer(Seq.empty[Int])
+    for ((id, stages) <- jobs) {
+      perDate(perDate.size - 1) :+= id
+      if (stages.exists(writeStages.contains)) perDate += Nil
+    }
+    assert(perDate.last.isEmpty && perDate.init.size == dates.size, s"jobs: $jobs")
+    for (ids <- perDate.init) {
+      assert(ids.size <= 2, s"Spark jobs per date: ${perDate.init}")
+      val write = execs(ids.last)
+      assert(write.isDefined && ids.forall(execs(_) == write), s"executions: $execs")
+    }
+
+    // a drop without the key column fails before any job
+    PlainParquet.write(spark.range(5).toDF("v"), s"$tmp/nokey/20250101.parquet")
+    val (e, noKeyJobs, _) = recorded {
+      intercept[IllegalArgumentException](new Splitter(spark)
+        .splitOne(s"$tmp/nokey/20250101.parquet", s"$tmp/nokey_out", "20250101"))
+    }
+    assert(e.getMessage.contains("missing required column 'item_id'"), e.getMessage)
+    assert(noKeyJobs.isEmpty, noKeyJobs)
+  }
+
+  /** The split's scan of a plain file has Spark's inferred schema, and
+    * starts no job. */
+  private def assertFooterSchema(p: String): Unit = {
+    val (scanned, jobs, _) = recorded(new Splitter(spark).scan(p).schema)
+    assert(jobs.isEmpty, jobs)
+    assert(scanned == spark.read.parquet(p).schema, scanned.treeString)
+  }
+
+  test("the footer schema equals Spark's inferred schema on a Spark-written file") {
+    val tmp = Files.createTempDirectory("split-footer").toString
+    PlainParquet.write(spark.sql("""select 'k1' as item_id,
+        timestamp'2025-01-01 12:00:00' as ts,
+        timestamp_ntz'2025-01-01 12:00:00' as ntz,
+        cast(12.345 as decimal(12, 3)) as dec,
+        cast('ab' as binary) as bin,
+        array(1, 2, cast(null as int)) as arr,
+        named_struct('a', 1L, 'b', 'x', 'c', array(named_struct('d', 1.5d))) as st"""),
+      s"$tmp/20250101.parquet")
+    assertFooterSchema(s"$tmp/20250101.parquet")
+  }
+
+  test("the footer schema equals Spark's inferred schema on a file without Spark metadata") {
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val tmp = Files.createTempDirectory("split-footer-plain").toString
+    val p = new Path(s"$tmp/20250101.parquet")
+    val schema = MessageTypeParser.parseMessageType("""message drop {
+        required binary item_id (STRING);
+        required int96 i96;
+        optional binary raw;
+        required int64 ns (TIMESTAMP(NANOS, true));
+      }""")
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("item_id", "k1").append("i96", new NanoTime(2460000, 0L))
+      .append("raw", "abc").append("ns", 1L))
+    finally writer.close()
+    assert(spark.read.parquet(p.toString).schema.map(_.dataType) ==
+      Seq(StringType, TimestampType, BinaryType, LongType))
+    assertFooterSchema(p.toString)
   }
 
   /** Asserts every key file of `date` holds its key's rows in input order. */
