@@ -49,12 +49,7 @@ import org.apache.spark.sql.SparkSession
   * OpsMainSpec. */
 object OpsMain {
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private def q(s: String): String = graft.split.Marker.quote(s)
   private def arr(xs: Seq[String]): String =
     xs.map(q).mkString("[", ",", "]")
 

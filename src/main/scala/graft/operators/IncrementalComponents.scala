@@ -222,17 +222,15 @@ object IncrementalComponents {
     ()
   }
 
-  /** Drop one ingestion date's slices from every store the family
-    * writes — the [[CurateJob]] crash-resume guard (drop-then-retry):
-    * the date's signature rows, edge rows, first-label rows, and its
-    * composed repmap VERSION (each self-contained — the previous
-    * version remains the latest afterwards, exactly the pre-date
-    * state), so a retried [[processDate]] replays as a first run.
-    * Bounded filesystem metadata. */
-  def dropDate(spark: SparkSession, sigStore: String, labelsPath: String,
-      repmapPath: String, edgesPath: String, date: String): Unit = {
-    IncrementalStore.dropDate(spark,
-      Seq(sigStore, labelsPath, edgesPath).map(PathLoc), date)
+  /** Drop one ingestion date's composed repmap VERSION — with
+    * [[IncrementalStore.dropDate]] over the signature, label and edge
+    * stores, the [[CurateJob]] crash-resume guard (drop-then-retry).
+    * Each version is self-contained, so the previous one remains the
+    * latest afterwards, exactly the pre-date state, and a retried
+    * [[processDate]] replays as a first run. Bounded filesystem
+    * metadata. */
+  def dropRepmapVersion(spark: SparkSession, repmapPath: String,
+      date: String): Unit = {
     val v = new org.apache.hadoop.fs.Path(repmapPath, s"v=$date")
     v.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(v, true)
     ()

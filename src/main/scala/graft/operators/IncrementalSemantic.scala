@@ -416,8 +416,7 @@ object IncrementalSemantic {
     // silently missing pairs. Refuse before the first effect.
     if (!spark.catalog.tableExists(prevT) &&
         spark.catalog.tableExists(s"${table}_bands") &&
-        spark.sql(s"SHOW PARTITIONS ${table}_bands").collect()
-          .map(_.getString(0).stripPrefix("ds=")).contains(s"r_$gen"))
+        TableLoc(s"${table}_bands").partitions(spark).contains(s"r_$gen"))
       throw new IllegalArgumentException(
         s"re-band gen '$gen' already consumed on $table (partition " +
           s"r_$gen exists and no re-band is pending) — pass a fresh gen")
@@ -543,13 +542,9 @@ object IncrementalSemantic {
       def currentRows: Long =
         StoreMaintenance.consistentScan(spark,
           TableLoc(s"${table}_vecs")).count()
-      def baseline: Option[String] = {
-        val parts = if (spark.catalog.tableExists(s"${table}_occ"))
-          spark.sql(s"SHOW PARTITIONS ${table}_occ").collect()
-            .map(_.getString(0).stripPrefix("ds=")).toSeq else Seq.empty
-        parts.filterNot(p => p.startsWith("c_") || p.startsWith("r_"))
-          .minOption.orElse(parts.filter(_.startsWith("r_")).maxOption)
-      }
+      def baseline: Option[String] = IncrementalStore.driftBaseline(
+        if (spark.catalog.tableExists(s"${table}_occ"))
+          TableLoc(s"${table}_occ").partitions(spark) else Seq.empty)
       val pendingGen = if (spark.catalog.tableExists(prevT))
         spark.table(prevT).select(col("gen")).limit(1)
           .collect().headOption.map(_.getString(0)) else None
@@ -681,8 +676,7 @@ object IncrementalSemantic {
       // repeated migrate over a complete target rewrites nothing
       def partsOf(t: String): Set[String] =
         if (!spark.catalog.tableExists(t)) Set.empty
-        else spark.sql(s"SHOW PARTITIONS $t").collect()
-          .map(_.getString(0).stripPrefix("ds=")).toSet
+        else TableLoc(t).partitions(spark).toSet
       val fullyCopied = partsOf(s"${newTable}_bands")
         .intersect(partsOf(s"${newTable}_vecs"))
         .intersect(partsOf(s"${newTable}_occ"))

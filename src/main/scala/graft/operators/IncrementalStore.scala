@@ -91,6 +91,14 @@ object IncrementalStore {
       store.filter(!col("ds").startsWith("r_") &&
         regexp_replace(col("ds"), "^c_", "") <= d))
 
+  /** The drift audits' baseline among a store's partition labels: the
+    * earliest plain date; after a generation rewrite consumed every date,
+    * the newest `r_<gen>` label (the post-rewrite store IS the
+    * distribution new dates compare against). None when neither exists. */
+  def driftBaseline(parts: Seq[String]): Option[String] =
+    parts.filterNot(p => p.startsWith("c_") || p.startsWith("r_")).minOption
+      .orElse(parts.filter(_.startsWith("r_")).maxOption)
+
   /** Drop one ingestion date's partition from each existing store — the
     * re-run/retry guard (bounded metadata, no data motion). */
   def dropDate(spark: SparkSession, stores: Seq[StoreLoc], date: String): Unit =

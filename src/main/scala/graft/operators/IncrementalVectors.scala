@@ -214,8 +214,8 @@ object IncrementalVectors {
     * arithmetic). Baseline = the earliest plain ingestion date; after a
     * generation rewrite (refit, takedown, hot-cell split) the newest
     * `r_*` label is the natural new baseline — the post-rewrite store IS
-    * the distribution new dates should be compared against (the
-    * [[IncrementalSemantic]] audit's rule). No per-date state at all
+    * the distribution new dates should be compared against
+    * ([[IncrementalStore.driftBaseline]]). No per-date state at all
     * (uninitialized store, single partition) yields an EMPTY,
     * correctly-shaped report — an audit describes the store, it must
     * never wedge the window it reports on. Output: (ds, n_vectors, psi)
@@ -227,11 +227,8 @@ object IncrementalVectors {
       "CAST(0 AS BIGINT) AS n_vectors, CAST(0.0 AS DOUBLE) AS psi").limit(0)
     if (!spark.catalog.tableExists(s"${table}_cells") ||
         !spark.catalog.tableExists(s"${table}_ctr")) return empty
-    val parts = spark.sql(s"SHOW PARTITIONS ${table}_cells").collect()
-      .map(_.getString(0).stripPrefix("ds=")).toSeq
-    val baseline = parts
-      .filterNot(p => p.startsWith("c_") || p.startsWith("r_")).minOption
-      .orElse(parts.filter(_.startsWith("r_")).maxOption)
+    val parts = TableLoc(s"${table}_cells").partitions(spark)
+    val baseline = IncrementalStore.driftBaseline(parts)
     if (baseline.isEmpty || parts.size < 2) return empty
     val nCells = spark.table(s"${table}_ctr")
       .agg(countDistinct(col("cid"))).head().getLong(0)
@@ -294,13 +291,9 @@ object IncrementalVectors {
       psiRefit: Option[Double] = None): Seq[String] = {
     val refitted = psiRefit.toSeq.flatMap { bar =>
       val gen = s"policy_$window"
-      def baseline: Option[String] = {
-        val parts = if (spark.catalog.tableExists(s"${table}_cells"))
-          spark.sql(s"SHOW PARTITIONS ${table}_cells").collect()
-            .map(_.getString(0).stripPrefix("ds=")).toSeq else Seq.empty
-        parts.filterNot(p => p.startsWith("c_") || p.startsWith("r_"))
-          .minOption.orElse(parts.filter(_.startsWith("r_")).maxOption)
-      }
+      def baseline: Option[String] = IncrementalStore.driftBaseline(
+        if (spark.catalog.tableExists(s"${table}_cells"))
+          TableLoc(s"${table}_cells").partitions(spark) else Seq.empty)
       def runRefit(): Unit = {
         val nCells = spark.table(s"${table}_ctr")
           .agg(countDistinct(col("cid"))).head().getLong(0).toInt
@@ -620,8 +613,7 @@ object IncrementalVectors {
               org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_cells"))
               .location)
           val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val parts = spark.sql(s"SHOW PARTITIONS ${table}_cells").collect()
-            .map(_.getString(0).stripPrefix("ds=")).toSeq
+          val parts = TableLoc(s"${table}_cells").partitions(spark)
           val committed =
             StoreMaintenance.foldCommitted(fs, root, s"r_$gen") ||
               (parts.nonEmpty && parts.forall(_ == s"r_$gen"))

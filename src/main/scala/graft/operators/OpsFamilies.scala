@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   * and the inventory, wired the way the oracle-gated compositions
   * (q181, q186) wire them by hand — with the safety hooks ON:
   * every curate family carries the `foldedThrough` retention fence
-  * ([[StoreMaintenance.retentionHorizon]] over its backing stores — the
-  * max of the fold horizon and the durable `_expired_through` policy
-  * record, so a marker-deleted reprocess can neither double-count a
-  * folded date nor resurrect an expired one), and the suppression feed
-  * is [[graft.OpsMain]]'s job-level default.
+  * ([[StoreMaintenance.retentionHorizon]] — the max of the fold horizon
+  * and the durable `_expired_through` policy record, so a marker-deleted
+  * reprocess can neither double-count a folded date nor resurrect an
+  * expired one), and the suppression feed is [[graft.OpsMain]]'s
+  * job-level default. The fence, the date drop, the retention expiry
+  * and the inventory all act on the one list of dated stores [[stores]]
+  * declares per family.
   *
   * Families (the q181 trio — one lexical, one token-similarity, one
   * embedding-similarity):
@@ -130,73 +132,58 @@ object OpsFamilies {
     graft.split.PathOps.normalizePrefix(storeDir)
   }
 
-  private def spansStore(storeDir: String): String =
-    s"${graft.split.PathOps.normalizePrefix(storeDir)}spans"
+  private def spansRoot(storeDir: String): String =
+    requireDir("spans", storeDir) + "spans"
 
-  private def langStore(storeDir: String): String =
-    s"${graft.split.PathOps.normalizePrefix(storeDir)}langmodel"
-
-  /** The langmodel family's (tri, prior) stores under its root. */
-  private def langStores(root: String): Seq[StoreLoc] =
-    Seq(PathLoc(s"$root/tri"), PathLoc(s"$root/prior"))
-
-  private def tbls(names: String*): Seq[StoreLoc] = names.map(TableLoc)
+  private def langRoot(storeDir: String): String =
+    requireDir("langmodel", storeDir) + "langmodel"
 
   /** (sigs, labels, repmap, edges) roots for the components family. */
-  private def compStores(storeDir: String): (String, String, String, String) = {
-    val p = graft.split.PathOps.normalizePrefix(storeDir)
+  private def compRoots(storeDir: String): (String, String, String, String) = {
+    val p = requireDir("components", storeDir)
     (s"${p}components_sigs", s"${p}components_labels",
       s"${p}components_repmap", s"${p}components_edges")
   }
 
-  /** Inventory view: (label, table) per backing per-date TABLE. The
-    * semantic `_cfg` table is model state (no `ds` partitions) and is
-    * deliberately absent. Path families live in [[stores]]. */
-  def tables(store: String, fam: String): Seq[(String, String)] = {
-    require(store.nonEmpty,
-      s"family '$fam' is table-backed — pass --STORE <table-name prefix>")
-    fam match {
-      case "postings" => Seq(s"${fam}_tf" -> s"${store}_post",
-        s"${fam}_norms" -> s"${store}_post_dl")
-      case "minhash" => Seq(s"${fam}_bands" -> s"${store}_mh")
-      case "semantic" => Seq(s"${fam}_bands" -> s"${store}_sem_bands",
-        s"${fam}_vecs" -> s"${store}_sem_vecs",
-        s"${fam}_occ" -> s"${store}_sem_occ")
-      // the vec codebook/centroid tables are model state (no `ds`
-      // partitions), absent like the semantic `_cfg`
-      case "vectors" => Seq(s"${fam}_codes" -> s"${store}_vec_codes",
-        s"${fam}_cells" -> s"${store}_vec_cells")
-      // the sq grid / matryoshka centroid tables are model state (no
-      // `ds` partitions), absent like the semantic `_cfg`
-      case "sq8" => Seq(s"${fam}_codes" -> s"${store}_sq_codes")
-      case "matryoshka" => Seq(s"${fam}_cells" -> s"${store}_mat_cells")
-      case "maxsim" => Seq(s"${fam}_codes" -> s"${store}_tok_codes",
-        s"${fam}_cells" -> s"${store}_tok_cells")
-      case other => throw new IllegalArgumentException(
-        s"family '$other' is not table-backed — registered tables: " +
-          "postings, minhash, semantic, vectors, sq8, matryoshka, " +
-          "maxsim (path families go through stores())")
-    }
-  }
-
-  /** Full inventory view over ALL families — table AND path entries
-    * (the HELD view: [[StoreInventory.dates]] lists whatever exists). */
+  /** Each family's DATED stores, (inventory label, location) — the one
+    * declaration the inventory (the HELD view: [[StoreInventory.dates]]
+    * lists whatever exists), curation's date drop and retention fence
+    * and maintenance's expiry all derive from, so they cannot disagree.
+    * Model state without `ds` partitions (the semantic `_cfg`, the
+    * vector codebook/centroids, the sq grid, the matryoshka centroids,
+    * the components repmap versions) is deliberately absent. An unknown
+    * name fails here for every registration. */
   def stores(store: String, storeDir: String,
-      fam: String): Seq[StoreInventory.Entry] = fam match {
-    case "spans" =>
-      Seq(StoreInventory.Entry(s"${fam}_counts",
-        PathLoc(spansStore(requireDir(fam, storeDir)))))
-    case "components" =>
-      val (sigs, labels, _, edges) = compStores(requireDir(fam, storeDir))
-      Seq(StoreInventory.Entry(s"${fam}_sigs", PathLoc(sigs)),
-        StoreInventory.Entry(s"${fam}_labels", PathLoc(labels)),
-        StoreInventory.Entry(s"${fam}_edges", PathLoc(edges)))
-    case "langmodel" =>
-      val root = langStore(requireDir(fam, storeDir))
-      Seq(StoreInventory.Entry(s"${fam}_tri", PathLoc(s"$root/tri")),
-        StoreInventory.Entry(s"${fam}_prior", PathLoc(s"$root/prior")))
-    case _ => tables(store, fam)
-      .map(t => StoreInventory.Entry(t._1, TableLoc(t._2)))
+      fam: String): Seq[StoreInventory.Entry] = {
+    def tables(ts: (String, String)*) = {
+      require(store.nonEmpty,
+        s"family '$fam' is table-backed — pass --STORE <table-name prefix>")
+      ts.map { case (label, suffix) =>
+        StoreInventory.Entry(s"${fam}_$label", TableLoc(s"${store}_$suffix"))
+      }
+    }
+    def paths(ps: (String, String)*) = ps.map { case (label, dir) =>
+      StoreInventory.Entry(s"${fam}_$label", PathLoc(dir))
+    }
+    fam match {
+      case "postings" => tables("tf" -> "post", "norms" -> "post_dl")
+      case "minhash" => tables("bands" -> "mh")
+      case "semantic" => tables("bands" -> "sem_bands", "vecs" -> "sem_vecs",
+        "occ" -> "sem_occ")
+      case "vectors" => tables("codes" -> "vec_codes", "cells" -> "vec_cells")
+      case "sq8" => tables("codes" -> "sq_codes")
+      case "matryoshka" => tables("cells" -> "mat_cells")
+      case "maxsim" => tables("codes" -> "tok_codes", "cells" -> "tok_cells")
+      case "langmodel" =>
+        val root = langRoot(storeDir)
+        paths("tri" -> s"$root/tri", "prior" -> s"$root/prior")
+      case "spans" => paths("counts" -> spansRoot(storeDir))
+      case "components" =>
+        val (sigs, labels, _, edges) = compRoots(storeDir)
+        paths("sigs" -> sigs, "labels" -> labels, "edges" -> edges)
+      case other => throw new IllegalArgumentException(
+        s"unknown family '$other' — registered: ${Names.mkString(", ")}")
+    }
   }
 
   /** The subset of [[stores]] whose per-date partition PRESENCE is
@@ -209,10 +196,17 @@ object OpsFamilies {
     * addressed train split is empty (documented edges — such a date
     * would false-flag). */
   def ledgerStores(store: String, storeDir: String,
-      fam: String): Seq[StoreInventory.Entry] = fam match {
-    case "components" => stores(store, storeDir, fam)
-      .filter(_.family == s"${fam}_sigs")
-    case _ => stores(store, storeDir, fam)
+      fam: String): Seq[StoreInventory.Entry] =
+    stores(store, storeDir, fam)
+      .filter(e => fam != "components" || e.family == s"${fam}_sigs")
+
+  /** One structured line per policy decision (O17); every field is
+    * quoted, so a window label holding a `"` still prints valid JSON. */
+  private[operators] def policyEvent(event: String, store: String,
+      window: String, action: String): String = {
+    val q = graft.split.Marker.quote _
+    s"""{"event":${q(event)},"store":${q(store)},""" +
+      s""""window":${q(window)},"action":${q(action)}}"""
   }
 
   /** Curate registration. `idCol`/`textCol`/`vecCol`/`langCol` name the
@@ -229,59 +223,61 @@ object OpsFamilies {
       vecCol: String, pairThreshold: Double, semThreshold: Double,
       semHorizon: Long, vecCells: Int = 0, storeDir: String = "",
       inDir: String = "", matCells: Int = 0, matPDim: Int = 16,
-      langCol: String = "lang"): CurateFamily = fam match {
-    case "postings" => CurateFamily(fam,
-      append = (slice, d) => {
+      langCol: String = "lang"): CurateFamily = {
+    val locs = stores(store, storeDir, fam).map(_.store)
+    // the drop and the fence cover the same stores, so a folded or
+    // expired date of any store the drop would touch refuses to re-append
+    def family(append: (DataFrame, String) => Unit,
+        report: Option[(SparkSession, String) => DataFrame] = None,
+        exists: Option[SparkSession => Boolean] = None,
+        dropModel: (SparkSession, String) => Unit = (_, _) => ()) =
+      CurateFamily(fam, append,
+        drop = (sp, d) => {
+          IncrementalStore.dropDate(sp, locs, d)
+          dropModel(sp, d)
+        },
+        report = report,
+        foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp, locs)),
+        exists = exists)
+    fam match {
+      case "postings" => family((slice, d) => {
         val docs = slice.select(col(idCol).as("doc_id"),
           col(textCol).as("text"))
         IncrementalPostings.appendCountsBucketed(docs, s"${store}_post", d)
         IncrementalPostings.appendNorms(docs, s"${store}_post", d)
-      },
-      drop = (sp, d) => IncrementalStore.dropDate(sp,
-        tbls(s"${store}_post", s"${store}_post_dl"), d),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_post", s"${store}_post_dl"))))
-    case "minhash" => CurateFamily(fam,
-      append = (slice, d) => IncrementalDedup.appendBandsBucketed(
-        slice.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-        s"${store}_mh", d),
-      drop = (sp, d) =>
-        IncrementalStore.dropDate(sp, tbls(s"${store}_mh"), d),
-      report = Some((sp, d) => IncrementalDedup.newPairsBucketed(
-        sp, s"${store}_mh", d, pairThreshold, upTo = Some(d))),
-      foldedThrough = Some(sp =>
-        StoreMaintenance.retentionHorizon(sp, tbls(s"${store}_mh"))),
-      // empty-first-date guard: the day report scans the band table,
-      // which only an append creates (CurateFamily.exists contract)
-      exists = Some(sp => sp.catalog.tableExists(s"${store}_mh")))
-    case "semantic" => CurateFamily(fam,
-      append = (slice, d) => {
-        val sp = slice.sparkSession
-        val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
-        if (!sp.catalog.tableExists(s"${store}_sem_cfg")) {
-          require(semHorizon > 0,
-            "the semantic store is uninitialized and SEM_HORIZON is " +
-              "unset — the banding model freezes its width/levels at a " +
-              "declared row capacity (the engagement law); pass " +
-              "--SEM_HORIZON <expected corpus rows> on the first run")
-          IncrementalSemantic.initModel(emb, s"${store}_sem", semHorizon,
+      })
+      case "minhash" => family(
+        (slice, d) => IncrementalDedup.appendBandsBucketed(
+          slice.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+          s"${store}_mh", d),
+        report = Some((sp, d) => IncrementalDedup.newPairsBucketed(
+          sp, s"${store}_mh", d, pairThreshold, upTo = Some(d))),
+        // empty-first-date guard: the day report scans the band table,
+        // which only an append creates (CurateFamily.exists contract)
+        exists = Some(sp => sp.catalog.tableExists(s"${store}_mh")))
+      case "semantic" => family(
+        (slice, d) => {
+          val sp = slice.sparkSession
+          val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
+          if (!sp.catalog.tableExists(s"${store}_sem_cfg")) {
+            require(semHorizon > 0,
+              "the semantic store is uninitialized and SEM_HORIZON is " +
+                "unset — the banding model freezes its width/levels at a " +
+                "declared row capacity (the engagement law); pass " +
+                "--SEM_HORIZON <expected corpus rows> on the first run")
+            IncrementalSemantic.initModel(emb, s"${store}_sem", semHorizon,
+              vecCol = vecCol)
+          }
+          IncrementalSemantic.appendDate(emb, s"${store}_sem", d,
             vecCol = vecCol)
-        }
-        IncrementalSemantic.appendDate(emb, s"${store}_sem", d,
-          vecCol = vecCol)
-      },
-      drop = (sp, d) => IncrementalSemantic.dropDate(sp, s"${store}_sem", d),
-      report = Some((sp, d) => IncrementalSemantic.newPairs(
-        sp, s"${store}_sem", d, semThreshold, upTo = Some(d))),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_sem_bands", s"${store}_sem_vecs",
-          s"${store}_sem_occ"))),
-      // empty-first-date guard: the pair report scans bands+vecs, which
-      // only an append creates (initModel writes just the _cfg table)
-      exists = Some(sp => sp.catalog.tableExists(s"${store}_sem_bands") &&
-        sp.catalog.tableExists(s"${store}_sem_vecs")))
-    case "vectors" => CurateFamily(fam,
-      append = (slice, d) => {
+        },
+        report = Some((sp, d) => IncrementalSemantic.newPairs(
+          sp, s"${store}_sem", d, semThreshold, upTo = Some(d))),
+        // empty-first-date guard: the pair report scans bands+vecs, which
+        // only an append creates (initModel writes just the _cfg table)
+        exists = Some(sp => sp.catalog.tableExists(s"${store}_sem_bands") &&
+          sp.catalog.tableExists(s"${store}_sem_vecs")))
+      case "vectors" => family((slice, d) => {
         val sp = slice.sparkSession
         val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
         if (!sp.catalog.tableExists(s"${store}_vec_cb")) {
@@ -296,13 +292,8 @@ object OpsFamilies {
         }
         IncrementalVectors.appendDate(emb, s"${store}_vec", d,
           vecCol = vecCol)
-      },
-      drop = (sp, d) =>
-        IncrementalVectors.dropDate(sp, s"${store}_vec", d),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_vec_codes", s"${store}_vec_cells"))))
-    case "sq8" => CurateFamily(fam,
-      append = (slice, d) => {
+      })
+      case "sq8" => family((slice, d) => {
         val sp = slice.sparkSession
         val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
         // init-on-demand WITHOUT a capacity flag: the grid is the init
@@ -312,12 +303,8 @@ object OpsFamilies {
         if (!sp.catalog.tableExists(s"${store}_sq_grid"))
           IncrementalSQ.initGrid(emb, s"${store}_sq", vecCol = vecCol)
         IncrementalSQ.appendDate(emb, s"${store}_sq", d, vecCol = vecCol)
-      },
-      drop = (sp, d) => IncrementalSQ.dropDate(sp, s"${store}_sq", d),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_sq_codes"))))
-    case "matryoshka" => CurateFamily(fam,
-      append = (slice, d) => {
+      })
+      case "matryoshka" => family((slice, d) => {
         val sp = slice.sparkSession
         val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
         if (!sp.catalog.tableExists(s"${store}_mat_ctr")) {
@@ -338,12 +325,8 @@ object OpsFamilies {
           .agg(max(col("dim"))).collect()(0).getInt(0) + 1
         Matryoshka.appendDate(emb, s"${store}_mat", d, pDim = pd,
           vecCol = vecCol)
-      },
-      drop = (sp, d) => Matryoshka.dropDate(sp, s"${store}_mat", d),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_mat_cells"))))
-    case "maxsim" => CurateFamily(fam,
-      append = (slice, d) => {
+      })
+      case "maxsim" => family((slice, d) => {
         val sp = slice.sparkSession
         val emb = slice.select(col(idCol).as("vec_id"), col(vecCol))
         if (!sp.catalog.tableExists(s"${store}_tok_cb")) {
@@ -357,60 +340,42 @@ object OpsFamilies {
         }
         IncrementalVectors.appendDate(emb, s"${store}_tok", d,
           vecCol = vecCol)
-      },
-      drop = (sp, d) =>
-        IncrementalVectors.dropDate(sp, s"${store}_tok", d),
-      foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-        tbls(s"${store}_tok_codes", s"${store}_tok_cells"))))
-    case "langmodel" =>
-      val root = langStore(requireDir(fam, storeDir))
-      CurateFamily(fam,
-        append = (slice, d) => IncrementalLangModel.appendCounts(
+      })
+      case "langmodel" => family((slice, d) =>
+        IncrementalLangModel.appendCounts(
           slice.select(col(idCol).as("doc_id"), col(langCol).as("lang"),
-            col(textCol).as("text")), root, d),
-        drop = (sp, d) => IncrementalStore.dropDate(sp,
-          langStores(root), d),
-        foldedThrough = Some(sp =>
-          StoreMaintenance.retentionHorizon(sp, langStores(root))))
-    case "spans" =>
-      val st = spansStore(requireDir(fam, storeDir))
-      CurateFamily(fam,
-        append = (slice, d) => IncrementalSpans.appendCounts(
+            col(textCol).as("text")), langRoot(storeDir), d))
+      case "spans" => family((slice, d) =>
+        IncrementalSpans.appendCounts(
           slice.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-          st, d),
-        drop = (sp, d) => IncrementalStore.dropDate(sp, Seq(PathLoc(st)), d),
-        foldedThrough = Some(sp =>
-          StoreMaintenance.retentionHorizon(sp, Seq(PathLoc(st)))))
-    case "components" =>
-      val (sigs, labels, repmap, edges) = compStores(requireDir(fam, storeDir))
-      require(inDir.nonEmpty,
-        "the components family re-reads candidate ENDPOINT texts for " +
-          "exact verification — wire the drops catalog (--IN)")
-      CurateFamily(fam,
-        append = (slice, d) => {
-          val sp = slice.sparkSession
-          val newDocs = slice.select(col(idCol).as("doc_id"),
-            col(textCol).as("text"))
-          // the accumulated corpus, from the retained drops catalog
-          // (flat listing, one multi-path scan — the feed's read shape);
-          // only candidate ENDPOINTS are actually re-read (semi-join
-          // before shingling, processDate's contract), and a superset
-          // (staged future dates, suppressed ids) is harmless — their
-          // signatures are not in the store, so they never match a band
-          val drops = new graft.split.MarkerLedger(
-            sp.sparkContext.hadoopConfiguration).catalog(inDir)
-          val allDocs = sp.read.parquet(drops: _*)
-            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-          IncrementalComponents.processDate(sp, newDocs, allDocs,
-            sigs, labels, repmap, d, threshold = pairThreshold,
-            edgesPath = Some(edges))
-        },
-        drop = (sp, d) => IncrementalComponents.dropDate(sp, sigs, labels,
-          repmap, edges, d),
-        foldedThrough = Some(sp => StoreMaintenance.retentionHorizon(sp,
-          Seq(PathLoc(sigs), PathLoc(labels)))))
-    case other => throw new IllegalArgumentException(
-      s"unknown family '$other' — registered: ${Names.mkString(", ")}")
+          spansRoot(storeDir), d))
+      case "components" =>
+        val (sigs, labels, repmap, edges) = compRoots(storeDir)
+        require(inDir.nonEmpty,
+          "the components family re-reads candidate ENDPOINT texts for " +
+            "exact verification — wire the drops catalog (--IN)")
+        family(
+          (slice, d) => {
+            val sp = slice.sparkSession
+            val newDocs = slice.select(col(idCol).as("doc_id"),
+              col(textCol).as("text"))
+            // the accumulated corpus, from the retained drops catalog
+            // (flat listing, one multi-path scan — the feed's read shape);
+            // only candidate ENDPOINTS are actually re-read (semi-join
+            // before shingling, processDate's contract), and a superset
+            // (staged future dates, suppressed ids) is harmless — their
+            // signatures are not in the store, so they never match a band
+            val drops = new graft.split.MarkerLedger(
+              sp.sparkContext.hadoopConfiguration).catalog(inDir)
+            val allDocs = sp.read.parquet(drops: _*)
+              .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+            IncrementalComponents.processDate(sp, newDocs, allDocs,
+              sigs, labels, repmap, d, threshold = pairThreshold,
+              edgesPath = Some(edges))
+          },
+          dropModel = (sp, d) =>
+            IncrementalComponents.dropRepmapVersion(sp, repmap, d))
+    }
   }
 
   /** Takedown registration. The table families are id-keyed (anti-join
@@ -427,91 +392,92 @@ object OpsFamilies {
     * store the curate registration always builds). */
   def takedown(spark: SparkSession, store: String, fam: String,
       storeDir: String = "", corpus: Option[DataFrame] = None,
-      tokensPerDoc: Int = 8): TakedownFamily = fam match {
-    case "postings" => TakedownFamily(fam, (ids, gen) =>
-      IncrementalPostings.deleteDocs(spark, s"${store}_post", ids, gen))
-    case "minhash" => TakedownFamily(fam, (ids, gen) =>
-      IncrementalDedup.deleteDocs(spark, s"${store}_mh", ids, gen))
-    case "semantic" => TakedownFamily(fam, (ids, gen) =>
-      IncrementalSemantic.deleteIds(spark, s"${store}_sem", ids, gen))
-    case "vectors" => TakedownFamily(fam, (ids, gen) =>
-      IncrementalVectors.deleteIds(spark, s"${store}_vec", ids, gen))
-    case "sq8" => TakedownFamily(fam, (ids, gen) =>
-      IncrementalSQ.deleteIds(spark, s"${store}_sq", ids, gen))
-    case "matryoshka" => TakedownFamily(fam, (ids, gen) =>
-      Matryoshka.deleteIds(spark, s"${store}_mat", ids, gen))
-    case "maxsim" => TakedownFamily(fam, (ids, gen) => {
-      // the doc→token expansion: request ids are DOCUMENT ids, the
-      // store's rows are TOKEN ids doc·T … doc·T+T-1 (tokenView's
-      // layout) — erasing the doc means every token vector goes in the
-      // same marker-committed rewrite. List-sized expansion (T rows per
-      // requested id), never corpus-sized.
-      val tok = ids.select(explode(sequence(
-        col("id").cast("long") * tokensPerDoc,
-        col("id").cast("long") * tokensPerDoc + (tokensPerDoc - 1)))
-        .as("id"))
-      IncrementalVectors.deleteIds(spark, s"${store}_tok", tok, gen)
-    })
-    case "langmodel" =>
-      val root = langStore(requireDir(fam, storeDir))
-      require(corpus.isDefined,
-        "the NB model is additive — unlearning subtracts the deleted " +
-          "documents' own trigram counts and priors, which requires " +
-          "their TEXTS and LABELS: pass --CORPUS <drops catalog> " +
-          "(columns ID_COL, TEXT_COL, LANG_COL)")
-      TakedownFamily(fam, (ids, gen) => {
-        val cols = corpus.get.columns
-        require(cols.length >= 3,
-          "the langmodel corpus needs three columns (id, text, lang) — " +
-            s"got ${cols.mkString(", ")}")
-        val deleted = corpus.get
-          .join(ids.select(col("id").as(cols(0))), Seq(cols(0)), "left_semi")
-        // FAIL LOUD on an id whose text aged out of the catalog: a
-        // silent miss would under-subtract and leave the erased doc's
-        // influence in the model forever (the spans takedown rule).
-        // List-sized counts.
-        val got = deleted.select(col(cols(0))).distinct().count()
-        val want = ids.count()
-        require(got == want,
-          s"langmodel takedown: only $got of $want requested ids have " +
-            "texts in the corpus catalog — restore the aged-out drops " +
-            "(exact unlearning needs the documents themselves)")
-        IncrementalLangModel.deleteDocs(
-          deleted.select(col(cols(0)).as("doc_id"),
-            col(cols(2)).as("lang"), col(cols(1)).as("text")),
-          root, gen)
-      }, subtractive = true)
-    case "spans" =>
-      val st = spansStore(requireDir(fam, storeDir))
-      require(corpus.isDefined,
-        "the span store is additive — deletion subtracts the deleted " +
-          "documents' own window counts, which requires their TEXTS: " +
-          "pass --CORPUS <drops catalog>")
-      TakedownFamily(fam, (ids, gen) => {
-        val deleted = corpus.get
-          .join(ids.select(col("id").as(corpus.get.columns.head)),
-            Seq(corpus.get.columns.head), "left_semi")
-        // FAIL LOUD on an id whose text aged out of the catalog: a
-        // silent miss would under-subtract and leave the erased doc's
-        // counts in the store forever (the suppression feed's
-        // source-of-truth rule). List-sized counts.
-        val got = deleted.select(col(corpus.get.columns.head))
-          .distinct().count()
-        val want = ids.count()
-        require(got == want,
-          s"spans takedown: only $got of $want requested ids have texts " +
-            "in the corpus catalog — restore the aged-out drops (exact " +
-            "count subtraction needs the documents themselves)")
-        IncrementalSpans.deleteDocs(
-          deleted.select(col(corpus.get.columns.head).as("doc_id"),
-            col(corpus.get.columns(1)).as("text")), st, gen)
-      }, subtractive = true)
-    case "components" =>
-      val (sigs, labels, repmap, edges) = compStores(requireDir(fam, storeDir))
-      TakedownFamily(fam, (ids, gen) => IncrementalComponents.deleteDocs(
-        spark, ids, sigs, labels, repmap, edges, gen))
-    case other => throw new IllegalArgumentException(
-      s"unknown family '$other' — registered: ${Names.mkString(", ")}")
+      tokensPerDoc: Int = 8): TakedownFamily = {
+    stores(store, storeDir, fam) // the name check (and STORE/STORE_DIR)
+    fam match {
+      case "postings" => TakedownFamily(fam, (ids, gen) =>
+        IncrementalPostings.deleteDocs(spark, s"${store}_post", ids, gen))
+      case "minhash" => TakedownFamily(fam, (ids, gen) =>
+        IncrementalDedup.deleteDocs(spark, s"${store}_mh", ids, gen))
+      case "semantic" => TakedownFamily(fam, (ids, gen) =>
+        IncrementalSemantic.deleteIds(spark, s"${store}_sem", ids, gen))
+      case "vectors" => TakedownFamily(fam, (ids, gen) =>
+        IncrementalVectors.deleteIds(spark, s"${store}_vec", ids, gen))
+      case "sq8" => TakedownFamily(fam, (ids, gen) =>
+        IncrementalSQ.deleteIds(spark, s"${store}_sq", ids, gen))
+      case "matryoshka" => TakedownFamily(fam, (ids, gen) =>
+        Matryoshka.deleteIds(spark, s"${store}_mat", ids, gen))
+      case "maxsim" => TakedownFamily(fam, (ids, gen) => {
+        // the doc→token expansion: request ids are DOCUMENT ids, the
+        // store's rows are TOKEN ids doc·T … doc·T+T-1 (tokenView's
+        // layout) — erasing the doc means every token vector goes in the
+        // same marker-committed rewrite. List-sized expansion (T rows per
+        // requested id), never corpus-sized.
+        val tok = ids.select(explode(sequence(
+          col("id").cast("long") * tokensPerDoc,
+          col("id").cast("long") * tokensPerDoc + (tokensPerDoc - 1)))
+          .as("id"))
+        IncrementalVectors.deleteIds(spark, s"${store}_tok", tok, gen)
+      })
+      case "langmodel" =>
+        val root = langRoot(storeDir)
+        require(corpus.isDefined,
+          "the NB model is additive — unlearning subtracts the deleted " +
+            "documents' own trigram counts and priors, which requires " +
+            "their TEXTS and LABELS: pass --CORPUS <drops catalog> " +
+            "(columns ID_COL, TEXT_COL, LANG_COL)")
+        TakedownFamily(fam, (ids, gen) => {
+          val cols = corpus.get.columns
+          require(cols.length >= 3,
+            "the langmodel corpus needs three columns (id, text, lang) — " +
+              s"got ${cols.mkString(", ")}")
+          val deleted = corpus.get
+            .join(ids.select(col("id").as(cols(0))), Seq(cols(0)), "left_semi")
+          // FAIL LOUD on an id whose text aged out of the catalog: a
+          // silent miss would under-subtract and leave the erased doc's
+          // influence in the model forever (the spans takedown rule).
+          // List-sized counts.
+          val got = deleted.select(col(cols(0))).distinct().count()
+          val want = ids.count()
+          require(got == want,
+            s"langmodel takedown: only $got of $want requested ids have " +
+              "texts in the corpus catalog — restore the aged-out drops " +
+              "(exact unlearning needs the documents themselves)")
+          IncrementalLangModel.deleteDocs(
+            deleted.select(col(cols(0)).as("doc_id"),
+              col(cols(2)).as("lang"), col(cols(1)).as("text")),
+            root, gen)
+        }, subtractive = true)
+      case "spans" =>
+        val st = spansRoot(storeDir)
+        require(corpus.isDefined,
+          "the span store is additive — deletion subtracts the deleted " +
+            "documents' own window counts, which requires their TEXTS: " +
+            "pass --CORPUS <drops catalog>")
+        TakedownFamily(fam, (ids, gen) => {
+          val deleted = corpus.get
+            .join(ids.select(col("id").as(corpus.get.columns.head)),
+              Seq(corpus.get.columns.head), "left_semi")
+          // FAIL LOUD on an id whose text aged out of the catalog: a
+          // silent miss would under-subtract and leave the erased doc's
+          // counts in the store forever (the suppression feed's
+          // source-of-truth rule). List-sized counts.
+          val got = deleted.select(col(corpus.get.columns.head))
+            .distinct().count()
+          val want = ids.count()
+          require(got == want,
+            s"spans takedown: only $got of $want requested ids have texts " +
+              "in the corpus catalog — restore the aged-out drops (exact " +
+              "count subtraction needs the documents themselves)")
+          IncrementalSpans.deleteDocs(
+            deleted.select(col(corpus.get.columns.head).as("doc_id"),
+              col(corpus.get.columns(1)).as("text")), st, gen)
+        }, subtractive = true)
+      case "components" =>
+        val (sigs, labels, repmap, edges) = compRoots(storeDir)
+        TakedownFamily(fam, (ids, gen) => IncrementalComponents.deleteDocs(
+          spark, ids, sigs, labels, repmap, edges, gen))
+    }
   }
 
   /** Maintenance registration. `retainTo(window)` is the optional
@@ -523,15 +489,15 @@ object OpsFamilies {
       vecPsiRefit: Option[Double] = None,
       storeDir: String = "",
       semPsiReband: Option[Double] = None): MaintainFamily = {
-    def expireAll(stores: Seq[StoreLoc]): Option[
-        (SparkSession, String) => StoreMaintenance.ExpireResult] =
-      retainTo.map(cut => (sp: SparkSession, w: String) => {
-        val rs = stores.filter(_.exists(sp))
-          .map(s => StoreMaintenance.expire(sp, s, cut(w)))
-        StoreMaintenance.ExpireResult(
-          rs.flatMap(_.dropped).distinct.sorted,
-          rs.flatMap(_.retained).distinct.sorted)
-      })
+    val locs = stores(store, storeDir, fam).map(_.store)
+    // retention expires every dated store of the family at one cutoff
+    val expire = retainTo.map(cut => (sp: SparkSession, w: String) => {
+      val rs = locs.filter(_.exists(sp))
+        .map(s => StoreMaintenance.expire(sp, s, cut(w)))
+      StoreMaintenance.ExpireResult(
+        rs.flatMap(_.dropped).distinct.sorted,
+        rs.flatMap(_.retained).distinct.sorted)
+    })
     fam match {
       case "postings" => MaintainFamily(fam,
         maintain = (sp, w) => {
@@ -539,14 +505,14 @@ object OpsFamilies {
             merge = _.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
           IncrementalPostings.compactNorms(sp, s"${store}_post", w)
         },
-        expire = expireAll(tbls(s"${store}_post", s"${store}_post_dl")),
+        expire = expire,
         audit = Some((sp, _) => sp.table(s"${store}_post")
           .agg(countDistinct(col("term")).as("n_terms"),
             countDistinct(col("doc_id")).as("n_docs"))))
       case "minhash" => MaintainFamily(fam,
         maintain = (sp, w) =>
           StoreMaintenance.compact(sp, TableLoc(s"${store}_mh"), w),
-        expire = expireAll(tbls(s"${store}_mh")))
+        expire = expire)
       case "semantic" => MaintainFamily(fam,
         // the banding family's detect→act POLICY
         // ([[IncrementalSemantic.maintainPolicy]]) armed by
@@ -558,28 +524,21 @@ object OpsFamilies {
         maintain = (sp, w) => {
           val acts = IncrementalSemantic.maintainPolicy(sp,
             s"${store}_sem", w, psiReband = semPsiReband)
-          // O17: one structured line per policy decision
-          acts.foreach(a => println(
-            s"""{"event":"sem_policy","store":"${store}_sem",""" +
-              s""""window":"$w","action":"$a"}"""))
+          acts.foreach(a =>
+            println(policyEvent("sem_policy", s"${store}_sem", w, a)))
         },
-        expire = expireAll(tbls(s"${store}_sem_bands",
-          s"${store}_sem_vecs", s"${store}_sem_occ")),
+        expire = expire,
         audit = Some((sp, _) => {
-          // baseline = earliest plain date; after a gen rewrite the
-          // r_<gen> label is the natural new baseline (its scaladoc
-          // rule). No auditable state at all — store uninitialized,
-          // expiry emptied it, rewrite uncommitted — yields an EMPTY,
-          // correctly-shaped report: an audit describes the store, it
-          // must never wedge the window it reports on.
+          // baseline: IncrementalStore.driftBaseline over the occupancy
+          // table's labels. No auditable state at all — store
+          // uninitialized, expiry emptied it, rewrite uncommitted — yields
+          // an EMPTY, correctly-shaped report: an audit describes the
+          // store, it must never wedge the window it reports on.
           val occ = s"${store}_sem_occ"
           val parts = if (sp.catalog.tableExists(occ))
-            sp.sql(s"SHOW PARTITIONS $occ").collect()
-              .map(_.getString(0).stripPrefix("ds=")).toSeq
+            TableLoc(occ).partitions(sp)
           else Seq.empty[String]
-          parts.filterNot(p => p.startsWith("c_") || p.startsWith("r_"))
-            .minOption
-            .orElse(parts.filter(_.startsWith("r_")).maxOption)
+          IncrementalStore.driftBaseline(parts)
             .fold(sp.sql("SELECT CAST('' AS STRING) AS ds, " +
               "CAST(0 AS INT) AS level, CAST(0 AS BIGINT) AS n_rows, " +
               "CAST(0.0 AS DOUBLE) AS psi").limit(0))(init =>
@@ -587,8 +546,7 @@ object OpsFamilies {
                 init))
         }))
       case "vectors" =>
-        vectorStyleMaintain(fam, s"${store}_vec",
-          expireAll(tbls(s"${store}_vec_codes", s"${store}_vec_cells")),
+        vectorStyleMaintain(fam, s"${store}_vec", expire,
           vecMaxCellRows, vecPsiRefit)
       case "maxsim" =>
         // the token store IS an IncrementalVectors store — the same
@@ -596,8 +554,7 @@ object OpsFamilies {
         // (armed by the shared --VEC_* flags; a deployment registering
         // both vectors AND maxsim arms both stores' policies, each
         // acting on its own base)
-        vectorStyleMaintain(fam, s"${store}_tok",
-          expireAll(tbls(s"${store}_tok_codes", s"${store}_tok_cells")),
+        vectorStyleMaintain(fam, s"${store}_tok", expire,
           vecMaxCellRows, vecPsiRefit)
       case "sq8" => MaintainFamily(fam,
         // codes are disjoint per-id state: the fold is a pure re-bin
@@ -612,7 +569,7 @@ object OpsFamilies {
         // operator refits (refitGrid) or re-inits at curate time.
         maintain = (sp, w) =>
           StoreMaintenance.compact(sp, TableLoc(s"${store}_sq_codes"), w),
-        expire = expireAll(tbls(s"${store}_sq_codes")),
+        expire = expire,
         audit = Some((sp, _) => {
           // the scalar family's drift signal served from the store's
           // own rows: per-partition code count + SATURATION fraction
@@ -637,28 +594,29 @@ object OpsFamilies {
         // prefix quantizer is frozen model state (re-init = new store)
         maintain = (sp, w) =>
           StoreMaintenance.compact(sp, TableLoc(s"${store}_mat_cells"), w),
-        expire = expireAll(tbls(s"${store}_mat_cells")),
+        expire = expire,
         audit = Some((sp, _) => cellStoreAudit(sp, s"${store}_mat")))
       case "langmodel" =>
-        val root = langStore(requireDir(fam, storeDir))
+        val root = langRoot(storeDir)
+        val Seq(tri, prior) = locs
         MaintainFamily(fam,
           // the additive folds: trigram counts sum per (cand, tri),
           // priors per cand — the compacted model scores bit-equal
           maintain = (sp, w) => {
-            StoreMaintenance.compact(sp, PathLoc(s"$root/tri"), w,
+            StoreMaintenance.compact(sp, tri, w,
               merge = _.groupBy(col("cand"), col("tri"))
                 .agg(sum(col("c")).as("c")))
-            StoreMaintenance.compact(sp, PathLoc(s"$root/prior"), w,
+            StoreMaintenance.compact(sp, prior, w,
               merge = _.groupBy(col("cand")).agg(sum(col("ndl")).as("ndl")))
           },
           // on a counting model retention expiry IS exact unlearning of
           // the expired dates (additive state minus their partitions)
-          expire = expireAll(langStores(root)),
+          expire = expire,
           audit = Some((sp, _) => {
             // model shape: candidate languages, vocabulary, training
             // docs — the derived quantities scoring rebuilds from sums.
             // Vocabulary-bounded aggregates; zeros when uningested.
-            if (!langStores(root).head.exists(sp))
+            if (!tri.exists(sp))
               sp.sql("SELECT CAST(0 AS BIGINT) AS n_langs, " +
                 "CAST(0 AS BIGINT) AS vocab, " +
                 "CAST(0 AS BIGINT) AS n_train_docs")
@@ -672,28 +630,28 @@ object OpsFamilies {
             }
           }))
       case "spans" =>
-        val st = spansStore(requireDir(fam, storeDir))
+        val st = PathLoc(spansRoot(storeDir))
         MaintainFamily(fam,
           // the additive fold: per-hash counts sum across dates, so the
           // compacted store serves every report bit-equal (q109's law)
-          maintain = (sp, w) => StoreMaintenance.compact(sp, PathLoc(st), w,
+          maintain = (sp, w) => StoreMaintenance.compact(sp, st, w,
             merge = _.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))),
           // on a counting store expiry IS exact unlearning of the
           // expired dates (additive state minus a date's partition)
-          expire = expireAll(Seq(PathLoc(st))),
+          expire = expire,
           audit = Some((sp, _) => {
             // audit-never-wedge: an uningested store reads as zeros
-            if (!PathLoc(st).exists(sp))
+            if (!st.exists(sp))
               sp.sql("SELECT CAST(0 AS BIGINT) AS n_hashes, " +
                 "CAST(0 AS BIGINT) AS n_dup")
-            else StoreMaintenance.consistentScan(sp, PathLoc(st))
+            else StoreMaintenance.consistentScan(sp, st)
               .groupBy(col("h")).agg(sum(col("cnt")).as("total"))
               .agg(count(lit(1)).as("n_hashes"),
                 sum(when(col("total") >= 2, 1L).otherwise(0L))
                   .cast("bigint").as("n_dup"))
           }))
       case "components" =>
-        val (sigs, labels, repmap, edges) = compStores(requireDir(fam, storeDir))
+        val (sigs, labels, repmap, _) = compRoots(storeDir)
         MaintainFamily(fam,
           // label rows are write-once disjoint state: the fold is a pure
           // re-bin (q149's law); superseded repmap versions prune freely
@@ -715,8 +673,6 @@ object OpsFamilies {
                 countDistinct(col("component")).as("n_components"))
               .crossJoin(broadcast(sigN))
           }))
-      case other => throw new IllegalArgumentException(
-        s"unknown family '$other' — registered: ${Names.mkString(", ")}")
     }
   }
 
@@ -755,9 +711,7 @@ object OpsFamilies {
     maintain = (sp, w) => {
       val acts = IncrementalVectors.maintainPolicy(sp, base, w,
         maxCellRows = vecMaxCellRows, psiRefit = vecPsiRefit)
-      acts.foreach(a => println(
-        s"""{"event":"vec_policy","store":"$base",""" +
-          s""""window":"$w","action":"$a"}"""))
+      acts.foreach(a => println(policyEvent("vec_policy", base, w, a)))
     },
     expire = expire,
     audit = Some((sp, _) => cellStoreAudit(sp, base)))

@@ -19,16 +19,23 @@ final case class Marker(
   /** Serialize to the reference's JSON shape. Hand-rolled (zero extra deps);
     * output keys/ordering match the reference doc. */
   def toJson: String = {
-    def q(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val q = Marker.quote _
     s"""{"kind": ${q(kind)}, "date": ${q(date)}, "input_key": ${q(inputKey)}, """ +
       s""""outputs": [${outputs.map(q).mkString(", ")}], """ +
       s""""output_count": ${outputs.size}, "generated_at": ${q(generatedAt)}}"""
   }
+}
+
+object Marker {
+
+  /** A JSON string literal: quote, backslash and control characters
+    * escaped, everything else (non-ASCII included) kept as is. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }
 
 /** One cycle's listing (reference O2–O5, parquet-splitter.py:125-138):

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Corpus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of corpus chunking ([[graft.operators.Corpus.chunk]],
   * q97): a document's chunks are a pure function of that document alone,
@@ -27,18 +27,13 @@ object StreamingChunker {
   def run(docs: DataFrame, chunksOut: String, checkpoint: String,
       window: Int = 64, stride: Int = 48,
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        Corpus.chunk(batch, window, stride)
-          .withColumn("batch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(chunksOut)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      Corpus.chunk(batch, window, stride)
+        .withColumn("batch", lit(id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch")
+        .parquet(chunksOut)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.IncrementalComponents
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the incremental clustering store
   * ([[graft.operators.IncrementalComponents]]) — the same foreachBatch
@@ -45,33 +45,28 @@ object StreamingComponents {
   def run(docs: DataFrame, base: String, checkpoint: String,
       threshold: Double = 0.5, idCol: String = "doc_id",
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        val s = batch.sparkSession
-        val slice = batch.select(col(idCol), col("text"))
-        // skip empty batches (AvailableNow on an empty source fires one):
-        // an empty slice writes no data files, and the archive must be
-        // read with an explicit schema anyway — inference over a
-        // zero-file directory throws, the exact failure readOrEmpty
-        // guards against for the label/repmap stores
-        if (!slice.isEmpty) {
-          slice.withColumn("ds", lit(batchDs(id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ds")
-            .parquet(s"$base/corpus")
-          val corpusSchema = org.apache.spark.sql.types.StructType.fromDDL(
-            s"$idCol BIGINT, text STRING, ds STRING")
-          val all = s.read.schema(corpusSchema).parquet(s"$base/corpus")
-            .select(col(idCol), col("text"))
-          IncrementalComponents.processDate(s, slice, all,
-            s"$base/sigs", s"$base/labels", s"$base/repmap", batchDs(id),
-            threshold, idCol)
-        }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      val s = batch.sparkSession
+      val slice = batch.select(col(idCol), col("text"))
+      // skip empty batches (AvailableNow on an empty source fires one):
+      // an empty slice writes no data files, and the archive must be
+      // read with an explicit schema anyway — inference over a
+      // zero-file directory throws, the exact failure readOrEmpty
+      // guards against for the label/repmap stores
+      if (!slice.isEmpty) {
+        slice.withColumn("ds", lit(batchDs(id)))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ds")
+          .parquet(s"$base/corpus")
+        val corpusSchema = org.apache.spark.sql.types.StructType.fromDDL(
+          s"$idCol BIGINT, text STRING, ds STRING")
+        val all = s.read.schema(corpusSchema).parquet(s"$base/corpus")
+          .select(col(idCol), col("text"))
+        IncrementalComponents.processDate(s, slice, all,
+          s"$base/sigs", s"$base/labels", s"$base/repmap", batchDs(id),
+          threshold, idCol)
       }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.IncrementalDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the incremental signature-store dedup
   * ([[graft.operators.IncrementalDedup]]): each micro-batch plays the role
@@ -34,19 +34,14 @@ object StreamingDedup {
   def run(docs: DataFrame, store: String, pairsOut: String,
       checkpoint: String, threshold: Double = 0.5, idCol: String = "doc_id",
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        IncrementalDedup.processDate(batch.sparkSession, batch, store,
-            s"b$id", threshold, idCol)
-          .withColumn("batch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(pairsOut)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalDedup.processDate(batch.sparkSession, batch, store,
+          s"b$id", threshold, idCol)
+        .withColumn("batch", lit(id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch")
+        .parquet(pairsOut)
+    }
 }

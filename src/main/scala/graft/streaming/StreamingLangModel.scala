@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.IncrementalLangModel
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the incremental NB language-ID model
   * ([[graft.operators.IncrementalLangModel]], q145) — labeled training
@@ -27,13 +27,8 @@ object StreamingLangModel {
     * documents (must carry `doc_id`, `lang` and `text`). */
   def run(docs: DataFrame, store: String, checkpoint: String,
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        IncrementalLangModel.appendCounts(batch, store, s"b$id")
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalLangModel.appendCounts(batch, store, s"b$id")
+    }
 }

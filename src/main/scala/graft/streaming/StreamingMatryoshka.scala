@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.Matryoshka
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the persisted matryoshka index
   * ([[graft.operators.Matryoshka]], q157) — the [[StreamingVectors]]
@@ -26,15 +26,10 @@ object StreamingMatryoshka {
       pDim: Int = 16, idCol: String = "vec_id",
       vecCol: String = "embedding",
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        Matryoshka.dropDate(batch.sparkSession, table, s"b$id")
-        Matryoshka.appendDate(batch, table, s"b$id",
-          pDim = pDim, idCol = idCol, vecCol = vecCol)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(emb, checkpoint, availableNow, suppress) { (batch, id) =>
+      Matryoshka.dropDate(batch.sparkSession, table, s"b$id")
+      Matryoshka.appendDate(batch, table, s"b$id",
+        pDim = pDim, idCol = idCol, vecCol = vecCol)
+    }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.operators.IncrementalPostings
+import graft.operators.{IncrementalPostings, IncrementalStore, TableLoc}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of incremental index maintenance
   * ([[graft.operators.IncrementalPostings]], q120): each micro-batch
@@ -23,15 +23,10 @@ object StreamingPostings {
     * carry `doc_id` and `text`). */
   def run(docs: DataFrame, store: String, checkpoint: String,
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        IncrementalPostings.appendCounts(batch, store, s"b$id")
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalPostings.appendCounts(batch, store, s"b$id")
+    }
 
   /** BUCKETED-store dual feeding the q158 BM25 serve: each micro-batch
     * appends its tf rows to the term-bucketed table AND its per-doc
@@ -44,19 +39,11 @@ object StreamingPostings {
     * `ds=b<id>` partitions from BOTH tables first. */
   def runBucketed(docs: DataFrame, table: String, checkpoint: String,
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        val s = batch.sparkSession
-        Seq(table, s"${table}_dl").foreach { t =>
-          if (s.catalog.tableExists(t))
-            s.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (ds='b$id')")
-        }
-        IncrementalPostings.appendCountsBucketed(batch, table, s"b$id")
-        IncrementalPostings.appendNorms(batch, table, s"b$id")
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalStore.dropDate(batch.sparkSession,
+        Seq(TableLoc(table), TableLoc(s"${table}_dl")), s"b$id")
+      IncrementalPostings.appendCountsBucketed(batch, table, s"b$id")
+      IncrementalPostings.appendNorms(batch, table, s"b$id")
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.IncrementalSemantic
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the incremental SEMANTIC near-dup store
   * ([[graft.operators.IncrementalSemantic]], q178) — the foreachBatch
@@ -35,21 +35,16 @@ object StreamingSemantic {
       threshold: Double = 0.9, idCol: String = "vec_id",
       vecCol: String = "embedding", availableNow: Boolean = false,
       onNewPairs: DataFrame => Unit = _ => (),
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        val spark = batch.sparkSession
-        IncrementalSemantic.dropDate(spark, table, s"b$id")
-        IncrementalSemantic.appendDate(batch, table, s"b$id",
-          idCol = idCol, vecCol = vecCol)
-        // eager: the report must be pinned to THIS batch's store state
-        val pairs = IncrementalSemantic
-          .newPairs(spark, table, s"b$id", threshold).localCheckpoint()
-        try onNewPairs(pairs)
-        finally graft.operators.Components.freeLocalCheckpoint(pairs)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(emb, checkpoint, availableNow, suppress) { (batch, id) =>
+      val spark = batch.sparkSession
+      IncrementalSemantic.dropDate(spark, table, s"b$id")
+      IncrementalSemantic.appendDate(batch, table, s"b$id",
+        idCol = idCol, vecCol = vecCol)
+      // eager: the report must be pinned to THIS batch's store state
+      val pairs = IncrementalSemantic
+        .newPairs(spark, table, s"b$id", threshold).localCheckpoint()
+      try onNewPairs(pairs)
+      finally graft.operators.Components.freeLocalCheckpoint(pairs)
+    }
 }

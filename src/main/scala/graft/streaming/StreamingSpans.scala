@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.IncrementalSpans
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of incremental repeated-span detection
   * ([[graft.operators.IncrementalSpans]], q109) — completing the
@@ -24,13 +24,8 @@ object StreamingSpans {
     * carry `doc_id` and `text`). */
   def run(docs: DataFrame, store: String, checkpoint: String,
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        IncrementalSpans.appendCounts(batch, store, s"b$id")
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(docs, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalSpans.appendCounts(batch, store, s"b$id")
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the DELETION-PROPAGATION pass (q160–q166) — the
   * shape a production takedown pipeline actually has: opt-out /
@@ -88,43 +88,40 @@ object StreamingTombstones {
       processedLog: Option[String] = None): StreamingQuery = {
     val nonce = f"${fnv64(
       new org.apache.hadoop.fs.Path(checkpoint).toUri.toString)}%016x"
-    val w = requests.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // the guard and the N rewrites re-read the batch: pin it once
-        // (takedown-list-sized, bounded by contract)...
-        val raw = batch.localCheckpoint()
-        val key = raw.columns.head
-        val ids = processedLog.fold(raw) { log =>
-          // exactly-once EFFECT for the subtract families: drop every id
-          // a completed earlier batch already logged (see the caveat in
-          // the object scaladoc for the crash-window argument)
-          val root = new org.apache.hadoop.fs.Path(log)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(root)) raw
-          else raw.join(
-            spark.read.parquet(log).select(org.apache.spark.sql.functions
-              .col(key)),
-            Seq(key), "left_anti").localCheckpoint()
-        }
-        try if (!ids.isEmpty) {
-          deletes.foreach(_(ids, s"b${id}_$nonce"))
-          // the ledger append lands ONLY after every delete returned
-          // (log-present must always mean deletes-complete) and
-          // OVERWRITES this batch's own partition on a replay — never
-          // double-logs
-          if (processedLog.isDefined)
-            graft.operators.IncrementalStore.appendPath(
-              ids.select(key), processedLog.get, s"b${id}_$nonce")
-        } finally {
-          // FREE the pins once the batch is done — a long-running stream
-          // must not accumulate one pinned snapshot per micro-batch
-          // until the ContextCleaner happens to GC it
-          graft.operators.Components.freeLocalCheckpoint(ids)
-          graft.operators.Components.freeLocalCheckpoint(raw)
-        }
+    MicroBatch.sink(requests, checkpoint, availableNow) { (batch, id) =>
+      val spark = batch.sparkSession
+      // the guard and the N rewrites re-read the batch: pin it once
+      // (takedown-list-sized, bounded by contract)...
+      val raw = batch.localCheckpoint()
+      val key = raw.columns.head
+      val ids = processedLog.fold(raw) { log =>
+        // exactly-once EFFECT for the subtract families: drop every id
+        // a completed earlier batch already logged (see the caveat in
+        // the object scaladoc for the crash-window argument)
+        val root = new org.apache.hadoop.fs.Path(log)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(root)) raw
+        else raw.join(
+          spark.read.parquet(log).select(org.apache.spark.sql.functions
+            .col(key)),
+          Seq(key), "left_anti").localCheckpoint()
       }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      try if (!ids.isEmpty) {
+        deletes.foreach(_(ids, s"b${id}_$nonce"))
+        // the ledger append lands ONLY after every delete returned
+        // (log-present must always mean deletes-complete) and
+        // OVERWRITES this batch's own partition on a replay — never
+        // double-logs
+        if (processedLog.isDefined)
+          graft.operators.IncrementalStore.appendPath(
+            ids.select(key), processedLog.get, s"b${id}_$nonce")
+      } finally {
+        // FREE the pins once the batch is done — a long-running stream
+        // must not accumulate one pinned snapshot per micro-batch
+        // until the ContextCleaner happens to GC it
+        graft.operators.Components.freeLocalCheckpoint(ids)
+        graft.operators.Components.freeLocalCheckpoint(raw)
+      }
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.IncrementalVectors
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dual of the persisted incremental vector index
   * ([[graft.operators.IncrementalVectors]], q133/q136) — the last index
@@ -39,15 +39,10 @@ object StreamingVectors {
   def run(emb: DataFrame, table: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       availableNow: Boolean = false,
-      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery = {
-    val w = emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (raw: DataFrame, id: Long) =>
-        val batch = suppress.fold(raw)(f => f(raw))
-        IncrementalVectors.dropDate(batch.sparkSession, table, s"b$id")
-        IncrementalVectors.appendDate(batch, table, s"b$id",
-          idCol = idCol, vecCol = vecCol)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+      suppress: Option[DataFrame => DataFrame] = None): StreamingQuery =
+    MicroBatch.sink(emb, checkpoint, availableNow, suppress) { (batch, id) =>
+      IncrementalVectors.dropDate(batch.sparkSession, table, s"b$id")
+      IncrementalVectors.appendDate(batch, table, s"b$id",
+        idCol = idCol, vecCol = vecCol)
+    }
 }

@@ -508,6 +508,37 @@ class OpsMainSpec extends SparkSpec {
     } finally dropS()
   }
 
+  test("the retention fence from flags: a marker-deleted date at or before the fold horizon refuses, for a table family and a path family") {
+    val tmp = Files.createTempDirectory("opsmain-fence").toString
+    val base = "opsm_f"
+    drop(base)
+    try {
+      val docs = Tables.load(spark, sf, "documents")
+        .select(col("doc_id").as("id"), col("text"))
+      (0 until 2).foreach(d => docs.filter(pmod(col("id"), lit(3L)) === d)
+        .write.mode("overwrite").parquet(s"$tmp/in/d$d.parquet"))
+      Seq("postings", "spans").foreach { fam =>
+        val common = Seq("--STORE", base, "--FAMILIES", fam,
+          "--STORE_DIR", s"$tmp/store")
+        def curate(): String = OpsMain.run((Seq("--JOB", "curate") ++
+          common ++ Seq("--IN", s"$tmp/in", "--MARKERS", s"$tmp/$fam/cm",
+            "--REPORTS", s"$tmp/$fam/r")).toArray, spark)
+        val c1 = curate()
+        assert(c1.contains(""""processed":["d0","d1"]"""), c1)
+        val m1 = OpsMain.run((Seq("--JOB", "maintain") ++ common ++
+          Seq("--WINDOW", "d1", "--M_MARKERS", s"$tmp/$fam/mm",
+            "--AUDITS", s"$tmp/$fam/a")).toArray, spark)
+        assert(m1.contains(""""skipped":false"""), m1)
+        // d0 was folded into c_d1: deleting its marker must refuse the
+        // reprocess (the drop would no-op and the append double-count)
+        new java.io.File(s"$tmp/$fam/cm/d0.json").delete()
+        val ex = intercept[IllegalArgumentException](curate())
+        assert(ex.getMessage.contains("retention-fold horizon d1") &&
+          ex.getMessage.contains(s"family $fam"), ex.getMessage)
+      }
+    } finally drop(base)
+  }
+
   test("loud refusals: semantic without SEM_HORIZON; half a suppression feed") {
     val tmp = Files.createTempDirectory("opsmain-cfg").toString
     val base = "opsm_b"

@@ -30,6 +30,18 @@ class SplitSpec extends SparkSpec {
     assert(js.contains("\"generated_at\": \"2025-11-22T03:25:16Z\""))
   }
 
+  test("Marker escapes quote, backslash and control characters and keeps non-ASCII as UTF-8") {
+    val m = Marker("split\"kind", "2025\\11\\07", "in/\u0007bell.parquet",
+      Seq("out/k\u00e9y/\u65e5\u4ed8.parquet", "out/tab\tkey/x.parquet"),
+      "2025-11-22T03:25:16Z")
+    val want = "{\"kind\": \"split\\\"kind\", \"date\": \"2025\\\\11\\\\07\", " +
+      "\"input_key\": \"in/\\u0007bell.parquet\", \"outputs\": " +
+      "[\"out/k\u00e9y/\u65e5\u4ed8.parquet\", \"out/tab\\u0009key/x.parquet\"], " +
+      "\"output_count\": 2, \"generated_at\": \"2025-11-22T03:25:16Z\"}"
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    assert(m.toJson.getBytes(utf8).toSeq == want.getBytes(utf8).toSeq, m.toJson)
+  }
+
   test("golden corpus: full run splits 3 dates x 30 keys and matches golden outputs") {
     val tmp = Files.createTempDirectory("split-golden").toString
     val summary = freshJob(tmp).run()
